@@ -33,7 +33,9 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 CLASSES = os.path.join(BUILD, "target", "scala-2.13", "classes")
 RUN_LIMIT_S = 175
-JVM_HEAP = "2g"
+# a fixed heap and young generation: G1's default sizing grows the heap
+# when GC time runs high, which made peak RSS follow the host's load
+JVM_HEAP = ["-Xms2g", "-Xmx2g", "-Xmn512m"]
 BUILD_LIMIT_S = 850
 
 ADD_OPENS = [
@@ -128,7 +130,7 @@ def java_cmd(args, result, work):
     os.makedirs(tmp, exist_ok=True)
     opens = [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
     return ["java", *opens, "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-            "-Duser.timezone=UTC", f"-Djava.io.tmpdir={tmp}", f"-Xmx{JVM_HEAP}",
+            "-Duser.timezone=UTC", f"-Djava.io.tmpdir={tmp}", *JVM_HEAP,
             "-cp", f"{CLASSES}:{spark_jars()}/*", "perfbench.Main",
             args.workload, str(args.seed), str(args.seconds), str(args.trace), result, work]
 

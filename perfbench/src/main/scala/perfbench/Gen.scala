@@ -277,7 +277,7 @@ object Gen {
       topK: Int = 5,
       publishEvery: Int = 2,
       vectors: Int = 500,
-      reads: Int = 20,
+      readsPerSecond: Double = 1.0,
       readers: Int = 2)
 
   /** One changelog row: side "a" = games (game_id, rating), side "b" =
@@ -382,12 +382,12 @@ object Gen {
     }
   }
 
-  /** `n` doc reads of uniform random ids, due at a fixed rate over
-    * `seconds`: evenly spaced arrivals sample every phase of the ticks
-    * running beside them the same way in every run.
+  /** `n` doc reads of uniform random ids, due at a fixed rate of
+    * `perSecond`: evenly spaced arrivals sample every phase of the
+    * ticks running beside them the same way in every run.
     */
-  def readSchedule(seed: Long, seconds: Double, ids: Int, n: Int): IndexedSeq[Req] = {
+  def readSchedule(seed: Long, perSecond: Double, ids: Int, n: Int): IndexedSeq[Req] = {
     val r = rng(seed, "maintain-reads")
-    (0 until n).map(i => Req(((i + 0.5) * seconds * 1e9 / n).toLong, s"/games/${r.nextInt(ids)}"))
+    (0 until n).map(i => Req(((i + 0.5) * 1e9 / perSecond).toLong, s"/games/${r.nextInt(ids)}"))
   }
 }

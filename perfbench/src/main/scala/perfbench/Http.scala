@@ -2,6 +2,7 @@ package perfbench
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.Row
@@ -19,11 +20,13 @@ object Http {
   }
 
   /** Send `schedule` open loop: each request is sent at its due time
-    * (or as soon as one of `clients` threads is free), and timed from
+    * (or as soon as one of `clients` threads is free) and timed from
     * its due time, so a stall also delays the requests behind it.
+    * Sending stops once `stop` is released; the requests completed by
+    * then are returned in schedule order.
     */
-  def openLoop(port: Int, schedule: IndexedSeq[Gen.Req], clients: Int,
-      spans: Spans): IndexedSeq[Done] = {
+  def openLoop(port: Int, schedule: IndexedSeq[Gen.Req], clients: Int, spans: Spans,
+      stop: CountDownLatch): IndexedSeq[Done] = {
     val out = new Array[Done](schedule.size)
     val next = new AtomicInteger(0)
     val t0 = System.nanoTime()
@@ -34,19 +37,20 @@ object Http {
         while (i < schedule.size) {
           val req = schedule(i)
           val wait = t0 + req.dueNs - System.nanoTime()
-          if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
-          val send = System.nanoTime() - t0
-          val (code, body) = spans.span("serve.http_doc", requestId = i) {
-            get(client, port, req.path)
+          val stopped = if (wait > 0) stop.await(wait, TimeUnit.NANOSECONDS) else stop.getCount == 0
+          if (stopped) i = schedule.size
+          else {
+            val send = System.nanoTime() - t0
+            val (code, body) = spans.span("serve.http_doc", requestId = i) { get(client, port, req.path) }
+            out(i) = Done(req, send, System.nanoTime() - t0, code, body)
+            i = next.getAndIncrement()
           }
-          out(i) = Done(req, send, System.nanoTime() - t0, code, body)
-          i = next.getAndIncrement()
         }
       }, s"perfbench-client-$c")
       th.start(); th
     }
     threads.foreach(_.join())
-    out.toIndexedSeq
+    out.toIndexedSeq.filter(_ != null)
   }
 
   def get(client: HttpClient, port: Int, path: String): (Int, String) = {

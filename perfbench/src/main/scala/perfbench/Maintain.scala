@@ -1,5 +1,7 @@
 package perfbench
 
+import java.util.concurrent.CountDownLatch
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -110,25 +112,45 @@ object Maintain extends Workload {
     Tick((System.nanoTime() - k0) / 1e9, cost, (k2 - k1) / 1e9, pub, vac, changes.size)
   }
 
+  /** Reads the schedule holds: more than a run can send at the rate. */
+  val MaxReads = 1000
+
+  /** The untimed warm-up tick. Tick ids start here, so it is a
+    * checkpoint tick (checkpoints follow odd ticks) and runs every code
+    * path of a timed checkpoint cycle once: the first ticks of a
+    * process run cold code and took twice as long as later ones.
+    */
+  val WarmupTick = 1L
+
   def run(ctx: Ctx, st: State): Phase = {
     val spark = ctx.spark
-    val reads = Gen.readSchedule(ctx.seed, ctx.seconds, P.vectors, P.reads)
+    val reads = Gen.readSchedule(ctx.seed, P.readsPerSecond, P.vectors, MaxReads)
+    val stop = new CountDownLatch(1)
     var done: IndexedSeq[Http.Done] = IndexedSeq.empty
     val reader = new Thread(() => {
-      done = Http.openLoop(st.server.boundPort, reads, P.readers, ctx.spans)
+      done = Http.openLoop(st.server.boundPort, reads, P.readers, ctx.spans, stop)
     }, "perfbench-reader")
-    val w0 = ctx.module("streaming")
+    // the reader runs beside every tick, so each timed tick shares the
+    // cores with reads in the same way
     val s0 = ctx.module("serve")
-    val ticks = Seq.newBuilder[Tick]
-    val t0 = System.nanoTime()
     reader.start()
-    var t = 0L
-    // whole checkpoint cycles: an even number of ticks
-    while ((System.nanoTime() - t0) / 1e9 < ctx.seconds || t % 2 == 1) {
-      ticks += tick(ctx, st, t)
-      t += 1
+    val ticks = Seq.newBuilder[Tick]
+    var warmup: Tick = null
+    val w0 = try {
+      warmup = tick(ctx, st, WarmupTick)
+      val w = ctx.module("streaming")
+      val t0 = System.nanoTime()
+      var t = WarmupTick + 1
+      // whole checkpoint cycles: an even tick, then a checkpoint tick
+      while ((System.nanoTime() - t0) / 1e9 < ctx.seconds || t % 2 == 1) {
+        ticks += tick(ctx, st, t)
+        t += 1
+      }
+      w
+    } finally {
+      stop.countDown()
+      reader.join()
     }
-    reader.join()
     val streamW = ctx.module("streaming") - w0
     val serveW = ctx.module("serve") - s0
     val ts = ticks.result()
@@ -154,11 +176,11 @@ object Maintain extends Workload {
         "serve.generator_late_ms_p50" -> Stats.percentile(done.map(_.lateMs), 0.5).getOrElse(-1.0),
         "serve.build_s" -> st.buildS,
         "serve.jobs_per_request" -> serveW.jobs.toDouble / done.size) ++
-        serial(ctx, st, reads) ++ Functions.layers(ctx)
+        serial(ctx, st, done.map(_.req)) ++ Functions.layers(ctx)
     }
     Phase(e2e, Map("throughput_per_s" -> ts.size),
-      layers, attempted = done.size + ts.size, failed = done.size - ok.size, checks,
-      detail = Seq("ticks" -> ts.size, "tick_s" -> ts.map(_.wallS),
+      layers, attempted = done.size + 1 + ts.size, failed = done.size - ok.size, checks,
+      detail = Seq("warmup_tick_s" -> warmup.wallS, "ticks" -> ts.size, "tick_s" -> ts.map(_.wallS),
         "tick_phases_s" -> ts.map(k => Json.obj("view" -> k.cost.viewSec, "bases" -> k.cost.basesSec,
           "compact" -> k.cost.compactSec, "topk" -> k.topkS, "publish" -> k.publishS, "vacuum" -> k.vacuumS)),
         "tick_mean_s" -> Stats.mean(ts.map(_.wallS)),

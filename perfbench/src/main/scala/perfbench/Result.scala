@@ -6,8 +6,27 @@ import perfbench.Json.obj
 
 /** Host-health probes, recorded in every result. */
 object Host {
-  /** A host snapshot; `cpuS` is the cpu probe, run once per process. */
-  final case class Probe(load1: Double, cpuS: Double)
+  /** A host snapshot; `cpuS` is the cpu probe, run once per process;
+    * `cpuTicks` are the machine's (steal, total) cpu ticks so far.
+    */
+  final case class Probe(load1: Double, cpuS: Double, cpuTicks: (Long, Long))
+
+  /** (steal, total) of the aggregate `cpu` line of /proc/stat: time a
+    * virtual machine's cpus were ready to run but held by the host.
+    */
+  def cpuTicks(): (Long, Long) = {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    try {
+      val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+      (if (f.length > 7) f(7) else 0L, f.sum)
+    } finally src.close()
+  }
+
+  /** Share of cpu time between two probes that the host stole. */
+  def stealShare(start: Probe, end: Probe): Double = {
+    val total = end.cpuTicks._2 - start.cpuTicks._2
+    if (total > 0) (end.cpuTicks._1 - start.cpuTicks._1).toDouble / total else 0.0
+  }
 
   /** The same fixed single-thread xorshift loop as the engine's
     * catalog bench, so its time compares with
@@ -28,7 +47,7 @@ object Host {
   }
 
   def probe(withCpu: Boolean): Probe =
-    Probe(graft.BenchGuard.loadAvg1(), if (withCpu) cpuProbe() else -1.0)
+    Probe(graft.BenchGuard.loadAvg1(), if (withCpu) cpuProbe() else -1.0, cpuTicks())
 
   /** Peak resident set size of this JVM (VmHWM), in MB. */
   def peakRssMb(): Double = {
@@ -48,7 +67,8 @@ object Host {
     val ref = graft.BenchGuard.RefCpuProbeSec
     val cpus = Main.cpus
     obj("load1_start" -> start.load1, "load1_end" -> end.load1, "cpu_probe_s" -> start.cpuS,
-      "ref_cpu_probe_s" -> ref, "nproc" -> cpus, "contended" -> contended(start, end))
+      "ref_cpu_probe_s" -> ref, "nproc" -> cpus, "steal_share" -> stealShare(start, end),
+      "contended" -> contended(start, end))
   }
 }
 

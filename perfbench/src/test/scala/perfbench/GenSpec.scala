@@ -50,8 +50,9 @@ class GenSpec extends AnyFunSuite {
     }
     assert(ticks(3) == ticks(3))
     assert(ticks(3) != ticks(4))
-    assert(Gen.readSchedule(3, 10, 100, 20) == Gen.readSchedule(3, 10, 100, 20))
-    assert(Gen.readSchedule(3, 10, 100, 20).size == 20)
+    assert(Gen.readSchedule(3, 2.0, 100, 20) == Gen.readSchedule(3, 2.0, 100, 20))
+    assert(Gen.readSchedule(3, 2.0, 100, 20) != Gen.readSchedule(4, 2.0, 100, 20))
+    assert(Gen.readSchedule(3, 2.0, 100, 20).map(_.dueNs).last == 9750000000L)
   }
 
   test("changelog updates and deletes target live rows; the slice tracks the projection") {
