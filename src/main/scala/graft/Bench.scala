@@ -228,8 +228,7 @@ object Bench {
     val probeCpuEnd =
       try cpuProbeOnce() catch { case _: Throwable => -1.0 }
     val loadEnd = BenchGuard.loadAvg1()
-    val probeRef = sys.env.get("SPARK_GRAFT_PROBE_REF").map(_.toDouble)
-      .getOrElse(BenchGuard.RefCpuProbeSec)
+    val probeRef = BenchGuard.probeRef(sys.env.get("SPARK_GRAFT_PROBE_REF"))
     val contended = BenchGuard.contended(probeCpu, probeRef) ||
       BenchGuard.contended(probeCpuEnd, probeRef)
     val hostJson = s""""host_probe":{"cpu_s":${fmt(probeCpu)},"cpu_s_end":${fmt(probeCpuEnd)},"ref_cpu_s":${fmt(probeRef)},"load1_start":${fmt(loadStart)},"load1_end":${fmt(loadEnd)},"contended":$contended}"""

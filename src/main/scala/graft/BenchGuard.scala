@@ -28,6 +28,20 @@ object BenchGuard {
     */
   val RefCpuProbeSec: Double = 0.78
 
+  /** The probe reference to compare against: `raw` (the
+    * SPARK_GRAFT_PROBE_REF value) when it is a positive finite number
+    * of seconds, else [[RefCpuProbeSec]] with a warning on stderr. It
+    * is read after every query has run, so a bad value must not throw.
+    */
+  def probeRef(raw: Option[String]): Double =
+    raw.fold(RefCpuProbeSec) { s =>
+      s.trim.toDoubleOption.filter(v => v > 0 && !v.isInfinite).getOrElse {
+        System.err.println(s"[bench] ignoring SPARK_GRAFT_PROBE_REF='$s' " +
+          s"(not a positive number of seconds); using $RefCpuProbeSec")
+        RefCpuProbeSec
+      }
+    }
+
   /** Relative deviation beyond which a probe observation marks the
     * run contended. One-sided: a probe FASTER than the reference is
     * a healthier host, not a measurement problem.

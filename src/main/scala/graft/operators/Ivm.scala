@@ -449,12 +449,11 @@ object Ivm {
     // protocol instead of a runtime switch.
     // The contract is now a RUNTIME GUARD, not just prose (r15
     // verdict task 5: "a comment is not a bound at 100 TB"): each
-    // delta's optimizer size estimate is checked against
-    // MaxDeltaBroadcastBytes before any probe plan is built. The
-    // estimate costs no job — for the staged-parquet deltas the
-    // protocol feeds in, it is the actual file footprint — and an
-    // O(state) catch-up delta is orders of magnitude over the line,
-    // exactly the regime estimates cannot miss.
+    // delta's rows are counted exactly and checked against
+    // maxDeltaRows before any probe plan is built. The count is one
+    // job over a delta the caller has materialized (a scan of a small
+    // cached/checkpointed relation), and an O(state) catch-up delta
+    // is orders of magnitude over the line.
     guardDeltaBroadcast(da, "dA")
     guardDeltaBroadcast(db, "dB")
     // Callers whose base frames are EXPENSIVE to materialize (fold

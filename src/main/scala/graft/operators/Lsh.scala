@@ -308,11 +308,15 @@ object Lsh {
     * correctness scales bucket occupancy never exceeds the cap, so
     * results there are bit-identical to the uncapped form.
     *
-    * Plan shape: the rank window's partition keys ARE the collision
-    * join's keys, so its Exchange+Sort (by bucket, then rank key — a
-    * (band_idx, band_key) sort prefix) feeds the sort-merge join with
-    * no further exchange or sort on the stored side; the window adds
-    * one row_number projection to a shuffle the join paid anyway.
+    * Plan shape (d9 at sf0.01 and sf0.1): the fresh side is small and
+    * broadcasts, so the collision join is a broadcast hash join that
+    * streams the (capped stored ∪ fresh) union through the fresh
+    * bands' hash table and shuffles nothing itself. The cap's only
+    * shuffle is the rank window's Exchange on (band_idx, band_key),
+    * and a partial WindowGroupLimit before it already drops all but
+    * `cap` rows per bucket in each map partition. A fresh side too
+    * large to broadcast turns the join into a shuffle join with its
+    * own exchanges.
     */
   def cappedStored(stored: DataFrame, cap: Int = BucketCap): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -134,8 +134,8 @@ final class FetchPipeline(
       .map { case (id, json) =>
         BggParser.processGame(id, json, "boardgame", now)
       }
-    val ok = games.filter(_.isDefined).map(_.get)
-    val okCount = loadTables(ok.as[ProcessedGame])
+    val ok = games.filter(_.isDefined).map(_.get).as[ProcessedGame]
+    val okCount = loadTables(ok)
     val statuses = games.map {
       case Some(g) => (g.game_id, "processed")
       case None => (-1L, "parse_error")
@@ -149,6 +149,9 @@ final class FetchPipeline(
       .select(col("game_id"), lit(now).as("process_timestamp"),
         lit("parse_error").as("status"))
     TableStore.append(statuses.unionByName(failed), p("processed_responses"))
+    // Flatten.toTables cached the parsed games; with the ledger rows
+    // landed they are done, else every batch stays in storage for good
+    ok.unpersist()
     okCount
   }
 

@@ -5,22 +5,24 @@ import org.apache.spark.sql.Row
 
 /** HTTP serving shell over [[Readers]] — the reference's FastAPI front
   * (services/warehouse_api/routers/games.py:22-78) re-expressed on the
-  * JDK's built-in `com.sun.net.httpserver` (zero dependencies, the
-  * whole point of a thin shell: every request is one or two cached
-  * point lookups; the HTTP layer adds routing + JSON and nothing
-  * else). Routes:
+  * JDK's built-in `com.sun.net.httpserver` (zero dependencies; the
+  * HTTP layer adds routing + JSON and nothing else). Routes:
   *
   *   - `GET /health`                       → liveness
   *   - `GET /games/{id}`                   → profile + precomputed
-  *     neighbors (the reference's composed document, games.py:253-289)
+  *     neighbors (the reference's composed document, games.py:253-289):
+  *     two lookups in the readers' driver-side index, no Spark job
   *   - `GET /games/{id}/similar?metric=&k=` → live tuned similarity
   *     with the metric allow-list (games.py:188-225); disallowed
-  *     metric → 400, like the reference's validation error
+  *     metric → 400, like the reference's validation error; its 404
+  *     check is an index lookup, its ranking a Spark job
+  *   - `GET /search?q=&mode=and|phrase`    → postings search (Spark)
   *
-  * Unknown ids are 404 with a JSON error body. Responses are
-  * hand-rolled JSON over the collected Row values — bounded payloads
-  * (one profile row + k neighbor entries), never a frame dump. The
-  * executor pool bounds concurrent Spark actions the same way the
+  * The index is built once per [[Readers]] (per pinned version), on
+  * the first doc or `/similar` request. Unknown ids are 404 with a
+  * JSON error body. Responses are hand-rolled JSON over the Row values
+  * — bounded payloads, never a frame dump. The executor pool bounds
+  * concurrent requests (and so Spark actions) the same way the
   * reference's worker pool does; at scale the server is a stateless
   * tier in front of the serving tables, horizontally replicated.
   */

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
 /** Serving-read layer — the reference's `GamesReader` semantics
-  * (src/warehouse/readers/games.py, SURVEY §3.3) re-expressed over
-  * cached DataFrames:
+  * (src/warehouse/readers/games.py, SURVEY §3.3):
   *
   *   - point lookup on the serving table (games.py:241-250)
   *   - precomputed top-k neighbors (games.py:177-185)
@@ -15,9 +14,10 @@ import graft.functions.GraftFunctions
   *
   * Two-tier design as in the reference: the default path hits the
   * precomputed neighbors table; only "tuned" requests pay for a live
-  * scan. Both lookups are partition-prunable point reads at scale
-  * (serving tables laid out bucketed/sorted by the key — the
-  * `RANGE_BUCKET` analogue, see game_profile.sqlx:6-17).
+  * scan. Point reads are lookups in two immutable `vec_id` maps,
+  * collected once per `Readers` (per pinned version) on the first
+  * point read, so they run no Spark job; a live-only reader (k14)
+  * never builds them. Spark serves only `similarLive` and search.
   */
 final class Readers(spark: SparkSession, profiles: DataFrame,
     neighbors: DataFrame, embeddings: DataFrame,
@@ -25,44 +25,33 @@ final class Readers(spark: SparkSession, profiles: DataFrame,
 
   GraftFunctions.register(spark)
 
-  private val prof = profiles.cache()
-  private val neigh = neighbors.cache()
   private val emb = embeddings.cache()
   private val post = postings.map(_.cache())
+
+  // built once under the instance lock; a failed build throws in the
+  // request that triggered it and is retried by the next
+  private lazy val profileIndex = Readers.index(profiles, "profiles")
+  private lazy val neighborIndex = Readers.index(neighbors, "neighbors")
 
   val AllowedMetrics: Set[String] = Set("COSINE", "EUCLIDEAN", "DOT_PRODUCT")
 
   /** `SELECT * FROM profile WHERE id = @id LIMIT 1` (S4). */
-  def profile(id: Long): Option[Row] =
-    prof.filter(col("vec_id") === id).limit(1).collect().headOption
+  def profile(id: Long): Option[Row] = profileIndex.get(id)
 
   /** Precomputed neighbor list for the default profile. */
-  def similarPrecomputed(id: Long): Option[Row] =
-    neigh.filter(col("vec_id") === id).limit(1).collect().headOption
+  def similarPrecomputed(id: Long): Option[Row] = neighborIndex.get(id)
 
   /** The composed `GET /games/{id}` document (games.py:253-289): the
-    * profile row plus the precomputed neighbor list, issued as two
-    * point lookups (the reference runs them concurrently; here they
-    * are two actions against cached frames).
+    * profile row plus its precomputed neighbor list (empty when the
+    * id has no neighbors row).
     */
-  def document(id: Long): Option[Map[String, Any]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // the profile row and the neighbors row are INDEPENDENT point
-    // lookups — issue both concurrently and assemble when both land
-    // (the reference's measured latency win: readers/games.py:265-268
-    // runs exactly these two queries on a ThreadPoolExecutor(2)).
-    // Spark's scheduler interleaves the two bounded jobs; the
-    // composed document is byte-identical to sequential assembly.
-    val fSimilar = Future(similarPrecomputed(id)
-      .map(r => r.getSeq[Row](r.fieldIndex("similar")))
-      .getOrElse(Seq.empty))
+  def document(id: Long): Option[Map[String, Any]] =
     profile(id).map { row =>
-      val base = row.schema.fieldNames.zip(row.toSeq).toMap
-      base + ("similar" -> Await.result(fSimilar, Duration.Inf))
+      val similar = similarPrecomputed(id)
+        .map(r => r.getSeq[Row](r.fieldIndex("similar")))
+        .getOrElse(Seq.empty)
+      row.schema.fieldNames.zip(row.toSeq).toMap + ("similar" -> similar)
     }
-  }
 
   /** Live tuned similarity — filter first, then rank (the reference's
     * measured "filter-first" discipline, games.py:198-199): broadcast
@@ -80,13 +69,6 @@ final class Readers(spark: SparkSession, profiles: DataFrame,
       .limit(k)
   }
 
-  /** Drop the serving caches. A long-lived server keeps them hot; a
-    * transient reader (the k14 catalog query, a bench pass) must not
-    * leave cached blocks squatting on executor storage after it is
-    * done. Unpersisting never-materialized caches is a no-op, and
-    * plans already derived from the frames stay valid (they just read
-    * the source again).
-    */
   /** Conjunctive term search — t37's inverted index as a serving
     * route: read ONLY the query terms' postings (the `tb` prefix
     * filter prunes to the terms' partitions when the index is the
@@ -126,15 +108,33 @@ final class Readers(spark: SparkSession, profiles: DataFrame,
 
   def hasSearch: Boolean = post.nonEmpty
 
+  /** Drop the serving caches. A long-lived server keeps them hot; a
+    * transient reader (the k14 catalog query, a bench pass) must not
+    * leave cached blocks squatting on executor storage after it is
+    * done. Unpersisting never-materialized caches is a no-op, and
+    * plans already derived from the frames stay valid (they just read
+    * the source again).
+    */
   def close(): Unit = {
-    prof.unpersist()
-    neigh.unpersist()
     emb.unpersist()
     post.foreach(_.unpersist()): Unit
   }
 }
 
 object Readers {
+  /** `df`'s rows by `vec_id` (null keys are unreachable, so dropped).
+    * A repeated key fails: a point read must not pick a row at random.
+    */
+  private def index(df: DataFrame, table: String): Map[Long, Row] = {
+    val k = df.schema.fieldIndex("vec_id")
+    df.collect().iterator.filterNot(_.isNullAt(k)).foldLeft(Map.empty[Long, Row]) { (m, r) =>
+      val id = r.getLong(k)
+      if (m.contains(id)) throw new IllegalStateException(
+        s"$table: duplicate vec_id $id; a point read needs one row per key")
+      m.updated(id, r)
+    }
+  }
+
   /** Build the serving tables from the embeddings source table. */
   def build(spark: SparkSession, sfDir: String, k: Int = 10): Readers = {
     GraftFunctions.register(spark)

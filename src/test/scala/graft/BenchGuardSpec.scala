@@ -38,6 +38,15 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(BenchGuard.contended(1.2000001, ref))
   }
 
+  test("probeRef: a good override is used; empty, non-numeric and non-positive fall back") {
+    assert(BenchGuard.probeRef(None) == BenchGuard.RefCpuProbeSec)
+    assert(BenchGuard.probeRef(Some("0.9")) == 0.9)
+    assert(BenchGuard.probeRef(Some(" 1.25 ")) == 1.25)
+    for (bad <- Seq("", "  ", "fast", "0.9s", "NaN", "Infinity", "0", "-0.5"))
+      assert(BenchGuard.probeRef(Some(bad)) == BenchGuard.RefCpuProbeSec,
+        s"'$bad' must fall back to the pinned reference")
+  }
+
   test("loadAvg1 returns a finite value or the -1 sentinel") {
     val v = BenchGuard.loadAvg1()
     assert(v == -1.0 || (v >= 0.0 && !v.isNaN && !v.isInfinite))

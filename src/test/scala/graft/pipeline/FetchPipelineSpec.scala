@@ -81,6 +81,25 @@ class FetchPipelineSpec extends SparkSpec {
     assert(pipe.core("games").count() == 1)
   }
 
+  test("processBatch releases the parsed batch: no cached relation outlives it") {
+    import TestSpark.spark.implicits._
+    val pipe = mkPipeline { ids =>
+      ids.map(id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true))
+    }
+    // suites run one at a time; drop what earlier ones left cached
+    // (cached frames are a speed-up, never a result) so the check below
+    // sees only what processBatch leaves behind
+    val cache = TestSpark.spark.sharedState.cacheManager
+    TestSpark.spark.catalog.clearCache()
+    pipe.seedIds(Seq(21L, 22L).toDF("game_id"))
+    pipe.fetchBatch(ts("2026-01-01 00:00:00"))
+    assert(pipe.processBatch(ts("2026-01-01 00:00:00")) == 2)
+    pipe.seedIds(Seq(23L).toDF("game_id"))
+    pipe.fetchBatch(ts("2026-01-02 00:00:00"))
+    assert(pipe.processBatch(ts("2026-01-02 00:00:00")) == 1)
+    assert(cache.isEmpty, "a cached relation outlived processBatch")
+  }
+
   test("refresh policy: age bands + null-year + in-progress exclusion") {
     import TestSpark.spark.implicits._
     val now = ts("2026-06-01 00:00:00")
