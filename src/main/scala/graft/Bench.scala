@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.benchCpus
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JIT/codegen the scan + shuffle paths so the
     // first measured query isn't charged for session bring-up, and
@@ -182,7 +173,7 @@ object Bench {
         val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         spark.sparkContext.setJobDescription(null)
         Run(sec, mem.peakTaskMb, mem.spillMb,
-          mem.headroomFlag(cpus.toInt))
+          mem.headroomFlag(cpus))
       }
       // any failed run fails the query; otherwise report the min rep
       name -> (if (runs.exists(_.sec < 0)) Run(-1.0, 0, 0, flag = false)
@@ -231,7 +222,7 @@ object Bench {
     val probeRef = BenchGuard.probeRef(sys.env.get("SPARK_GRAFT_PROBE_REF"))
     val contended = BenchGuard.contended(probeCpu, probeRef) ||
       BenchGuard.contended(probeCpuEnd, probeRef)
-    val hostJson = s""""host_probe":{"cpu_s":${fmt(probeCpu)},"cpu_s_end":${fmt(probeCpuEnd)},"ref_cpu_s":${fmt(probeRef)},"load1_start":${fmt(loadStart)},"load1_end":${fmt(loadEnd)},"contended":$contended}"""
+    val hostJson = s""""host_probe":{"cpu_s":${fmt(probeCpu)},"scan_s":${fmt(probeScan)},"cpu_s_end":${fmt(probeCpuEnd)},"ref_cpu_s":${fmt(probeRef)},"load1_start":${fmt(loadStart)},"load1_end":${fmt(loadEnd)},"contended":$contended}"""
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":$n,"avg_per_query":${fmt(avg)},"repeats":$repeats,"stream_repeats":$streamRepeats,$hostJson,"memory_top15":{"heap_mb":$heapMb,"slots":$cpus,"n_flagged":$nFlagged,"queries":$memJson},"queries":$qs,"n_failed":${errors.size},"errors":$errJson,"sf":"$sfDir"}"""
     println(line)
     // the stdout line has repeatedly survived only as a truncated tail

@@ -1,15 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes `.explain("formatted")` output for named catalog queries to
   * `<outDir>/<name><suffix>.txt` — the optimization-round evidence
-  * files (plans/r15/<query>_before.txt / _after.txt). The session
-  * mirrors the bench session (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus, AQE on) so the dumped initial plans are the ones
-  * the bench executes.
+  * files (plans/r15/<query>_before.txt / _after.txt). The session is
+  * the bench session ([[Session.local]] at `SPARK_GRAFT_CPUS` slots)
+  * so the dumped initial plans are the ones the bench executes.
   *
   * Usage: tools/run.sh graft.PlanDump <outDir> <suffix> q1,q2,... [sfDir]
   */
@@ -21,18 +19,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.benchCpus)
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)
       val s = df.queryExecution

@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiling harness: run named queries N times in one JVM and
   * print per-iteration wall times, so planning/codegen warmup (iter 0)
   * can be separated from steady-state execution. Bench measures the
   * cold number the driver grades; this tells you which side of it to
-  * optimize. Usage:
+  * optimize, so it runs at Bench's slot count (`SPARK_GRAFT_CPUS`).
+  * Usage:
   *   SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Profile q1 c1 [reps]
   */
 object Profile {
@@ -15,15 +15,7 @@ object Profile {
       case Some(n) => (args.init.toSeq, n)
       case None    => (args.toSeq, 3)
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.benchCpus)
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach(n =>
       try Tables.load(spark, sfDir, n) catch { case _: Throwable => () })

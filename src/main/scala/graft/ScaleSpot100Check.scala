@@ -49,10 +49,6 @@ object ScaleSpot100Check {
   private val MinOf = Map("i4_join_view_ivm" -> 1, "g3_triangle_count" -> 1)
     .withDefaultValue(2)
 
-  private val Ops = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
-  private def counts(p: String): Map[String, Int] =
-    Ops.map(op => op -> op.r.findAllIn(p).size).toMap
-
   /** Fixed-size i4 tick slice: the edit script applies to orders with
     * o_orderkey below this at EVERY scale, so the tick's batch is the
     * same absolute size while the maintained state grows 10× — the
@@ -79,7 +75,7 @@ object ScaleSpot100Check {
     * exactly the d15 linear-memory failure).
     */
   private def i4Session(dir: String): SparkSession = {
-    val spark = session()
+    val spark = Session.local(ScaleAudit.Slots)
     val liBytes = graft.Tables.inputBytes(s"$dir/lineitem.parquet")
     val parts = math.max(8L, math.min(2048L, liBytes / (8L << 20)))
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
@@ -101,21 +97,6 @@ object ScaleSpot100Check {
       }
   }
 
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-    spark
-  }
-
   /** The distinct co-purchase edge set the triangle family shares
     * (same derivation as g3/g6's catalog bodies). */
   private def edges(spark: SparkSession, dir: String) =
@@ -130,32 +111,16 @@ object ScaleSpot100Check {
   def main(args: Array[String]): Unit = args.toList match {
 
     case "--one" :: name :: small :: large :: Nil =>
-      val spark = session()
-      val mem = new PeakMemoryAudit
-      spark.sparkContext.addSparkListener(mem)
-      // memory fields are captured PER REP (listener reset each rep)
-      // and the reported fields come from the rep whose wall was kept
-      // (the min) — under min-of-2 a shared accumulator would sum
-      // spill across both reps and could report a peak from the rep
-      // that was discarded
-      final case class Rep(sec: Double, plan: Map[String, Int],
-          peakMb: Double, spillMb: Double, flag: Boolean)
-      def run(dir: String, reps: Int): Rep =
-        (0 until reps).map { _ =>
-          spark.catalog.clearCache()
-          mem.reset()
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(name)(spark, dir)
-          df.write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          if (name.startsWith("i4")) cleanScratch()
-          Rep(dt, counts(df.queryExecution.executedPlan.toString()),
-            mem.peakTaskMb, mem.spillMb, mem.headroomFlag(32))
-        }.minBy(_.sec)
+      val spark = Session.local(ScaleAudit.Slots)
+      // the shared audit timing loop: memory fields come from the rep
+      // whose wall was kept (the min), never summed across reps
+      val h = new ScaleAudit.Harness(spark)
+      val afterRep = () => if (name.startsWith("i4")) cleanScratch()
+      def run(dir: String, reps: Int) = h.run(name, dir, reps, None, afterRep)
       run("/tmp/sf1", 1) // warm THIS query's plan/codegen on tiny data
       val rs = run(small, MinOf(name))
       val rl = run(large, MinOf(name))
-      val (ts, cs, tl, cl) = (rs.sec, rs.plan, rl.sec, rl.plan)
+      val (ts, cs, tl, cl) = (rs.secs, rs.ops, rl.secs, rl.ops)
       val est =
         if (name.startsWith("g6"))
           s""","est":${SparkEntry.queries(name)(spark, large)
@@ -164,12 +129,12 @@ object ScaleSpot100Check {
       println(s"""{"query":"$name","small_sec":$ts,"large_sec":$tl,""" +
         s""""ops_small":{"cp":${cs("CartesianProduct")},"bnlj":${cs("BroadcastNestedLoopJoin")}},""" +
         s""""ops_large":{"cp":${cl("CartesianProduct")},"bnlj":${cl("BroadcastNestedLoopJoin")}},""" +
-        f""""peak_task_mb":${rl.peakMb}%.1f,"spill_mb":${rl.spillMb}%.1f,""" +
-        f""""driver_heap_mb":${mem.driverHeapMb}%.0f,"mem_flag":${rl.flag}$est}""")
+        f""""peak_task_mb":${rl.peakTaskMb}%.1f,"spill_mb":${rl.spillMb}%.1f,""" +
+        f""""driver_heap_mb":${rl.driverHeapMb}%.0f,"mem_flag":${rl.memFlag}$est}""")
       spark.stop()
 
     case "--exact-tri" :: dir :: Nil =>
-      val spark = session()
+      val spark = Session.local(ScaleAudit.Slots)
       val n = SparkEntry.queries("g3_triangle_count")(spark, dir)
         .collect()(0).getAs[Long]("n_triangles")
       println(s"""{"exact":$n}""")
@@ -321,7 +286,7 @@ object ScaleSpot100Check {
       // cap ENGAGES but the uncapped join is still affordable (sf1:
       // max bucket occupancy ~36 > BucketCap). Subset is a spec
       // invariant (LshCapSpec), so recall = |capped| / |uncapped|.
-      val spark = session()
+      val spark = Session.local(ScaleAudit.Slots)
       implicit val dl: graft.functions.XSql.Dialect =
         graft.functions.XSql.Spark
       val sh = spark.read.parquet(s"$dir/documents.parquet")
@@ -347,7 +312,7 @@ object ScaleSpot100Check {
       //   st7 pair set: union over the 3 deterministic batches
       //     (doc_id % 3) of per-batch incremental pairs, capped vs
       //     uncapped stored side.
-      val spark = session()
+      val spark = Session.local(ScaleAudit.Slots)
       implicit val dl: graft.functions.XSql.Dialect =
         graft.functions.XSql.Spark
       import graft.operators.Lsh
@@ -398,7 +363,7 @@ object ScaleSpot100Check {
       spark.stop()
 
     case "--doulion-twin" :: dir :: Nil =>
-      val spark = session()
+      val spark = Session.local(ScaleAudit.Slots)
       // independent universal hash (distinct odd multipliers), same
       // deterministic p = 1/4 — a true replicate of the estimator
       val keep = ((col("u") * lit(2246822519L) + col("v") * lit(3266489917L))

@@ -1,23 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run ad-hoc SQL against the test tables.
   * Usage: tools/run.sh graft.Sql <sfDir> "<sql>"
   */
 object Sql {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      // full extensions path: native functions + the band-join rule
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // full extensions path: native functions + the band-join rule (a
+    // static conf, so it must be in place before the session exists)
+    sys.props("spark.sql.extensions") = "graft.functions.GraftExtensions"
+    val spark = Session.local(4)
     Tables.registerAll(spark, args(0))
     args.drop(1).foreach(sql => spark.sql(sql).show(50, truncate = false))
     spark.stop()

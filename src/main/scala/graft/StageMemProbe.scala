@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: run one catalog query and print its heaviest stages by
   * max-task execution memory ([[PeakMemoryAudit.topStages]]) — the
   * attribution step for a memory-headroom flag. The tick audits say
@@ -16,17 +14,7 @@ object StageMemProbe {
     val name = args(0)
     val dir = args.lift(1).getOrElse("/tmp/sf1")
     val topN = args.lift(2).map(_.toInt).getOrElse(12)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Session.local(32)
     val mem = new PeakMemoryAudit
     spark.sparkContext.addSparkListener(mem)
     val t0 = System.nanoTime()

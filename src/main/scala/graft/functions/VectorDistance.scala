@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
@@ -170,96 +168,4 @@ case class VectorDistance(first: Expression, second: Expression, third: Expressi
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** Session registration for graft's native functions. Callable directly
-  * (`GraftFunctions.register(spark)`) or through the
-  * [[GraftExtensions]] `SparkSessionExtensions` hook
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`).
-  */
-object GraftFunctions {
-  /** Idempotent convenience: register only if the session doesn't
-    * already carry the functions (operators like KMeans.withAssign
-    * emit `vector_distance` calls and must work in any session).
-    */
-  def ensure(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry.functionExists(
-        FunctionIdentifier("vector_distance")))
-      register(spark)
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vector_distance"),
-      new ExpressionInfo(classOf[VectorDistance].getName, "vector_distance"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "vector_distance(a, b, metric) takes exactly 3 arguments")
-        VectorDistance(children(0), children(1), children(2))
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_char_hash"),
-      new ExpressionInfo(classOf[CharPolyHash].getName, "graft_char_hash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_char_hash(s) takes exactly 1 argument")
-        CharPolyHash(children.head)
-      })
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash30].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimHash30(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_intersect_size"),
-      new ExpressionInfo(classOf[IntersectSize].getName, "graft_intersect_size"),
-      (children: Seq[Expression]) => IntersectSize(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[Winnow].getName, "graft_winnow"),
-      (children: Seq[Expression]) => Winnow(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_lsh_bucket"),
-      new ExpressionInfo(classOf[LshBucket].getName, "graft_lsh_bucket"),
-      (children: Seq[Expression]) => LshBucket(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bpe_stats"),
-      new ExpressionInfo(classOf[BpeStats].getName, "graft_bpe_stats"),
-      (children: Seq[Expression]) => BpeStats(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_lsh_bucket_n"),
-      new ExpressionInfo(classOf[LshBucketN].getName, "graft_lsh_bucket_n"),
-      (children: Seq[Expression]) => LshBucketN(children(0), children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_word_hashes"),
-      new ExpressionInfo(classOf[WordHashes].getName, "graft_word_hashes"),
-      (children: Seq[Expression]) => WordHashes(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingles"),
-      (children: Seq[Expression]) => ShingleSet(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "graft_char_entropy"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "graft_char_entropy(s) takes exactly 1 argument")
-        CharEntropy(children.head)
-      })
-  }
-}
-
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vector_distance"),
-      new ExpressionInfo(classOf[VectorDistance].getName, "vector_distance"),
-      (children: Seq[Expression]) => VectorDistance(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_char_hash"),
-      new ExpressionInfo(classOf[CharPolyHash].getName, "graft_char_hash"),
-      (children: Seq[Expression]) => CharPolyHash(children.head)))
-    ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
-    ext.injectOptimizerRule(session => new graft.plans.MvRewrite(session))
-  }
 }

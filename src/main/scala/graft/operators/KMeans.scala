@@ -157,7 +157,7 @@ object KMeans {
     * dedup shells — actually wants).
     */
   def withAssignMulti(df: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensure(df.sparkSession)
+    graft.functions.GraftFunctions.register(df.sparkSession)
     df.join(broadcast(centsArr(cents)), "grp")
       .withColumn("cid", expr(nearestExpr).getField("cid"))
       .drop("carr_")

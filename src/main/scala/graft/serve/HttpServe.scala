@@ -28,6 +28,13 @@ import org.apache.spark.sql.Row
   */
 final class HttpServe(readers: Readers, port: Int = 0) {
 
+  // TCP_NODELAY on every connection: the server writes headers and body
+  // as separate segments, so under Nagle a back-to-back keep-alive
+  // request waits ~40 ms for the client's delayed ACK. The JDK reads
+  // this once, when its server config class loads, i.e. at the first
+  // HttpServer.create in the JVM — so it is set before that.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
   private val server =
     HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
   server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))

@@ -137,7 +137,6 @@ object Readers {
 
   /** Build the serving tables from the embeddings source table. */
   def build(spark: SparkSession, sfDir: String, k: Int = 10): Readers = {
-    GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .withColumn("v", expr("transform(embedding, x_ -> double(x_))"))
       .select("vec_id", "label", "v")

@@ -57,7 +57,7 @@ object EventStream {
     * over that many micro-batches instead of a query's default —
     * tick-split invariance (IvmJoinSpec et al.) makes the maintained
     * result identical under any split, so only the per-tick cost
-    * profile changes. ScaleStateCheck sets it to double the tick
+    * profile changes. `ScaleAudit state` sets it to double the tick
     * count at 10× data, stretching the fold chains across ≥2
     * compaction checkpoints.
     */
@@ -216,7 +216,7 @@ object EventStream {
     * is the measurement behind the O(batch)-per-tick thesis: at 10×
     * rows AND 10× ticks the per-tick batch is the same size while the
     * accumulated state is 10× — a flat tick profile is the claim,
-    * measured (ScaleTickCheck).
+    * measured (`ScaleAudit ticks`).
     */
   object TickWalls {
     @volatile var enabled = false

@@ -514,7 +514,7 @@ object JoinViewMaintenance {
     // bound the BASE fold chain: without a checkpoint every tick's
     // newBase fold scans one more delta version — a per-tick term
     // linear in tick count (measured as a 1.4→2.9 s tilt across 30
-    // ticks in the first ScaleTickCheck run). Same reserved-slot
+    // ticks in the first `ScaleAudit ticks` run). Same reserved-slot
     // discipline as applyTick; the view needs no checkpoint (each
     // tick already publishes it as a full snapshot) but its old
     // snapshots are retained away on the same cadence.

@@ -186,4 +186,44 @@ class HttpServeSpec extends SparkSpec {
       readers.close()
     }
   }
+
+  test("back-to-back keep-alive requests do not wait on a delayed ACK") {
+    // 20 sequential /health requests on ONE connection: without
+    // TCP_NODELAY the body segment waits behind the unACKed header
+    // segment until the client's delayed ACK fires (~40 ms each)
+    val idle = TestSpark.spark.range(0).selectExpr("id AS vec_id")
+    val readers = new Readers(TestSpark.spark, idle, idle, idle)
+    val srv = new HttpServe(readers)
+    srv.start()
+    val sock = new java.net.Socket("127.0.0.1", srv.boundPort)
+    try {
+      sock.setTcpNoDelay(true)
+      val out = sock.getOutputStream
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val req = "GET /health HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n".getBytes("US-ASCII")
+      def response(): String = {
+        val head = new StringBuilder
+        while (!head.toString.endsWith("\r\n\r\n")) {
+          val b = in.read()
+          assert(b >= 0, s"connection closed after: $head")
+          head += b.toChar
+        }
+        val len = "(?i)content-length: *(\\d+)".r
+          .findFirstMatchIn(head).map(_.group(1).toInt).getOrElse(0)
+        new String(in.readNBytes(len), "UTF-8")
+      }
+      val ms = (0 until 20).map { _ =>
+        val t0 = System.nanoTime()
+        out.write(req); out.flush()
+        assert(response() == """{"status":"ok"}""")
+        (System.nanoTime() - t0) / 1e6
+      }
+      val median = ms.sorted.apply(ms.size / 2)
+      assert(median < 20.0, s"median $median ms over ${ms.map(m => f"$m%.1f")}")
+    } finally {
+      sock.close()
+      srv.stop()
+      readers.close()
+    }
+  }
 }

@@ -48,9 +48,12 @@ for i in range(150, 400):
             "with content words " +
             " ".join(f"w{(i * 13 + j) % 911}" for j in range(18)))
     rows.append((i, base))
-# a handful of exact dup pairs across the %5 boundary
-for k, i in enumerate(range(400, 420)):
-    rows.append((i, rows[150 + k][1]))
+# a handful of exact dup pairs across the %5 boundary: each copies the
+# varied doc 247 ids back (ids 153..172), and 247 is nonzero mod 5 and
+# mod 3, so every pair straddles both d9's old/new split and st7's
+# batch split
+for i in range(400, 420):
+    rows.append((i, rows[i - 247][1]))
 
 ids = [r[0] for r in rows]
 texts = [r[1] for r in rows]
