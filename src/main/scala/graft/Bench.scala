@@ -56,7 +56,7 @@ object Bench {
     warm("stream") {
       import spark.implicits._
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_warm")
+      val tmp = Scratch.dir("warm")
       val rows = Seq(
         (1L, java.sql.Timestamp.valueOf("2025-01-01 00:00:00"), 1.0),
         (2L, java.sql.Timestamp.valueOf("2025-01-01 00:01:00"), 2.0))
@@ -142,10 +142,9 @@ object Bench {
     // memory-headroom fields ride along on every run (the i4 lesson:
     // a 544 MB-peak task was invisible in every wall ratio — the tick
     // audit's gate caught it, and the bench's heavy tail deserves the
-    // same instrument). Listener reset per rep; the reported fields
+    // same instrument). Profile reset per rep; the reported fields
     // belong to the rep whose wall was kept (the min).
-    val mem = new PeakMemoryAudit
-    spark.sparkContext.addSparkListener(mem)
+    val mem = QueryProfile.attach(spark)
     final case class Run(sec: Double, peakMb: Double, spillMb: Double,
         flag: Boolean)
     val results = measured.map { case (name, fn) =>

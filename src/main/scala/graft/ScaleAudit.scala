@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.streaming.EventStream.TickWalls
 
 /** Scale-headroom audits: run a family of catalog queries on a SMALL
   * and a LARGE data directory and gate how their plans and walls move.
@@ -24,7 +23,7 @@ import graft.streaming.EventStream.TickWalls
   * or a BroadcastNestedLoopJoin more there than at small — a keyed
   * join or candidate generator silently degenerating to all-pairs),
   * the wall ratio (min-of-reps large / small) under its ceiling, and,
-  * where the audit gates memory, no [[PeakMemoryAudit]] headroom flag.
+  * where the audit gates memory, no [[QueryProfile]] headroom flag.
   *
   * Usage: tools/run.sh graft.ScaleAudit <plan|docs|state|ticks|spot>
   *          [smallDir largeDir [out]]
@@ -38,9 +37,9 @@ object ScaleAudit {
 
   // ---- gate logic (pure)
 
-  val FlipOps = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
+  val FlipOps = Seq("BroadcastNestedLoopJoin", "CartesianProduct")
   val JoinOps: Seq[String] =
-    FlipOps ++ Seq("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")
+    Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin") ++ FlipOps
 
   def opCounts(plan: String): Map[String, Int] =
     JoinOps.map(op => op -> op.r.findAllIn(plan).size).toMap
@@ -96,16 +95,15 @@ object ScaleAudit {
       memFlag: Boolean, ticks: Seq[Double])
 
   final class Harness(val spark: SparkSession) {
-    private val mem = new PeakMemoryAudit
-    spark.sparkContext.addSparkListener(mem)
+    private val prof = QueryProfile.attach(spark)
 
-    def close(): Unit = spark.sparkContext.removeSparkListener(mem)
+    def close(): Unit = prof.detach()
 
     /** The min-of-`reps` run of one catalog query into the noop sink.
-      * Each rep starts on a cleared cache with the memory listener and
-      * the tick clock reset, so the reported fields belong to the rep
-      * whose wall was kept. `reps = 0` plans without executing.
-      * `ticks` sets the `graft.state.ticks` replay length.
+      * Each rep starts on a cleared cache and a reset profile, so the
+      * reported fields belong to the rep whose wall was kept.
+      * `reps = 0` plans without executing. `ticks` sets the
+      * `graft.state.ticks` replay length.
       */
     def run(name: String, dir: String, reps: Int, ticks: Option[Int],
         afterRep: () => Unit = () => ()): Run = {
@@ -116,20 +114,16 @@ object ScaleAudit {
         Run(0.0, opCounts(plan), 0.0, 0.0, 0.0, memFlag = false, Nil)
       } else (0 until reps).map { _ =>
         spark.catalog.clearCache()
-        mem.reset()
-        TickWalls.clear()
-        TickWalls.enabled = true
+        prof.reset()
         val t0 = System.nanoTime()
-        val df = try {
-          val df = SparkEntry.queries(name)(spark, dir)
-          df.write.format("noop").mode("overwrite").save()
-          df
-        } finally TickWalls.enabled = false
+        val df = SparkEntry.queries(name)(spark, dir)
+        df.write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
+        val ticks = prof.tickWalls
         afterRep()
         Run(secs, opCounts(df.queryExecution.executedPlan.toString()),
-          mem.peakTaskMb, mem.spillMb, mem.driverHeapMb,
-          mem.headroomFlag(Slots), TickWalls.snapshot().sortBy(_._1).map(_._2))
+          prof.peakTaskMb, prof.spillMb, prof.driverHeapMb,
+          prof.headroomFlag(Slots), ticks)
       }.minBy(_.secs)
     }
   }
@@ -315,7 +309,7 @@ object ScaleAudit {
       labels = ("small", "large"), defaults = (Sf01, "/tmp/sf1", "BENCH_SF1_TICKS.json"),
       header = Seq(
         "metric" -> "ivm_tick_scale_headroom",
-        "protocol" -> "streaming loops at (sf0.1, 3 ticks) vs (10x rows, 30 ticks): SAME per-tick batch size, 10x accumulated state, ~15 CompactEvery=2 checkpoints crossed; per-tick micro-batch body walls via EventStream.TickWalls, tick 0 (stream-start planning) excluded from medians on both scales; batch-replay protocols gate wall ratio")),
+        "protocol" -> "streaming loops at (sf0.1, 3 ticks) vs (10x rows, 30 ticks): SAME per-tick batch size, 10x accumulated state, ~15 CompactEvery=2 checkpoints crossed; per-tick micro-batch body walls via QueryProfile tick spans, tick 0 (stream-start planning) excluded from medians on both scales; batch-replay protocols gate wall ratio")),
     "spot" -> Spec(
       queries = SpotQueries, defaultCeiling = 12.0,
       ceilings = Map("g3_triangle_count" -> 32.0), noiseFloorSec = 0.5,
@@ -511,7 +505,7 @@ object ScaleAudit {
   private def skippingProbe(spark: SparkSession, dir: String)
       : (Int, Int, Long, Long) = {
     import graft.operators.SkippingIndex
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scale_probe")
+    val tmp = Scratch.dir("scale_probe")
     val basePath = tmp.resolve("base").toString
     val o = Tables.load(spark, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -547,8 +541,8 @@ object ScaleAudit {
   // ---- ticks: the continuous loops at 10× rows and 10× ticks
 
   /** Continuous loops driven through runForeachBatch with the
-    * graft.state.ticks knob (per-tick walls captured by
-    * [[graft.streaming.EventStream.TickWalls]]): (sf0.1, 3 ticks) vs
+    * graft.state.ticks knob (per-tick walls are the
+    * [[QueryProfile.tick]] spans): (sf0.1, 3 ticks) vs
     * (10× rows, 30 ticks), so the per-tick batch is the SAME SIZE while
     * the accumulated state and the tick count both grow 10×. The spec's
     * own queries are the batch replays of the same protocols (i4/i7 —

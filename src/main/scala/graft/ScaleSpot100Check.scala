@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * Modes (all print one JSON line on stdout):
   *   --one <name> <smallDir> <largeDir>   min-of-2 walls both sides
   *       (i4: min-of-1, scratch reclaimed between runs), plan-flip
-  *       ops counts, PeakMemoryAudit fields; g6 also reports its
+  *       ops counts, QueryProfile memory fields; g6 also reports its
   *       1-row estimate.
   *   --exact-tri <dir>                    g3's exact triangle count,
   *       run once (the DOULION truth — expensive, attempted in its
@@ -83,19 +83,13 @@ object ScaleSpot100Check {
   }
 
   /** i4's versioned scratch tables are ~30 GB at sf100; reclaim them
-    * between runs instead of waiting for JVM-exit deleteOnExit. */
-  private def cleanScratch(): Unit = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    Option(tmp.listFiles()).getOrElse(Array.empty)
+    * between runs instead of waiting for the JVM-exit [[Scratch]]
+    * cleanup. */
+  private def cleanScratch(): Unit =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("graft_i4"))
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(d)
-      }
-  }
+      .foreach(Scratch.remove)
 
   /** The distinct co-purchase edge set the triangle family shares
     * (same derivation as g3/g6's catalog bodies). */
@@ -153,8 +147,7 @@ object ScaleSpot100Check {
       // logical content as Ivm.joinView (unique inputs ⇒ every view
       // tuple once), minus the 600M-group canonicalizing shuffle.
       val spark = i4Session(dir)
-      val mem = new PeakMemoryAudit
-      spark.sparkContext.addSparkListener(mem)
+      val mem = QueryProfile.attach(spark)
       import graft.operators.TableStore
       import graft.streaming.JoinViewMaintenance.InitTick
       val t0 = System.nanoTime()
@@ -191,8 +184,7 @@ object ScaleSpot100Check {
       // fold layout is the documented next lever), so tick wall grows
       // with base bytes, bounded by the 12x default for 10x data.
       val spark = i4Session(dir)
-      val mem = new PeakMemoryAudit
-      spark.sparkContext.addSparkListener(mem)
+      val mem = QueryProfile.attach(spark)
       import graft.streaming.JoinViewMaintenance
       val (a, b) = i4Bases(spark, dir)
       val sl = col("o_orderkey") < I4SliceMax

@@ -403,13 +403,11 @@ object Ivm {
     * rows: ~10× the largest measured-fine tick delta (the sf100
     * audit's 1.55 M-row tick), far under the 512 M-row broadcast hard
     * cap. Parameterised for clusters with more headroom
-    * (`-Dgraft.ivm.maxDeltaRows=...` / GRAFT_IVM_MAX_DELTA_ROWS);
+    * (`-Dgraft.ivm.maxDeltaRows=...`);
     * specs shrink it to force the guard.
     */
   def maxDeltaRows: Long =
-    sys.props.get("graft.ivm.maxDeltaRows")
-      .orElse(sys.env.get("GRAFT_IVM_MAX_DELTA_ROWS"))
-      .map(_.toLong).getOrElse(16000000L)
+    sys.props.get("graft.ivm.maxDeltaRows").map(_.toLong).getOrElse(16000000L)
 
   private def guardDeltaBroadcast(d: DataFrame, which: String): Unit = {
     val max = maxDeltaRows

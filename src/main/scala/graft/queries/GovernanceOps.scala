@@ -1,10 +1,9 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.Scratch
 import graft.operators.TableStore
 
 /** Data-governance and serving-index operators — the platform layer a
@@ -25,12 +24,6 @@ import graft.operators.TableStore
   * emitted identically for both engines, rounded before comparison.
   */
 object GovernanceOps {
-
-  private def scratch(name: String): String = {
-    val dir = Files.createTempDirectory(s"graft_$name").toFile
-    dir.deleteOnExit()
-    s"${dir.getAbsolutePath}/t"
-  }
 
   /** Distinct (doc_id, term) postings of a documents frame — the
     * inverted-index row type. `array_distinct` makes per-doc terms
@@ -74,7 +67,7 @@ object GovernanceOps {
          |  AND list_contains(string_split(lower(text), ' '), 'vector')
          |  AND list_contains(string_split(lower(text), ' '), 'key')
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val path = scratch("t37_postings")
+      val path = Scratch.table("t37_postings")
       val docs = t(s, d, "documents").select("doc_id", "text")
       // index build: tb (first letter) is the partition column; at
       // corpus scale the same layout holds with hash buckets
@@ -124,7 +117,7 @@ object GovernanceOps {
         |WHERE a.term = 'table' AND b.term = 'hash' AND c.term = 'agg'
         |ORDER BY a.doc_id""".stripMargin) { (s, d) =>
       val phrase = Seq("table", "hash", "agg")
-      val path = scratch("t40_postings")
+      val path = Scratch.table("t40_postings")
       val docs = t(s, d, "documents").select("doc_id", "text")
       graft.operators.Postings.positional(docs)
         .write.mode("overwrite").partitionBy("tb").parquet(path)
@@ -149,7 +142,7 @@ object GovernanceOps {
       s"""WITH p AS (${postingsSql("WHERE doc_id % 7 <> 0")})
          |SELECT term, count(*) AS df FROM p
          |GROUP BY term ORDER BY term""".stripMargin) { (s, d) =>
-      val path = scratch("i9_postings")
+      val path = Scratch.table("i9_postings")
       val docs = t(s, d, "documents").select("doc_id", "text")
       val anchor = docs.filter(col("doc_id") % 5 =!= 0)
       val crawl = docs.filter(col("doc_id") % 5 === 0)
@@ -209,7 +202,7 @@ object GovernanceOps {
         |SELECT bin, n1, n2, cast(contrib as double) AS contrib,
         |  cast((SELECT sum(contrib) FROM k) as double) AS psi
         |FROM k ORDER BY bin""".stripMargin) { (s, d) =>
-      val basePath = scratch("a23_snap")
+      val basePath = Scratch.table("a23_snap")
       val o = t(s, d, "orders").select("o_orderkey", "o_totalprice")
       val v1 = TableStore.publishVersion(s, basePath, o, note = "v1")
       val v2 = TableStore.publishVersion(s, basePath,
@@ -273,9 +266,9 @@ object GovernanceOps {
          |UNION ALL
          |SELECT 'forgotten_remaining', 0
          |ORDER BY metric""".stripMargin) { (s, d) =>
-      val docsPath = scratch("c18_docs")
-      val chunksPath = scratch("c18_chunks")
-      val postPath = scratch("c18_postings")
+      val docsPath = Scratch.table("c18_docs")
+      val chunksPath = Scratch.table("c18_chunks")
+      val postPath = Scratch.table("c18_postings")
       val docs = t(s, d, "documents").select("doc_id", "text")
       TableStore.overwrite(docs, docsPath)
       // derived chunk table: fixed 20-token chunks (count shape only —
@@ -361,7 +354,7 @@ object GovernanceOps {
         |  cast(sum(ti) as bigint) AS tok_in,
         |  cast(sum(to_) as bigint) AS tok_out
         |FROM m GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
-      val path = scratch("c20_corpus")
+      val path = Scratch.table("c20_corpus")
       val docs = t(s, d, "documents").select("doc_id", "lang", "text")
       val v1 = TableStore.publishVersion(s, path,
         docs.filter(col("doc_id") % 3 =!= 1), note = "release-1")
@@ -409,8 +402,8 @@ object GovernanceOps {
          |  count(DISTINCT o_custkey) AS n_subjects,
          |  ${dsumSql("o_totalprice")} AS total
          |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val factsPath = scratch("c21_facts")
-      val vaultPath = scratch("c21_vault")
+      val factsPath = Scratch.table("c21_facts")
+      val vaultPath = Scratch.table("c21_vault")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val token = md5(concat(lit("pepper-v1:"), col("o_custkey")))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 import graft.transform.Models
 import ModelOps._
@@ -593,7 +594,7 @@ object ModelOps2 {
          |WHERE rn = 1
          |ORDER BY game_id""".stripMargin) { (s, _) =>
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_t42")
+      val tmp = Scratch.dir("t42")
       val path = tmp.resolve("desc_emb").toString
       // initial full build
       TableStore.overwrite(

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.functions.XSql
 import graft.functions.XSql.{Dialect, Spark => SqlSpark, Duck => SqlDuck}
 
@@ -199,7 +200,7 @@ object RetrievalOps {
       }) { (s, d) =>
       implicit val dl: Dialect = SqlSpark
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_i10")
+      val tmp = Scratch.dir("i10")
       val tfPath = s"$tmp/tf"
       val statsPath = s"$tmp/stats"
       val w = XSql.words("text")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.functions.XSql
 import graft.functions.XSql.{Dialect, Spark => SqlSpark, Duck => SqlDuck}
 
@@ -406,8 +407,7 @@ object Similarity {
     publishedIvf.computeIfAbsent(d, _ => {
       implicit val dl: Dialect = SqlSpark
       import graft.operators.{KMeans, TableStore}
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivf_published").toString
+      val root = Scratch.dir("ivf_published").toString
       val e = t(s, d, "embeddings")
         .withColumn("v", expr(vDouble(SqlSpark))).select("vec_id", "v")
       val cents = KMeans.trainLocal(boundTraining(e, 1), 4, LloydRounds)
@@ -438,8 +438,7 @@ object Similarity {
     publishedIvfIncr.computeIfAbsent(d, _ => {
       implicit val dl: Dialect = SqlSpark
       import graft.operators.{KMeans, TableStore}
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ivf_incr").toString
+      val root = Scratch.dir("ivf_incr").toString
       val e = t(s, d, "embeddings")
         .withColumn("v", expr(vDouble(SqlSpark))).select("vec_id", "v")
       val n = e.withColumn("n2", expr(XSql.norm2("v")))
@@ -479,8 +478,7 @@ object Similarity {
       implicit val dl: Dialect = SqlSpark
       import graft.operators.{KMeans, TableStore}
       val sub = PqSubDims
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_pq_published").toString
+      val root = Scratch.dir("pq_published").toString
       val e = t(s, d, "embeddings")
         .withColumn("v", expr(vDouble(SqlSpark))).select("vec_id", "v")
       val n = e.withColumn("n2", expr(XSql.norm2("v")))
@@ -1376,9 +1374,7 @@ object Similarity {
            |ORDER BY dist, n.vec_id LIMIT 10""".stripMargin
       }) { (s, d) =>
       implicit val dl: Dialect = SqlSpark
-      val dir = java.nio.file.Files.createTempDirectory("graft_k16").toFile
-      dir.deleteOnExit()
-      val path = s"${dir.getAbsolutePath}/ivf"
+      val path = Scratch.dir("k16").resolve("ivf").toString
       val e = t(s, d, "embeddings")
         .withColumn("v", expr(vDouble(SqlSpark))).select("vec_id", "v")
       val n = e.withColumn("n2", expr(XSql.norm2("v")))
@@ -1605,7 +1601,7 @@ object Similarity {
       implicit val dl: Dialect = SqlSpark
       import graft.operators.{KMeans, TableStore}
       import graft.streaming.{EventStream, JoinViewMaintenance}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st18")
+      val tmp = Scratch.dir("st18")
       val lists = tmp.resolve("lists").toString
       val e = t(s, d, "embeddings")
         .withColumn("v", expr(vDouble(SqlSpark))).select("vec_id", "v")
@@ -2066,8 +2062,7 @@ object Similarity {
       }) { (s, d) =>
       implicit val dl: Dialect = SqlSpark
       import graft.operators.{KMeans, TableStore}
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_k23").toString
+      val root = Scratch.dir("k23").toString
       val e = t(s, d, "embeddings")
         .withColumn("v", expr(vDouble(SqlSpark))).select("vec_id", "v")
       val n = e.withColumn("n2", expr(XSql.norm2("v")))

@@ -1,7 +1,7 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.operators.TableStore
 
 /** Sink-discipline operators (SURVEY.md §2.1 S5-S12, §2.10 I1),
@@ -13,16 +13,10 @@ import graft.operators.TableStore
   */
 object Sinks {
 
-  private def scratch(name: String): String = {
-    val dir = Files.createTempDirectory(s"graft_$name").toFile
-    dir.deleteOnExit()
-    s"${dir.getAbsolutePath}/t"
-  }
-
   /** One bucketed-table base dir per JVM (s15): collision-free across
     * concurrent JVMs, reused across invocations within one. */
   private lazy val s15Base: String =
-    Files.createTempDirectory("graft_s15").toString
+    Scratch.dir("s15").toString
 
   val all: Seq[Q] = Seq(
 
@@ -35,7 +29,7 @@ object Sinks {
         |  UNION ALL
         |  SELECT o_custkey FROM orders WHERE o_orderkey % 2 = 1)
         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin) { (s, d) =>
-      val path = scratch("s5")
+      val path = Scratch.table("s5")
       val o = t(s, d, "orders").select("o_orderkey", "o_custkey")
       TableStore.append(o.filter(col("o_orderkey") % 2 === 0), path)
       TableStore.append(o.filter(col("o_orderkey") % 2 === 1), path)
@@ -51,7 +45,7 @@ object Sinks {
       """SELECT c_mktsegment, count(*) AS n FROM customer
         |WHERE c_nationkey < 10
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, d) =>
-      val path = scratch("s6")
+      val path = Scratch.table("s6")
       val c = t(s, d, "customer")
       TableStore.overwrite(c.filter(col("c_nationkey") >= 10), path)
       TableStore.overwrite(c.filter(col("c_nationkey") < 10), path)
@@ -71,7 +65,7 @@ object Sinks {
         |  SELECT p_partkey, 'LATE-' || p_brand AS p_brand FROM part
         |  WHERE p_partkey > 1200 AND p_partkey <= 1600)
         |ORDER BY p_partkey""".stripMargin) { (s, d) =>
-      val path = scratch("s7")
+      val path = Scratch.table("s7")
       val p = t(s, d, "part").select("p_partkey", "p_brand")
       TableStore.overwrite(p.filter(col("p_partkey") <= 1200), path)
       // second batch overlaps 800..1200 (must NOT replace) and adds
@@ -98,7 +92,7 @@ object Sinks {
         |  SELECT o_custkey, o_orderkey FROM orders
         |  WHERE o_custkey <= 100 AND o_orderkey % 5 = 0)
         |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, d) =>
-      val path = scratch("s8")
+      val path = Scratch.table("s8")
       val o = t(s, d, "orders").select("o_custkey", "o_orderkey")
       TableStore.overwrite(o.filter(col("o_orderkey") % 3 =!= 0), path)
       // rebatch customers <= 100 with a different orderset: their old
@@ -118,8 +112,8 @@ object Sinks {
         |SELECT 'live' AS part, count(*) AS n FROM events
         |WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'
         |ORDER BY part""".stripMargin) { (s, d) =>
-      val path = scratch("s11_live")
-      val arch = scratch("s11_arch")
+      val path = Scratch.table("s11_live")
+      val arch = Scratch.table("s11_arch")
       TableStore.overwrite(t(s, d, "events"), path)
       TableStore.archiveOlderThan(s, path, arch, "ts",
         java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))
@@ -146,7 +140,7 @@ object Sinks {
          |WHERE cast(ts as date) >= DATE '2024-01-10'
          |  AND cast(ts as date) <= DATE '2024-01-20'
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      val path = scratch("s13")
+      val path = Scratch.table("s13")
       graft.operators.TableLayout.writeTimeSeries(
         t(s, d, "events"), path, "ts", "user_id")
       graft.operators.TableLayout.dayRange(s, path, "2024-01-10", "2024-01-20")
@@ -170,7 +164,7 @@ object Sinks {
         |       THEN o_orderpriority ELSE NULL END AS o_orderpriority
         |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.types.StructType
-      val path = scratch("s14")
+      val path = Scratch.table("s14")
       val ord = t(s, d, "orders")
       val cutoff = lit("1999-01-01 00:00:00").cast("timestamp")
       // v1 era: the table had two columns
@@ -200,7 +194,7 @@ object Sinks {
       s"""SELECT cast(ts as date) AS day, event_type, count(*) AS n,
          |  ${dsumSql("value")} AS total
          |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      val path = scratch("i2")
+      val path = Scratch.table("i2")
       val ev = t(s, d, "events").withColumn("day", to_date(col("ts")))
       val cut = lit("2024-01-20 00:00:00").cast("timestamp")
       def daily(df: org.apache.spark.sql.DataFrame) =
@@ -227,7 +221,7 @@ object Sinks {
       "watermark-incremental upsert equals the full recompute",
       """SELECT user_id, count(*) AS n, max(ts) AS last_ts
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      val path = scratch("i1")
+      val path = Scratch.table("i1")
       val ev = t(s, d, "events")
       val cut = lit("2024-01-15 00:00:00").cast("timestamp")
       def aggOf(df: org.apache.spark.sql.DataFrame) =
@@ -276,8 +270,8 @@ object Sinks {
          |  ${dsumSql("o_totalprice")} AS total
          |FROM v2 GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import graft.operators.Ivm
-      val path = scratch("i3")
-      val viewPath = scratch("i3_view")
+      val path = Scratch.table("i3")
+      val viewPath = Scratch.table("i3_view")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       // inserted rows take NEGATED keys: TPC-H keys are >= 1, so -k
@@ -351,11 +345,11 @@ object Sinks {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val pathA = scratch("i4_a")
-      val pathB = scratch("i4_b")
-      val foldA = scratch("i4_fa")
-      val foldB = scratch("i4_fb")
-      val viewPath = scratch("i4_view")
+      val pathA = Scratch.table("i4_a")
+      val pathB = Scratch.table("i4_b")
+      val foldA = Scratch.table("i4_fa")
+      val foldB = Scratch.table("i4_fb")
+      val viewPath = Scratch.table("i4_view")
       val a = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .cache()
@@ -455,7 +449,7 @@ object Sinks {
       // it collapses its whole stage — the FINAL HashAggregate over
       // every group ran in that one task, and its hash map is
       // O(custkeys) = linear in data (the 544 MB-peak task the r14
-      // memory gate flagged; StageMemProbe attributed it to this
+      // memory gate flagged; `Diag stages` attributed it to this
       // save stage, not the pre-tick sorts). orderBy pays one
       // range-sampling pass + an exchange of O(custkeys) skinny rows
       // and keeps both the aggregate and the sort at partition width.
@@ -493,8 +487,8 @@ object Sinks {
          |  max(o_totalprice) AS max_price
          |FROM v2 GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import graft.operators.Ivm
-      val path = scratch("i5")
-      val viewPath = scratch("i5_view")
+      val path = Scratch.table("i5")
+      val viewPath = Scratch.table("i5_view")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val edited = o.filter(col("o_orderkey") % 7 =!= 0)
@@ -552,8 +546,8 @@ object Sinks {
          |  count(*) AS n_rows
          |FROM v2 GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import graft.operators.Ivm
-      val path = scratch("i6")
-      val statePath = scratch("i6_state")
+      val path = Scratch.table("i6")
+      val statePath = Scratch.table("i6_state")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_orderpriority")
       val edited = o.filter(col("o_orderkey") % 7 =!= 0)
@@ -609,8 +603,8 @@ object Sinks {
          |SELECT o_custkey, rk, o_totalprice AS price, o_orderkey AS orderkey
          |FROM r WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin) { (s, d) =>
       import graft.operators.Ivm
-      val path = scratch("i7")
-      val viewPath = scratch("i7_view")
+      val path = Scratch.table("i7")
+      val viewPath = Scratch.table("i7_view")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val edited = o.filter(col("o_orderkey") % 7 =!= 0)
@@ -663,7 +657,7 @@ object Sinks {
         |FROM src LEFT JOIN t ON src.k = t.o_orderkey
         |WHERE t.o_orderkey IS NULL
         |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      val path = scratch("s27")
+      val path = Scratch.table("s27")
       val target = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       TableStore.overwrite(target, path)
@@ -695,7 +689,7 @@ object Sinks {
       "RESTORE publishes an old snapshot as current; bad version stays readable",
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_orderkey % 3 = 0 ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      val path = scratch("s28")
+      val path = Scratch.table("s28")
       val good = t(s, d, "orders")
         .filter(col("o_orderkey") % 3 === 0)
         .select("o_orderkey", "o_totalprice")
@@ -802,7 +796,7 @@ object Sinks {
       "16 accreted small files compacted to sorted few; content preserved",
       s"""SELECT event_type, count(*) AS n, ${dsumSql("value")} AS total
          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      val path = scratch("s17")
+      val path = Scratch.table("s17")
       val ev = t(s, d, "events")
       (0 until 8).foreach { i =>
         TableStore.append(ev.filter(col("event_id") % 8 === i).repartition(2), path)
@@ -837,7 +831,7 @@ object Sinks {
         |SELECT o_orderkey, o_orderpriority, DATE '2024-03-01', NULL
         |FROM orders WHERE o_orderkey % 6 = 0
         |ORDER BY o_orderkey, valid_from""".stripMargin) { (s, d) =>
-      val path = scratch("s18")
+      val path = Scratch.table("s18")
       val base = t(s, d, "orders").select(col("o_orderkey"),
         col("o_orderpriority").as("pri"))
       def day(x: String) = java.sql.Date.valueOf(x)
@@ -882,7 +876,7 @@ object Sinks {
         |SELECT CAST(2 AS BIGINT), r_regionkey, lower(r_name) FROM region
         |WHERE r_regionkey != 2
         |ORDER BY version, r_regionkey""".stripMargin) { (s, d) =>
-      val path = scratch("s19")
+      val path = Scratch.table("s19")
       val r = t(s, d, "region").select("r_regionkey", "r_name")
       val v1 = TableStore.publishVersion(s, path, r)
       val v2 = TableStore.publishVersion(s, path,
@@ -917,7 +911,7 @@ object Sinks {
          |  ${dsumSql("value")} AS total
          |FROM events JOIN dim ON cast(ts as date) = dim.d
          |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val path = scratch("s20")
+      val path = Scratch.table("s20")
       graft.operators.TableLayout.writeTimeSeries(
         t(s, d, "events"), path, "ts", "user_id")
       val dim = t(s, d, "events")
@@ -957,7 +951,7 @@ object Sinks {
         |  SELECT 'pending', o_orderstatus, o_totalprice FROM orders
         |  WHERE NOT (o_custkey % 7 = 0) AND NOT (o_totalprice > 300000))
         |GROUP BY stage, o_orderstatus ORDER BY stage, o_orderstatus""".stripMargin) { (s, d) =>
-      val path = scratch("s21")
+      val path = Scratch.table("s21")
       val keys = Seq("o_orderkey")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -997,7 +991,7 @@ object Sinks {
         |WHERE user_id BETWEEN 100 AND 199
         |  AND event_id BETWEEN 10000 AND 49999
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      val path = scratch("s22")
+      val path = Scratch.table("s22")
       graft.operators.TableLayout.writeZOrdered(
         t(s, d, "events").select("event_id", "user_id", "event_type", "value"),
         path, "user_id", "event_id", bits = 12, nFiles = 16)
@@ -1032,7 +1026,7 @@ object Sinks {
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       import graft.operators.SkippingIndex
       val ev = t(s, d, "events").select("event_id", "user_id", "event_type", "value")
-      val path = scratch("s23")
+      val path = Scratch.table("s23")
       graft.operators.TableLayout.writeZOrdered(
         ev, path, "user_id", "event_id", bits = 12, nFiles = 16)
       SkippingIndex.build(s, path, Seq("user_id", "event_id"))
@@ -1092,7 +1086,7 @@ object Sinks {
         |  FROM old o JOIN new n ON o.n_nationkey = n.n_nationkey
         |  WHERE o.n_name <> n.n_name OR o.n_regionkey <> n.n_regionkey)
         |SELECT * FROM chg ORDER BY n_nationkey, _change_type""".stripMargin) { (s, d) =>
-      val path = scratch("s24")
+      val path = Scratch.table("s24")
       val nation = t(s, d, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
       val v1 = TableStore.publishVersion(s, path, nation, note = "base")
@@ -1126,7 +1120,7 @@ object Sinks {
       """SELECT event_id, user_id, event_type, value
         |FROM events WHERE event_id = 421""".stripMargin) { (s, d) =>
       import graft.operators.SkippingIndex
-      val path = scratch("s25")
+      val path = Scratch.table("s25")
       t(s, d, "events").select("event_id", "user_id", "event_type", "value")
         .repartition(16, col("user_id"))
         .write.mode("overwrite").parquet(path)
@@ -1173,7 +1167,7 @@ object Sinks {
          |SELECT 'rule:' || reason, count(*), ${dsumSql("qty")}
          |FROM c WHERE reason != '' GROUP BY reason
          |ORDER BY metric""".stripMargin) { (s, d) =>
-      val path = scratch("s26")
+      val path = Scratch.table("s26")
       val qpath = path + "_quarantine"
       val li = t(s, d, "lineitem")
       val ords = t(s, d, "orders").select("o_orderkey")
@@ -1236,7 +1230,7 @@ object Sinks {
          |  AND (h.vt IS NULL OR cast(e.ts AS date) < h.vt)
          |WHERE e.event_type = 'purchase'
          |GROUP BY h.seg ORDER BY h.seg""".stripMargin) { (s, d) =>
-      val path = scratch("j17")
+      val path = Scratch.table("j17")
       val base = t(s, d, "customer").select(col("c_custkey"),
         col("c_mktsegment").as("seg"))
       def day(x: String) = java.sql.Date.valueOf(x)
@@ -1288,8 +1282,8 @@ object Sinks {
          |  AND cast(ts as date) <= DATE '2024-01-20'
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       import graft.operators.TableLayout
-      val dayPath = scratch("s29_day")
-      val monthPath = scratch("s29_month")
+      val dayPath = Scratch.table("s29_day")
+      val monthPath = Scratch.table("s29_month")
       val ev = t(s, d, "events")
       val cutoff = lit("2024-01-15 00:00:00").cast("timestamp")
       // pre-evolution history under the day spec; post-evolution
@@ -1331,7 +1325,7 @@ object Sinks {
          |  AND cast(ts as date) <= DATE '2024-01-20'
          |GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       import graft.operators.TableLayout
-      val root = scratch("s29b")
+      val root = Scratch.table("s29b")
       val ev = t(s, d, "events")
       val c1 = lit("2024-01-12 00:00:00").cast("timestamp")
       val c2 = lit("2024-01-18 00:00:00").cast("timestamp")
@@ -1371,7 +1365,7 @@ object Sinks {
       s"""SELECT c_mktsegment AS seg, count(*) + 110 AS n,
          |  3 AS n_commits
          |FROM customer GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val path = scratch("s30")
+      val path = Scratch.table("s30")
       val base = t(s, d, "customer").groupBy(col("c_mktsegment").as("seg"))
         .agg(count(lit(1)).as("n"))
       val v1 = TableStore.publishVersionIf(s, path, base, "base", None)
@@ -1419,8 +1413,8 @@ object Sinks {
       import graft.operators.Ivm
       import graft.plans.{MvCatalog, MvRewrite}
       MvRewrite.ensure(s)
-      val basePath = scratch("s31_base")
-      val viewPath = scratch("s31_view")
+      val basePath = Scratch.table("s31_base")
+      val viewPath = Scratch.table("s31_view")
       val base = t(s, d, "orders")
         .select("o_custkey", "o_orderstatus", "o_totalprice")
       val v1 = TableStore.publishVersion(s, basePath, base, note = "base")
@@ -1469,9 +1463,9 @@ object Sinks {
       import graft.operators.Ivm
       import graft.plans.{MvCatalog, MvRewrite}
       MvRewrite.ensure(s)
-      val basePath = scratch("s32_base")
-      val viewPath1 = scratch("s32_view1")
-      val viewPath2 = scratch("s32_view2")
+      val basePath = Scratch.table("s32_base")
+      val viewPath1 = Scratch.table("s32_view1")
+      val viewPath2 = Scratch.table("s32_view2")
       val base = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       // the i4 edit script: deletes, group-moving updates, inserts on
@@ -1533,9 +1527,9 @@ object Sinks {
       import graft.plans.{MvCatalog, MvRewrite}
       import org.apache.spark.sql.types.DecimalType
       MvRewrite.ensure(s)
-      val aPath = scratch("s33_a")
-      val bPath = scratch("s33_b")
-      val viewPath = scratch("s33_view")
+      val aPath = Scratch.table("s33_a")
+      val bPath = Scratch.table("s33_b")
+      val viewPath = Scratch.table("s33_view")
       val a = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val b = t(s, d, "lineitem")
@@ -1586,8 +1580,8 @@ object Sinks {
       import graft.operators.Ivm
       import graft.plans.{MvCatalog, MvRewrite}
       MvRewrite.ensure(s)
-      val basePath = scratch("s34_base")
-      val viewPath = scratch("s34_view")
+      val basePath = Scratch.table("s34_base")
+      val viewPath = Scratch.table("s34_view")
       val base = t(s, d, "orders")
         .select("o_custkey", "o_orderstatus", "o_totalprice")
       val v1 = TableStore.publishVersion(s, basePath, base, note = "base")
@@ -1635,9 +1629,9 @@ object Sinks {
         |UNION ALL
         |SELECT 'zz_conflict_detected', 1
         |ORDER BY 1""".stripMargin) { (s, d) =>
-      val mainPath = scratch("s35_main")
-      val b1 = scratch("s35_audit")
-      val b2 = scratch("s35_sibling")
+      val mainPath = Scratch.table("s35_main")
+      val b1 = Scratch.table("s35_audit")
+      val b2 = Scratch.table("s35_sibling")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       TableStore.publishVersion(s, mainPath,
@@ -1694,9 +1688,9 @@ object Sinks {
          |  cast(sum(cast(rev as decimal(30,2))) as double) AS revenue
          |FROM o1 JOIN r1 USING (o_orderkey)
          |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val ordPath = scratch("s37_orders")
-      val rollPath = scratch("s37_rollup")
-      val maniPath = scratch("s37_manifest")
+      val ordPath = Scratch.table("s37_orders")
+      val rollPath = Scratch.table("s37_rollup")
+      val maniPath = Scratch.table("s37_manifest")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val o1 = o.filter(col("o_orderkey") % 3 =!= 1)
@@ -1754,7 +1748,7 @@ object Sinks {
         |  CAST(0 AS BIGINT)
         |ORDER BY bucket""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.types.StructType
-      val dir = scratch("s38")
+      val dir = Scratch.table("s38")
       val docs = t(s, d, "documents")
         .select("doc_id", "lang", "source", "n_chars")
       // producer 1: well-formed JSONL
@@ -1812,7 +1806,7 @@ object Sinks {
          |UNION ALL SELECT '_corrupt', 5, CAST(NULL AS DOUBLE), NULL
          |ORDER BY bucket""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.types.StructType
-      val dir = scratch("s39")
+      val dir = Scratch.table("s39")
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice"),
@@ -1869,7 +1863,7 @@ object Sinks {
         |    AS n_missing
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.types.StructType
-      val dir = scratch("s40")
+      val dir = Scratch.table("s40")
       val docs = t(s, d, "documents")
         .select("doc_id", "lang", "source", "n_chars")
       // staged API responses: each file is one well-formed response
@@ -1927,7 +1921,7 @@ object Sinks {
         |   (SELECT count(*) FROM customer WHERE c_custkey % 4 = 2))
         |) AS t(version, note, kind, n_rows)
         |ORDER BY version""".stripMargin) { (s, d) =>
-      val path = scratch("s41")
+      val path = Scratch.table("s41")
       val c = t(s, d, "customer").select("c_custkey", "c_name")
       TableStore.publishVersion(s, path, c, note = "initial load")
       TableStore.publishVersion(s, path,
@@ -1964,7 +1958,7 @@ object Sinks {
          |  ${dsumSql("CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice * 2 ELSE o_totalprice END")}
          |FROM orders GROUP BY o_orderstatus
          |ORDER BY pin, o_orderstatus""".stripMargin) { (s, d) =>
-      val path = scratch("s42")
+      val path = Scratch.table("s42")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       val v2data = o.withColumn("o_totalprice",
@@ -2004,7 +1998,7 @@ object Sinks {
               "CASE WHEN cast(ts as date) BETWEEN DATE '2024-01-10' AND DATE '2024-01-12' " +
               "THEN value * 2 ELSE value END")} AS total
          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val path = scratch("s43")
+      val path = Scratch.table("s43")
       val e = t(s, d, "events")
       graft.operators.TableLayout.writeTimeSeries(e, path, "ts", "user_id")
       def files(day: String): Set[String] = {
@@ -2050,7 +2044,7 @@ object Sinks {
          |SELECT 'live', count(*), ${dsumSql("c_acctbal")}
          |FROM customer WHERE c_custkey % 4 <> 1
          |ORDER BY pin""".stripMargin) { (s, d) =>
-      val path = scratch("s44")
+      val path = Scratch.table("s44")
       val c = t(s, d, "customer").select("c_custkey", "c_acctbal")
       val v1 = TableStore.publishVersion(s, path, c, note = "baseline")
       TableStore.tag(s, path, "train-run-417", v1)
@@ -2091,7 +2085,7 @@ object Sinks {
          |  ${dsumSql("o_totalprice")} AS total
          |FROM orders WHERE o_totalprice > 100000
          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, d) =>
-      val path = scratch("s45")
+      val path = Scratch.table("s45")
       t(s, d, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").orc(path)
       val back = s.read
@@ -2134,7 +2128,7 @@ object Sinks {
          |UNION ALL SELECT 'update_postimage', cast(1 AS BIGINT)
          |UNION ALL SELECT 'update_preimage', cast(1 AS BIGINT)
          |ORDER BY kind""".stripMargin) { (s, d) =>
-      val path = scratch("s46")
+      val path = Scratch.table("s46")
       val c = t(s, d, "customer")
         .select("c_custkey", "c_name", "c_mktsegment")
       val v1df = c.filter(col("c_custkey") % 3 =!= 0)
@@ -2196,7 +2190,7 @@ object Sinks {
          |  CAST(NULL AS DOUBLE)
          |ORDER BY bucket""".stripMargin) { (s, d) =>
       import graft.operators.SkippingIndex
-      val path = scratch("s47")
+      val path = Scratch.table("s47")
       val ev = t(s, d, "events")
         .select("event_id", "user_id", "event_type", "value")
       // v1 = the even-event baseline, tagged; v2 = the full table.
@@ -2264,7 +2258,7 @@ object Sinks {
         |UNION ALL SELECT '_appended_rows',
         |  (SELECT count(*) FROM orders WHERE o_orderkey % 3 != 0)
         |ORDER BY bucket""".stripMargin) { (s, d) =>
-      val path = scratch("s48")
+      val path = Scratch.table("s48")
       val o = t(s, d, "orders").select("o_orderkey", "o_orderstatus")
       val v1 = TableStore.publishVersion(s, path,
         o.filter(col("o_orderkey") % 3 === 0), note = "day-1")
@@ -2321,7 +2315,7 @@ object Sinks {
         |  (SELECT count(*) FROM documents WHERE doc_id % 50 = 0),
         |  CAST(NULL AS BIGINT)
         |ORDER BY bucket""".stripMargin) { (s, d) =>
-      val path = scratch("s49")
+      val path = Scratch.table("s49")
       val docs = t(s, d, "documents").select("doc_id", "source", "n_chars")
       docs.repartitionByRange(8, col("source"), col("doc_id"))
         .write.format("graft-table").option("indexColumns", "source")
@@ -2382,7 +2376,7 @@ object Sinks {
          |  ${dsumSql("o_totalprice")} AS total
          |FROM orders WHERE o_orderkey % 15 != 0
          |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val path = scratch("s50")
+      val path = Scratch.table("s50")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       TableStore.publishFoldSnapshotDistinct(s, path,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 /** Sketch-family aggregates — the approximate operators a 100 TB
   * pipeline substitutes for their exact forms (SURVEY §2.4's A2/A14 at
@@ -175,11 +176,7 @@ object SketchOps {
         |       true AS fold_eq_bulk, true AS hll_ok
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
-      val path = {
-        val dir = java.nio.file.Files.createTempDirectory("graft_i8").toFile
-        dir.deleteOnExit()
-        s"${dir.getAbsolutePath}/t"
-      }
+      val path = Scratch.table("i8")
       val ev = t(s, d, "events").select("event_id", "event_type", "user_id")
       // three deterministic batches = three fold-chain versions of
       // per-group sketches (the absorb tick: one O(groups) publish)
@@ -235,7 +232,7 @@ object SketchOps {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
       import graft.streaming.{EventStream, JoinViewMaintenance}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st19")
+      val tmp = Scratch.dir("st19")
       val path = tmp.resolve("sketches").toString
       val ev = t(s, d, "events").select("event_id", "event_type", "user_id")
       def sketch(df: org.apache.spark.sql.DataFrame) =

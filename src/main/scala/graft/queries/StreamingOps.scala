@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.{QueryProfile, Scratch}
 import graft.functions.XSql
 import graft.functions.XSql.{Dialect, Spark => SqlSpark, Duck => SqlDuck}
 import graft.streaming.{EventStream, JoinViewMaintenance}
@@ -159,7 +160,7 @@ object StreamingOps {
          |  ${dsumSql("o_totalprice")} AS total
          |FROM v2 GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import graft.operators.{Ivm, TableStore}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st12")
+      val tmp = Scratch.dir("st12")
       val snaps = tmp.resolve("snap").toString
       val viewPath = tmp.resolve("view").toString
       // the same adversarial edit script as i3 (deletes, in-place and
@@ -253,7 +254,7 @@ object StreamingOps {
          |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import graft.operators.{Ivm, TableStore}
       import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st15")
+      val tmp = Scratch.dir("st15")
       val viewPath = tmp.resolve("view").toString
       // cached like b: feeds the v0 publish, the v0 view join, the
       // edit script and the changelog diff — four scans otherwise
@@ -278,14 +279,6 @@ object StreamingOps {
       // mid-tick crashes roll forward deterministically — see
       // JoinViewMaintenance; JoinViewResumeSpec crashes this loop
       // mid-tick and proves resume)
-      def phase[T](tag: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        if (sys.env.contains("GRAFT_TICK_COST"))
-          System.err.println(
-            f"[tick-cost] st15 phase=$tag ${(System.nanoTime() - t0) / 1e9}%.3f")
-        r
-      }
       val basePathA = tmp.resolve("base_a").toString
       val basePathB = tmp.resolve("base_b").toString
       // the producer states are O(100k) rows: 32-way shuffles price
@@ -304,7 +297,7 @@ object StreamingOps {
       val fInit = {
         import scala.concurrent.Future
         import scala.concurrent.ExecutionContext.Implicits.global
-        Future(phase("init")(JoinViewMaintenance.init(s, viewPath,
+        Future(QueryProfile.span("init")(JoinViewMaintenance.init(s, viewPath,
           basePathA, basePathB, a, b, Seq("o_orderkey"),
           // a is PK-keyed (o_orderkey), b is a groupBy product —
           // both one row per tuple, so v0 skips the canonical shuffle
@@ -359,7 +352,7 @@ object StreamingOps {
           lit(null).cast("long").as("o_custkey"),
           lit(null).cast("double").as("o_totalprice"),
           col("l_linenumber"), col("l_extendedprice"))
-      val stream = phase("diff-stage")(
+      val stream = QueryProfile.span("diff-stage")(
         EventStream.stagedFileStream(s, dA.unionByName(dB),
           tmp.resolve("stage").toString, nFiles = EventStream.ticks(3)))
       scala.concurrent.Await.result(fInit,
@@ -369,7 +362,7 @@ object StreamingOps {
       // the next tick's commits and before the final read below) —
       // the Delta async-checkpoint discipline; see AsyncCompactor
       val compactor = new JoinViewMaintenance.AsyncCompactor
-      phase("stream")(EventStream.runForeachBatch(s, stream,
+      QueryProfile.span("stream")(EventStream.runForeachBatch(s, stream,
         Some(tmp.resolve("ckpt").toString)) { (batch, batchId) =>
         val slice = batch.cache()
         try {
@@ -379,16 +372,15 @@ object StreamingOps {
             .select("o_orderkey", "l_linenumber", "_change_type", "l_extendedprice")
           JoinViewMaintenance.applyTick(s, viewPath, basePathA, basePathB,
             sa, sb, Seq("o_orderkey"), batchId,
-            onCost = c => if (sys.env.contains("GRAFT_TICK_COST"))
-              System.err.println(f"[tick-cost] st15 b=${c.batchId} " +
-                f"view=${c.viewSec}%.3f bases=${c.basesSec}%.3f " +
-                f"compact=${c.compactSec}%.3f"),
+            onCost = c => Seq("view" -> c.viewSec, "bases" -> c.basesSec,
+              "compact" -> c.compactSec).foreach { case (k, sec) =>
+              QueryProfile.record(s"$k-${c.batchId}", sec) },
             compactor = Some(compactor))
         } finally { slice.unpersist(); () }
       })
       // the last checkpoint may still be rewriting state: its
       // retention must not reclaim files the final scan plans
-      phase("drain")(compactor.drain())
+      QueryProfile.span("drain")(compactor.drain())
       def wsum(c: String) =
         sum(col(c).cast(DecimalType(30, 2)) * col("_mult")).cast(DoubleType)
       // aggregate the RAW signed chain: every sum here distributes
@@ -454,7 +446,7 @@ object StreamingOps {
       import graft.functions.XSql
       import graft.operators.{ConnectedComponents, Lsh, TableStore}
       implicit val dl: XSql.Dialect = XSql.Spark
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st16")
+      val tmp = Scratch.dir("st16")
       val labelsPath = tmp.resolve("labels").toString
       val sh = t(s, d, "documents")
         .withColumn("sh", expr(XSql.shinglesOfText("text")))
@@ -510,7 +502,7 @@ object StreamingOps {
          |SELECT o_custkey, rk, o_totalprice AS price, o_orderkey AS orderkey
          |FROM r WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin) { (s, d) =>
       import graft.operators.{Ivm, TableStore}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st17")
+      val tmp = Scratch.dir("st17")
       val basePath = tmp.resolve("base").toString
       val viewPath = tmp.resolve("view").toString
       val o = t(s, d, "orders")
@@ -655,7 +647,7 @@ object StreamingOps {
       s"""SELECT user_id, count(*) AS n, ${dsumSql("value")} AS total
          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st6")
+      val tmp = Scratch.dir("st6")
       val path = tmp.resolve("t").toString
       val stream = EventStream.stagedFileStream(s, t(s, d, "events"),
         tmp.resolve("stage").toString, nFiles = 3)
@@ -762,7 +754,7 @@ object StreamingOps {
       }) { (s, d) =>
       import graft.operators.{Lsh, TableStore}
       implicit val dl: Dialect = SqlSpark
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st7")
+      val tmp = Scratch.dir("st7")
       val bandStore = tmp.resolve("bands").toString
       val pairStore = tmp.resolve("pairs").toString
       val docs = t(s, d, "documents").select("doc_id", "text")
@@ -829,7 +821,7 @@ object StreamingOps {
       s"""SELECT user_id, count(*) AS n, ${dsumSql("value")} AS total
          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st9")
+      val tmp = Scratch.dir("st9")
       val path = tmp.resolve("t").toString
       val stage = tmp.resolve("stage").toString
       val events = t(s, d, "events")
@@ -869,7 +861,7 @@ object StreamingOps {
          |WHERE e.event_type = 'purchase'
          |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st11")
+      val tmp = Scratch.dir("st11")
       val snaps = tmp.resolve("dim").toString
       val out = tmp.resolve("out").toString
       val dim = t(s, d, "customer").select("c_custkey", "c_mktsegment")
@@ -922,7 +914,7 @@ object StreamingOps {
       s"""SELECT user_id, count(*) AS n, ${dsumSql("value")} AS total
          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st10")
+      val tmp = Scratch.dir("st10")
       val path = tmp.resolve("t").toString
       val snaps = tmp.resolve("snaps").toString
       val stream = EventStream.stagedFileStream(s, t(s, d, "events"),
@@ -970,7 +962,7 @@ object StreamingOps {
         | AND c.ts >= p.ts - INTERVAL 10 MINUTE AND c.ts <= p.ts
         |WHERE p.event_type = 'purchase'
         |ORDER BY purchase_id, click_id""".stripMargin) { (s, d) =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st8")
+      val tmp = Scratch.dir("st8")
       val ev = t(s, d, "events")
       def sentinel(day: String) = s.sql(
         s"""SELECT CAST(-1 AS BIGINT) AS event_id, CAST(-1 AS BIGINT) AS user_id,
@@ -1039,7 +1031,7 @@ object StreamingOps {
          |FROM c WHERE reason != '' GROUP BY reason
          |ORDER BY metric""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st13")
+      val tmp = Scratch.dir("st13")
       val clean = tmp.resolve("clean").toString
       val quar = tmp.resolve("quar").toString
       val snaps = tmp.resolve("snaps").toString
@@ -1095,7 +1087,7 @@ object StreamingOps {
       s"""SELECT user_id, count(*) AS n, ${dsumSql("value")} AS total
          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st14")
+      val tmp = Scratch.dir("st14")
       val stage = tmp.resolve("stage").toString
       val ckpt = tmp.resolve("ckpt").toString
       val out = tmp.resolve("out").toString
@@ -1149,7 +1141,7 @@ object StreamingOps {
       import graft.operators.{Ivm, TableStore}
       import graft.plans.{MvCatalog, MvRewrite}
       MvRewrite.ensure(s)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st20")
+      val tmp = Scratch.dir("st20")
       val basePath = tmp.resolve("base").toString
       val viewPath = tmp.resolve("view").toString
       val o = t(s, d, "orders")
@@ -1238,7 +1230,7 @@ object StreamingOps {
          |  ${dsumSql("value")} AS total
          |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       import graft.operators.{Ivm, TableStore}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st21")
+      val tmp = Scratch.dir("st21")
       val viewPath = tmp.resolve("view").toString
       val keys = Seq("day", "user_id")
       val ev = t(s, d, "events")
@@ -1320,7 +1312,7 @@ object StreamingOps {
         |  cast((SELECT sum(contrib) FROM k) as double) AS psi
         |FROM k ORDER BY bin""".stripMargin) { (s, d) =>
       import graft.operators.{Ivm, TableStore}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st22")
+      val tmp = Scratch.dir("st22")
       val refPath = tmp.resolve("ref").toString
       val histPath = tmp.resolve("hist").toString
       val o = t(s, d, "orders").select("o_orderkey", "o_totalprice")
@@ -1394,7 +1386,7 @@ object StreamingOps {
          |  0 AS n_inconsistent
          |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import graft.operators.{Ivm, TableStore}
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st23")
+      val tmp = Scratch.dir("st23")
       val basePath = tmp.resolve("base").toString
       val viewPath = tmp.resolve("view").toString
       val maniPath = tmp.resolve("manifest").toString
@@ -1463,7 +1455,7 @@ object StreamingOps {
         |ORDER BY bucket""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
       import org.apache.spark.sql.types.StructType
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st24")
+      val tmp = Scratch.dir("st24")
       val drop = tmp.resolve("drop").toString
       val corpusPath = tmp.resolve("corpus").toString
       val quarPath = tmp.resolve("quarantine").toString
@@ -1548,7 +1540,7 @@ object StreamingOps {
          |FROM cur GROUP BY o_custkey ORDER BY o_custkey""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
       import org.apache.spark.sql.types.DecimalType
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st25")
+      val tmp = Scratch.dir("st25")
       val base = tmp.resolve("base").toString
       val down = tmp.resolve("down").toString
       val o = t(s, d, "orders")
@@ -1630,7 +1622,7 @@ object StreamingOps {
          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
       import org.apache.spark.sql.types.DecimalType
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st26")
+      val tmp = Scratch.dir("st26")
       val bronze = tmp.resolve("bronze").toString
       val silver = tmp.resolve("silver").toString
       val gold = tmp.resolve("gold").toString
@@ -1722,7 +1714,7 @@ object StreamingOps {
       s"""SELECT event_type, count(*) AS n, ${dsumSql("value")} AS total
          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
       import graft.operators.TableStore
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st27")
+      val tmp = Scratch.dir("st27")
       val path = tmp.resolve("t").toString
       val stream = EventStream.stagedFileStream(s, t(s, d, "events"),
         tmp.resolve("stage").toString, nFiles = 4)

@@ -52,8 +52,8 @@ object EventStream {
     restageFileStream(spark, events.schema, stageDir)
   }
 
-  /** Tick-count knob for scale audits: `graft.state.ticks` (system
-    * property, or GRAFT_STATE_TICKS env) replays the same changelog
+  /** Tick-count knob for scale audits: the `graft.state.ticks` system
+    * property replays the same changelog
     * over that many micro-batches instead of a query's default —
     * tick-split invariance (IvmJoinSpec et al.) makes the maintained
     * result identical under any split, so only the per-tick cost
@@ -62,9 +62,7 @@ object EventStream {
     * compaction checkpoints.
     */
   def ticks(default: Int): Int =
-    sys.props.get("graft.state.ticks")
-      .orElse(sys.env.get("GRAFT_STATE_TICKS"))
-      .map(_.toInt).getOrElse(default)
+    sys.props.get("graft.state.ticks").map(_.toInt).getOrElse(default)
 
   /** Re-attach a one-file-per-micro-batch reader to an ALREADY-staged
     * dir — the crash-recovery replay shape (fresh checkpoint, same
@@ -209,42 +207,20 @@ object EventStream {
     spark.table(name)
   }
 
-  /** Per-tick wall capture for scale audits: when enabled,
-    * [[runForeachBatch]] times each micro-batch BODY (the maintenance
-    * work between offsets — delta compute, staged writes, commit
-    * markers, compaction submit) and records (batchId, seconds). This
-    * is the measurement behind the O(batch)-per-tick thesis: at 10×
-    * rows AND 10× ticks the per-tick batch is the same size while the
-    * accumulated state is 10× — a flat tick profile is the claim,
-    * measured (`ScaleAudit ticks`).
-    */
-  object TickWalls {
-    @volatile var enabled = false
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    def clear(): Unit = buf.synchronized { buf.clear() }
-    def record(batchId: Long, sec: Double): Unit =
-      buf.synchronized { buf += ((batchId, sec)); () }
-    def snapshot(): Seq[(Long, Double)] = buf.synchronized { buf.toList }
-  }
-
   /** Run a stream to completion through foreachBatch — the sink shape
     * for streaming incremental materialized views (each micro-batch
     * merges its delta into a stored table). Same state-partitioning
-    * discipline as [[runToMemory]].
+    * discipline as [[runToMemory]]. Each micro-batch body records as
+    * a [[graft.QueryProfile.tick]] span (`ScaleAudit ticks`' walls).
     */
   def runForeachBatch(spark: SparkSession, streamed: DataFrame,
       checkpoint: Option[String] = None)(
       fn: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit): Unit =
     withStreamConfs(spark) {
-      val timed: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        if (!TickWalls.enabled) fn
-        else (df, bid) => {
-          val t0 = System.nanoTime()
-          fn(df, bid)
-          TickWalls.record(bid, (System.nanoTime() - t0) / 1e9)
-        }
+      val ticked: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+        (df, bid) => graft.QueryProfile.tick(bid)(fn(df, bid))
       val base = streamed.writeStream
-        .foreachBatch(timed)
+        .foreachBatch(ticked)
         .trigger(Trigger.AvailableNow())
       // an explicit checkpoint makes the run RESUMABLE: a later run
       // with the same location continues from the committed offsets

@@ -386,13 +386,6 @@ object JoinViewMaintenance {
         .filterNot(_ == "_mult").toSeq
       val dView = Ivm.joinViewDelta(aPrev, bPrev, dA, dB, keys, viewCols)
         .withColumnRenamed("_dmult", "_mult")
-      // evidence seam: the probe plan is internal to the tick (never
-      // a catalog query's final frame), so the optimization-round
-      // plan dumps can only capture it here
-      if (sys.env.contains("GRAFT_EXPLAIN_TICK"))
-        System.err.println(s"[tick-plan] batch=$batchId\n" +
-          dView.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       Some(Future(TableStore.stageVersionData(spark, viewPath, dView)))
     } else None
     // base deltas stage CONCURRENTLY with the view compute: staging

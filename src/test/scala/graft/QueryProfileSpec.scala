@@ -1,0 +1,73 @@
+package graft
+
+import org.apache.spark.sql.functions._
+
+/** The profiling instrument: its Spark-side fields, its span recorder
+  * and its SQL plan capture.
+  */
+class QueryProfileSpec extends SparkSpec {
+
+  private def sortJob(n: Int): Unit =
+    spark.range(n).withColumn("k", col("id") % 97).orderBy(col("k"), col("id"))
+      .write.format("noop").mode("overwrite").save()
+
+  test("reset zeroes every field") {
+    val p = QueryProfile.attach(spark)
+    try {
+      sortJob(20000)
+      QueryProfile.record("x", 1.0)
+      p.drain()
+      assert(p.peakTaskMb > 0 && p.topStages(5).nonEmpty)
+      assert(p.plans.nonEmpty && p.spans.nonEmpty)
+      p.reset()
+      assert(p.peakTaskMb == 0.0 && p.spillMb == 0.0)
+      assert(p.topStages(5).isEmpty && p.plans.isEmpty && p.spans.isEmpty)
+      assert(p.tickWalls.isEmpty && !p.headroomFlag(32))
+    } finally p.detach()
+  }
+
+  test("topStages is ordered by max-task peak, heaviest first") {
+    val p = QueryProfile.attach(spark)
+    try {
+      sortJob(1000)
+      sortJob(200000)
+      spark.range(100).count()
+      p.drain()
+      val peaks = p.topStages(10).map(_.maxTaskPeakMb)
+      assert(peaks.size >= 2)
+      assert(peaks == peaks.sorted.reverse)
+      assert(p.topStages(1).map(_.maxTaskPeakMb) == peaks.take(1))
+      assert(peaks.head == p.peakTaskMb)
+    } finally p.detach()
+  }
+
+  test("a span is recorded only while a profile is attached") {
+    assert(QueryProfile.span("unattached")(41) + 1 == 42)
+    val p = QueryProfile.attach(spark)
+    try {
+      assert(QueryProfile.span("during")(7) == 7)
+      QueryProfile.record("tick-10", 3.0)
+      QueryProfile.tick(2L)(())
+      QueryProfile.record("view-2", 0.5)
+    } finally p.detach()
+    QueryProfile.span("after")(())
+    QueryProfile.record("tick-3", 9.0)
+    assert(p.spans.map(_._1) == Seq("during", "tick-10", "tick-2", "view-2"))
+    // tick walls in batch order, not record order; other tags excluded
+    val walls = p.tickWalls
+    assert(walls.size == 2 && walls(1) == 3.0)
+  }
+
+  test("the SQL plans of a two-action job are captured in order") {
+    val p = QueryProfile.attach(spark)
+    try {
+      p.reset()
+      spark.range(7).select(col("id").as("first_action")).collect()
+      spark.range(9).select((col("id") * 2).as("second_action")).collect()
+      val plans = p.plans
+      assert(plans.size == 2, plans.mkString("\n----\n"))
+      assert(plans(0).contains("first_action") && !plans(0).contains("second_action"))
+      assert(plans(1).contains("second_action"))
+    } finally p.detach()
+  }
+}
