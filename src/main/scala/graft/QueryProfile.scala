@@ -21,7 +21,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *     peakExecutionMemory (the unified-memory charge of its joins /
   *     aggs / sorts). The scale contract of a well-partitioned
   *     operator is that this stays bounded by the PARTITION size,
-  *     not the data size. `topStages` names the stages behind it.
+  *     not the data size. `topStages` names the stages behind it by
+  *     the SQL query each one ran for.
   *   - `spillMb`      — total disk spill: nonzero means the memory
   *     manager already ran out of headroom and the query survived by
   *     spilling (time keeps scaling, but the cliff is near).
@@ -45,9 +46,20 @@ final class QueryProfile private (sc: SparkContext) extends SparkListener {
   private val stagePeaks = new ConcurrentHashMap[Int, (Int, Long)]()
   private val planQ = new ConcurrentLinkedQueue[String]()
   private val spanQ = new ConcurrentLinkedQueue[(String, Double)]()
+  private val execNames = new ConcurrentHashMap[Long, String]()
+
+  /** A SQL query's stages are named after its execution: its job group,
+    * then its description (the job description or the action's call
+    * site). Under AQE Spark names most stages after the future that
+    * submits them, which says nothing about the query. */
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .flatMap(id => Option(execNames.get(id.toLong)))
+      .foreach(name => j.stageIds.foreach(stageNames.putIfAbsent(_, name)))
+  }
 
   override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-    stageNames.put(s.stageInfo.stageId,
+    stageNames.putIfAbsent(s.stageInfo.stageId,
       Option(s.stageInfo.name).getOrElse("?")); ()
   }
 
@@ -62,13 +74,15 @@ final class QueryProfile private (sc: SparkContext) extends SparkListener {
   }
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-    case s: SparkListenerSQLExecutionStart => planQ.add(s.physicalPlanDescription); ()
+    case s: SparkListenerSQLExecutionStart =>
+      execNames.put(s.executionId, s.jobGroupId.fold(s.description)(g => s"$g: ${s.description}"))
+      planQ.add(s.physicalPlanDescription); ()
     case _ => ()
   }
 
   def reset(): Unit = {
     peakTask.set(0); spilled.set(0)
-    stageNames.clear(); stagePeaks.clear(); planQ.clear(); spanQ.clear()
+    stageNames.clear(); stagePeaks.clear(); execNames.clear(); planQ.clear(); spanQ.clear()
   }
 
   /** Waits until every event posted so far has reached this listener. */

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The reference's four write disciplines over partitioned parquet
   * (SURVEY.md §2.1 S5-S12, §2.10 I1):
@@ -29,7 +30,57 @@ import org.apache.spark.sql.functions._
   */
 object TableStore {
 
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  /** The table at `path`, with its schema read on the driver from the
+    * Spark schema Spark's parquet writer keeps in each file's footer —
+    * the table's own metadata, as a Delta reader takes it from the log
+    * — so a read runs no Spark job (schema inference runs one per
+    * read). The footer is that of the file inference would open: the
+    * first data file by path. A plain `spark.read.parquet`, errors
+    * included, when that footer has no Spark schema, with
+    * `spark.sql.parquet.mergeSchema` on, or when the path holds no data
+    * file (missing, empty, or a non-parquet file).
+    */
+  def read(spark: SparkSession, path: String): DataFrame = readParquet(spark, Seq(path))
+
+  private def readParquet(spark: SparkSession, paths: Seq[String]): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else scala.util.Try {
+      val files = paths.flatMap(p => leafFiles(fs(spark, p), new Path(p)))
+      // summary files take precedence in inference; leave those to Spark
+      if (files.exists(f => isSummary(f.getPath.getName))) None
+      else files.minByOption(_.getPath.toString).flatMap { first =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first,
+            spark.sparkContext.hadoopConfiguration))
+        val json = try r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+          finally r.close()
+        Option(json).map(DataType.fromJson).collect { case s: StructType => s }
+      }
+    }.getOrElse(None)
+
+  /** The files Spark's file index lists under `p`: hidden names (`_x`
+    * unless a `k=v` partition, `.x`, in-flight copies) are skipped,
+    * except the parquet summary files.
+    */
+  private def leafFiles(f: FileSystem, p: Path): Seq[FileStatus] = {
+    def hidden(n: String) = !isSummary(n) &&
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else f.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    walk(f.getFileStatus(p))
+  }
+
+  private def isSummary(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
 
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
@@ -1005,11 +1056,12 @@ object TableStore {
   /** Read a pinned version (reproducible training runs) or the live
     * one. Fails loudly on a version that was never committed (orphan
     * dirs from crashed publishes have no marker) or whose data was
-    * dropped by retention.
+    * dropped by retention. The schema comes from a footer, as in
+    * [[read]], with the chain's directories taken together.
     */
   def readVersion(spark: SparkSession, path: String,
       version: Option[Long] = None): DataFrame =
-    spark.read.parquet(snapshotDataDirs(spark, path, version): _*)
+    readParquet(spark, snapshotDataDirs(spark, path, version))
 
   /** Resolve a snapshot's single DATA DIRECTORY — the common case for
     * full-snapshot / CAS commits. Fails loudly on an append-chain

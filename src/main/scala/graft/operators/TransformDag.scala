@@ -5,12 +5,19 @@ import org.apache.spark.sql.DataFrame
 /** Topologically-executed DAG of named DataFrame transforms — the
   * Dataform model graph (SURVEY §3.2: compile → plan → execute,
   * lineage in docs/lineage.md) as a library. Each node sees the
-  * outputs of its dependencies; the runner resolves order, rejects
-  * cycles and missing refs, and runs every node exactly once.
+  * outputs of its dependencies (and the sources); the runner resolves
+  * order, rejects cycles and missing refs, and runs every node exactly
+  * once, each as soon as its dependencies are built.
   *
-  * Execution stays lazy: "running" a node builds its DataFrame; no
-  * action is triggered unless a node itself materializes (the
-  * incremental sinks in [[TableStore]] do, mirroring per-model jobs).
+  * A node another node reads is computed once: its frame is a lazy
+  * local checkpoint, so the first action over it stores its rows and
+  * every later reader reads them instead of re-running its lineage
+  * (with AQE on, the node's shuffle stages run while `run` builds it).
+  * The stored blocks are released by Spark's ContextCleaner once the
+  * returned frames are unreachable. A node no other node reads stays a
+  * plain lazy frame; no action is triggered unless a node itself
+  * materializes (the incremental sinks in [[TableStore]] do, mirroring
+  * per-model jobs).
   */
 object TransformDag {
 
@@ -19,28 +26,29 @@ object TransformDag {
 
   /** Returns every node's output, keyed by name. */
   def run(nodes: Seq[Node], sources: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
     val byName = nodes.map(n => n.name -> n).toMap
     require(byName.size == nodes.size, "duplicate node names")
-    val done = scala.collection.mutable.Map[String, DataFrame]() ++ sources
-    val visiting = scala.collection.mutable.Set[String]()
-
-    def visit(name: String): DataFrame = {
-      done.get(name) match {
-        case Some(df) => df
-        case None =>
-          val node = byName.getOrElse(name,
-            throw new IllegalArgumentException(s"unknown ref: $name"))
-          require(visiting.add(name), s"cycle through $name")
-          val inputs = node.deps.map(d => d -> visit(d)).toMap
-          visiting.remove(name)
-          val out = node.build(inputs ++ done)
-          done(name) = out
-          out
+    val shared = nodes.flatMap(_.deps).toSet
+    shared.find(d => !byName.contains(d) && !sources.contains(d))
+      .foreach(d => throw new IllegalArgumentException(s"unknown ref: $d"))
+    val order = topoOrder(nodes).filterNot(sources.contains)
+    // every node starts once its dependencies are built, so independent
+    // nodes (and their pinned shuffle stages) build side by side
+    val built = scala.collection.mutable.Map[String, Future[DataFrame]]() ++
+      sources.map { case (n, df) => n -> Future.successful(df) }
+    order.foreach { name =>
+      val node = byName(name)
+      built(name) = Future.traverse(node.deps)(d => built(d).map(d -> _)).map { ins =>
+        val out = node.build(sources ++ ins)
+        if (shared(name)) out.localCheckpoint(eager = false) else out
       }
     }
-
-    nodes.foreach(n => visit(n.name))
-    done.toMap
+    // a failed node fails only after every other node has stopped
+    built.values.foreach(Await.ready(_, Duration.Inf))
+    built.map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
   }
 
   /** Dependency-ordered node names (for reporting / dry runs). */

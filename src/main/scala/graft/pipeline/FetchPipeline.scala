@@ -19,7 +19,10 @@ import graft.parse.{BggParser, Flatten, ProcessedGame}
   *   - stale-lease cleanup by timestamp predicate (P7, I3)
   *   - tracking rows appended per batch (S9, I2)
   *   - processing reads raw ∖ processed, dedups to latest per game
-  *     (W1) and loads with the per-table write disciplines (S5-S8)
+  *     (W1), parses each payload once and loads with the per-table
+  *     write disciplines (S5-S8): the 20 idempotent dimension and
+  *     per-game writes side by side, then the two time-series appends,
+  *     then the processed ledger
   *
   * All queue state lives in parquet tables under `root`; no driver
   * collections except the claimed id batch itself (which is bounded
@@ -120,7 +123,10 @@ final class FetchPipeline(
   /** One process batch (response_processor.py:150-280): unprocessed =
     * raw ∖ processed ledger, dedup to latest response per game (W1),
     * parse on executors, flatten, load with the per-table disciplines,
-    * mark processed.
+    * mark processed. Each payload is parsed once: the ledger's
+    * processed rows are the parsed games [[Flatten.toTables]] cached.
+    * A failed load throws before any ledger row lands, so the next
+    * batch takes the same payloads again.
     */
   def processBatch(now: java.sql.Timestamp): Int = {
     val raw = readOr("raw_responses", emptyRaw)
@@ -130,47 +136,55 @@ final class FetchPipeline(
     val latest = pending.groupBy("game_id")
       .agg(max(struct(col("fetch_timestamp"), col("response_data"))).as("m"))
       .select(col("game_id"), col("m.response_data").as("response_data"))
-    val games = latest.as[(Long, String)]
+    val ok = latest.as[(Long, String)]
       .map { case (id, json) =>
         BggParser.processGame(id, json, "boardgame", now)
       }
-    val ok = games.filter(_.isDefined).map(_.get).as[ProcessedGame]
-    val okCount = loadTables(ok)
-    val statuses = games.map {
-      case Some(g) => (g.game_id, "processed")
-      case None => (-1L, "parse_error")
-    }.filter(_._1 >= 0)
-      .map { case (id, st) => (id, now, st) }
-      .toDF("game_id", "process_timestamp", "status")
-    // parse failures also enter the ledger so they are not retried
-    // forever (reference marks parse_error, processor.py + I5)
-    val failed = latest.select("game_id")
-      .join(statuses.select("game_id"), Seq("game_id"), "left_anti")
-      .select(col("game_id"), lit(now).as("process_timestamp"),
-        lit("parse_error").as("status"))
-    TableStore.append(statuses.unionByName(failed), p("processed_responses"))
-    // Flatten.toTables cached the parsed games; with the ledger rows
-    // landed they are done, else every batch stays in storage for good
-    ok.unpersist()
-    okCount
+      .filter(_.isDefined).map(_.get).as[ProcessedGame]
+    // Flatten.toTables caches the parsed games; once the ledger rows
+    // land (or the load fails) they are done, else every batch stays
+    // in storage for good
+    try {
+      val okCount = loadTables(ok)
+      val statuses = ok.select(col("game_id"), lit(now).as("process_timestamp"),
+        lit("processed").as("status"))
+      // parse failures also enter the ledger so they are not retried
+      // forever (reference marks parse_error, processor.py + I5)
+      val failed = latest.select("game_id")
+        .join(statuses.select("game_id"), Seq("game_id"), "left_anti")
+        .select(col("game_id"), lit(now).as("process_timestamp"),
+          lit("parse_error").as("status"))
+      TableStore.append(statuses.unionByName(failed), p("processed_responses"))
+      okCount
+    } finally ok.unpersist()
   }
 
   /** Load the 22 flattened tables with the reference's per-table write
     * disciplines (loader.py:199-265): dimensions merge-if-absent,
     * bridges and per-game tables delete+insert, time-series append.
+    *
+    * The 20 merge and delete+insert writes are idempotent and touch
+    * distinct tables, so they run side by side, and all of them finish
+    * before the two appends start: a failed write throws before any
+    * time-series row lands, and a retry of the batch lands each game's
+    * history once.
     */
   private def loadTables(games: org.apache.spark.sql.Dataset[ProcessedGame]): Int = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
     val tables = Flatten.toTables(games)
     val n = tables("games").count()
     if (n == 0) return 0
-    Flatten.EntityKinds.foreach { case (kind, idCol) =>
-      TableStore.insertIfAbsent(spark, p(s"core/$kind"), tables(kind), Seq(idCol))
-      TableStore.deleteInsert(spark, p(s"core/game_$kind"), tables(s"game_$kind"), Seq("game_id"))
-    }
-    Seq("alternate_names", "player_counts", "language_dependence", "suggested_ages")
-      .foreach { t =>
-        TableStore.deleteInsert(spark, p(s"core/$t"), tables(t), Seq("game_id"))
-      }
+    val idempotent = Flatten.EntityKinds.flatMap { case (kind, idCol) =>
+      Seq(
+        Future(TableStore.insertIfAbsent(spark, p(s"core/$kind"), tables(kind), Seq(idCol))),
+        Future(TableStore.deleteInsert(spark, p(s"core/game_$kind"), tables(s"game_$kind"),
+          Seq("game_id"))))
+    } ++ Seq("alternate_names", "player_counts", "language_dependence", "suggested_ages")
+      .map(t => Future(TableStore.deleteInsert(spark, p(s"core/$t"), tables(t), Seq("game_id"))))
+    idempotent.foreach(Await.ready(_, Duration.Inf))
+    idempotent.foreach(Await.result(_, Duration.Inf))
     Seq("games", "rankings").foreach { t =>
       TableStore.append(tables(t), p(s"core/$t"))
     }

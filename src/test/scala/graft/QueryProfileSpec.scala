@@ -70,4 +70,29 @@ class QueryProfileSpec extends SparkSpec {
       assert(plans(1).contains("second_action"))
     } finally p.detach()
   }
+
+  test("under AQE each stage carries its own query's name") {
+    val sc = spark.sparkContext
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val p = QueryProfile.attach(spark)
+    try {
+      p.reset()
+      sc.setJobDescription("profile-query-alpha")
+      sortJob(30000)
+      sc.setJobGroup("profile-group", "grouped", interruptOnCancel = false)
+      sc.setJobDescription("profile-query-beta")
+      spark.range(30000).groupBy((col("id") % 13).as("k")).count()
+        .write.format("noop").mode("overwrite").save()
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      p.drain()
+      val names = p.topStages(100).map(_.name)
+      assert(names.toSet == Set("profile-query-alpha", "profile-group: profile-query-beta"),
+        names.mkString("\n"))
+      assert(names.count(_ == "profile-query-alpha") >= 2, names)
+      assert(names.count(_.endsWith("profile-query-beta")) >= 2, names)
+    } finally {
+      sc.clearJobGroup(); sc.setJobDescription(null); p.detach()
+    }
+  }
 }

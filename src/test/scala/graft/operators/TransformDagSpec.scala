@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.{SparkSpec, TestSpark}
 import graft.operators.TransformDag.{Node, topoOrder}
 
@@ -39,5 +42,53 @@ class TransformDagSpec extends SparkSpec {
       Node("z", Seq("y"), ins => ins("y")),
       Node("y", Nil, _ => df(1)))
     assert(topoOrder(nodes) == Seq("y", "z"))
+  }
+
+  // "base" feeds two dependents, which both feed "top"
+  private def diamond(base: => DataFrame) = Seq(
+    Node("base", Nil, _ => base),
+    Node("evens", Seq("base"), ins => ins("base").filter(col("x") % 2 === 0)),
+    Node("tens", Seq("base"), ins => ins("base").withColumn("x", col("x") * 10)),
+    Node("top", Seq("evens", "tens"), ins => ins("evens").unionByName(ins("tens"))))
+
+  private def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+  test("a node two nodes read runs its body's rows once") {
+    import TestSpark.spark.implicits._
+    val seen = spark.sparkContext.longAccumulator("base rows")
+    val out = TransformDag.run(diamond(
+      spark.range(1, 101).as[Long].map { x => seen.add(1); x }.toDF("x")))
+    Seq("evens", "tens", "top", "base").foreach(n =>
+      out(n).write.format("noop").mode("overwrite").save())
+    assert(seen.value == 100L)
+  }
+
+  test("outputs equal the lazy build of the same transforms") {
+    val out = TransformDag.run(diamond(df(50)))
+    val base = df(50)
+    val evens = base.filter(col("x") % 2 === 0)
+    val tens = base.withColumn("x", col("x") * 10)
+    val lazyBuild = Map("base" -> base, "evens" -> evens, "tens" -> tens,
+      "top" -> evens.unionByName(tens))
+    for ((n, want) <- lazyBuild) assert(rows(out(n)) == rows(want), n)
+  }
+
+  test("no persisted RDD outlives the result") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def runAndRead(): Set[Int] = {
+      val out = TransformDag.run(diamond(df(40)))
+      assert(out("top").count() == 60L)
+      sc.getPersistentRDDs.keySet.diff(before).toSet
+    }
+    val pinned = runAndRead()
+    assert(pinned.nonEmpty, "the shared nodes were not pinned")
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (sc.getPersistentRDDs.keySet.exists(pinned) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    val left = sc.getPersistentRDDs.keySet.intersect(pinned)
+    assert(left.isEmpty, s"persisted RDDs $left outlived the DAG's frames")
   }
 }

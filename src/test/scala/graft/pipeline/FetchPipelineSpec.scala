@@ -22,7 +22,9 @@ class FetchPipelineSpec extends SparkSpec {
        |    {"@type": "boardgamecategory", "@id": "100", "@value": "Strategy"},
        |    {"@type": "boardgamedesigner", "@id": "7", "@value": "Designer A"}],
        |  "statistics": {"ratings": {"average": {"@value": "7.0"},
-       |    "usersrated": {"@value": "10"}}}
+       |    "usersrated": {"@value": "10"},
+       |    "ranks": {"rank": {"@type": "subtype", "@name": "boardgame",
+       |      "@friendlyname": "Board Game Rank", "@value": "$id", "@bayesaverage": "6.5"}}}}
        |}}}""".stripMargin
 
   private def mkPipeline(fetchFn: Seq[Long] => Seq[FetchPipeline.Fetched]) = {
@@ -98,6 +100,64 @@ class FetchPipelineSpec extends SparkSpec {
     pipe.fetchBatch(ts("2026-01-02 00:00:00"))
     assert(pipe.processBatch(ts("2026-01-02 00:00:00")) == 1)
     assert(cache.isEmpty, "a cached relation outlived processBatch")
+  }
+
+  private def ledger(root: String) =
+    TestSpark.spark.read.parquet(s"$root/processed_responses").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2))).toSet
+
+  test("the ledger marks each pending payload once: processed or parse_error") {
+    import TestSpark.spark.implicits._
+    val root = Files.createTempDirectory("graft_pipe").toString
+    val pipe = new FetchPipeline(TestSpark.spark, root, ids => ids.map {
+      case 32L => FetchPipeline.Fetched(32L, "not json", success = true)
+      case id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true)
+    }, batchSize = 10, chunkSize = 2)
+    pipe.seedIds(Seq(31L, 32L, 33L).toDF("game_id"))
+    val t0 = ts("2026-01-01 00:00:00")
+    assert(pipe.fetchBatch(t0) == 3)
+    assert(pipe.processBatch(t0) == 2)
+    assert(ledger(root) == Set((31L, t0, "processed"), (32L, t0, "parse_error"),
+      (33L, t0, "processed")))
+    // a second batch finds nothing pending and adds no ledger row
+    assert(pipe.processBatch(ts("2026-01-01 01:00:00")) == 0)
+    assert(ledger(root).size == 3)
+    deleteRecursively(new java.io.File(root))
+  }
+
+  test("a failed core-table write lands no history and no ledger row; the retry lands each game once") {
+    import TestSpark.spark.implicits._
+    val root = Files.createTempDirectory("graft_pipe").toString
+    val pipe = new FetchPipeline(TestSpark.spark, root,
+      ids => ids.map(id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true)),
+      batchSize = 10, chunkSize = 2)
+    val t0 = ts("2026-01-01 00:00:00")
+    pipe.seedIds(Seq(41L).toDF("game_id"))
+    pipe.fetchBatch(t0)
+    assert(pipe.processBatch(t0) == 1)
+    // the next batch's game_mechanics write fails: a file holds its place
+    val blocker = new java.io.File(s"$root/core/game_mechanics")
+    deleteRecursively(blocker)
+    Files.write(blocker.toPath, "not a table".getBytes("UTF-8"))
+    pipe.seedIds(Seq(42L, 43L).toDF("game_id"))
+    val t1 = ts("2026-01-02 00:00:00")
+    pipe.fetchBatch(t1)
+    val sizes = Seq("core/games", "core/rankings", "processed_responses")
+      .map(t => t -> TestSpark.spark.read.parquet(s"$root/$t").count())
+    intercept[Exception](pipe.processBatch(t1))
+    for ((t, n) <- sizes)
+      assert(TestSpark.spark.read.parquet(s"$root/$t").count() == n, s"$t gained rows")
+    // mend the table and rerun: each game lands exactly once
+    assert(blocker.delete())
+    assert(pipe.processBatch(ts("2026-01-02 01:00:00")) == 2)
+    for (t <- Seq("games", "rankings")) {
+      val perGame = pipe.core(t).groupBy("game_id").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(perGame == Map(41L -> 1L, 42L -> 1L, 43L -> 1L), t)
+    }
+    assert(ledger(root).map(_._1) == Set(41L, 42L, 43L))
+    assert(pipe.processBatch(ts("2026-01-02 02:00:00")) == 0)
+    deleteRecursively(new java.io.File(root))
   }
 
   test("refresh policy: age bands + null-year + in-progress exclusion") {
