@@ -53,34 +53,28 @@ object TableStore {
   private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
     if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
     else scala.util.Try {
-      val files = paths.flatMap(p => leafFiles(fs(spark, p), new Path(p)))
-      // summary files take precedence in inference; leave those to Spark
-      if (files.exists(f => isSummary(f.getPath.getName))) None
-      else files.minByOption(_.getPath.toString).flatMap { first =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first,
-            spark.sparkContext.hadoopConfiguration))
-        val json = try r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-          finally r.close()
-        Option(json).map(DataType.fromJson).collect { case s: StructType => s }
-      }
+      paths.flatMap(p => leafFiles(fs(spark, p), new Path(p)))
+        .minByOption(_.getPath.toString).flatMap { first =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first,
+              spark.sparkContext.hadoopConfiguration))
+          val json = try r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+            finally r.close()
+          Option(json).map(DataType.fromJson).collect { case s: StructType => s }
+        }
     }.getOrElse(None)
 
   /** The files Spark's file index lists under `p`: hidden names (`_x`
-    * unless a `k=v` partition, `.x`, in-flight copies) are skipped,
-    * except the parquet summary files.
+    * unless a `k=v` partition, `.x`, in-flight copies) are skipped.
     */
   private def leafFiles(f: FileSystem, p: Path): Seq[FileStatus] = {
-    def hidden(n: String) = !isSummary(n) &&
-      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
     def walk(st: FileStatus): Seq[FileStatus] =
       if (!st.isDirectory) Seq(st)
       else f.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
     walk(f.getFileStatus(p))
   }
-
-  private def isSummary(name: String): Boolean =
-    name.startsWith("_metadata") || name.startsWith("_common_metadata")
 
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))

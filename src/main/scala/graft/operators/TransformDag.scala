@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Topologically-executed DAG of named DataFrame transforms — the
   * Dataform model graph (SURVEY §3.2: compile → plan → execute,
@@ -17,7 +17,8 @@ import org.apache.spark.sql.DataFrame
   * returned frames are unreachable. A node no other node reads stays a
   * plain lazy frame; no action is triggered unless a node itself
   * materializes (the incremental sinks in [[TableStore]] do, mirroring
-  * per-model jobs).
+  * per-model jobs). Nodes build on pool threads under the caller's job
+  * group and description ([[CallerJobs]]).
   */
 object TransformDag {
 
@@ -35,6 +36,7 @@ object TransformDag {
     shared.find(d => !byName.contains(d) && !sources.contains(d))
       .foreach(d => throw new IllegalArgumentException(s"unknown ref: $d"))
     val order = topoOrder(nodes).filterNot(sources.contains)
+    val inCaller = new CallerJobs(SparkSession.active.sparkContext)
     // every node starts once its dependencies are built, so independent
     // nodes (and their pinned shuffle stages) build side by side
     val built = scala.collection.mutable.Map[String, Future[DataFrame]]() ++
@@ -42,8 +44,10 @@ object TransformDag {
     order.foreach { name =>
       val node = byName(name)
       built(name) = Future.traverse(node.deps)(d => built(d).map(d -> _)).map { ins =>
-        val out = node.build(sources ++ ins)
-        if (shared(name)) out.localCheckpoint(eager = false) else out
+        inCaller {
+          val out = node.build(sources ++ ins)
+          if (shared(name)) out.localCheckpoint(eager = false) else out
+        }
       }
     }
     // a failed node fails only after every other node has stopped

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.TableStore
+import graft.operators.{CallerJobs, TableStore}
 import graft.parse.{BggParser, Flatten, ProcessedGame}
 
 /** The batch-ingest lifecycle (SURVEY §3.1, §2.10 I2-I4): work-queue
@@ -167,7 +167,8 @@ final class FetchPipeline(
     * distinct tables, so they run side by side, and all of them finish
     * before the two appends start: a failed write throws before any
     * time-series row lands, and a retry of the batch lands each game's
-    * history once.
+    * history once. Each write runs under the caller's job group and
+    * description, so its jobs are attributed to this batch.
     */
   private def loadTables(games: org.apache.spark.sql.Dataset[ProcessedGame]): Int = {
     import scala.concurrent.{Await, Future}
@@ -176,13 +177,15 @@ final class FetchPipeline(
     val tables = Flatten.toTables(games)
     val n = tables("games").count()
     if (n == 0) return 0
+    val inCaller = new CallerJobs(spark.sparkContext)
+    def write(body: => Unit): Future[Unit] = Future(inCaller(body))
     val idempotent = Flatten.EntityKinds.flatMap { case (kind, idCol) =>
       Seq(
-        Future(TableStore.insertIfAbsent(spark, p(s"core/$kind"), tables(kind), Seq(idCol))),
-        Future(TableStore.deleteInsert(spark, p(s"core/game_$kind"), tables(s"game_$kind"),
+        write(TableStore.insertIfAbsent(spark, p(s"core/$kind"), tables(kind), Seq(idCol))),
+        write(TableStore.deleteInsert(spark, p(s"core/game_$kind"), tables(s"game_$kind"),
           Seq("game_id"))))
     } ++ Seq("alternate_names", "player_counts", "language_dependence", "suggested_ages")
-      .map(t => Future(TableStore.deleteInsert(spark, p(s"core/$t"), tables(t), Seq("game_id"))))
+      .map(t => write(TableStore.deleteInsert(spark, p(s"core/$t"), tables(t), Seq("game_id"))))
     idempotent.foreach(Await.ready(_, Duration.Inf))
     idempotent.foreach(Await.result(_, Duration.Inf))
     Seq("games", "rankings").foreach { t =>

@@ -95,4 +95,34 @@ class QueryProfileSpec extends SparkSpec {
       sc.clearJobGroup(); sc.setJobDescription(null); p.detach()
     }
   }
+
+  test("stages TransformDag.run starts carry the caller's job group") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import graft.operators.TransformDag
+    import graft.operators.TransformDag.Node
+    val sc = spark.sparkContext
+    // pool threads started now keep this group: work run on them would
+    // carry it instead of the caller's
+    sc.setJobGroup("stale-group", "stale", interruptOnCancel = false)
+    Await.ready(Future.traverse(1 to 16)(_ => Future(Thread.sleep(20))), Duration.Inf)
+    val p = QueryProfile.attach(spark)
+    try {
+      p.reset()
+      sc.setJobGroup("dag-group", "models", interruptOnCancel = false)
+      // "counts" is read by two nodes, so run builds it (and its shuffle)
+      val out = TransformDag.run(Seq(
+        Node("counts", Nil, _ => spark.range(30000).groupBy((col("id") % 13).as("k")).count()),
+        Node("big", Seq("counts"), ins => ins("counts").filter(col("count") > 2000)),
+        Node("small", Seq("counts"), ins => ins("counts").filter(col("count") <= 2000))))
+      Seq("big", "small").foreach(n => out(n).write.format("noop").mode("overwrite").save())
+      p.drain()
+      val names = p.topStages(100).map(_.name)
+      assert(names.nonEmpty)
+      assert(names.forall(_.startsWith("dag-group: ")), names.mkString("\n"))
+    } finally {
+      sc.clearJobGroup(); p.detach()
+    }
+  }
 }

@@ -160,6 +160,37 @@ class FetchPipelineSpec extends SparkSpec {
     deleteRecursively(new java.io.File(root))
   }
 
+  test("the concurrent core-table writes run under the caller's job group") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import TestSpark.spark.implicits._
+    val sc = TestSpark.spark.sparkContext
+    val root = Files.createTempDirectory("graft_pipe").toString
+    val pipe = new FetchPipeline(TestSpark.spark, root,
+      ids => ids.map(id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true)),
+      batchSize = 10, chunkSize = 2)
+    pipe.seedIds(Seq(51L, 52L).toDF("game_id"))
+    val t0 = ts("2026-01-01 00:00:00")
+    pipe.fetchBatch(t0)
+    // pool threads started now keep this group unless the writes reset it
+    sc.setJobGroup("stale-group", "stale", interruptOnCancel = false)
+    Await.ready(Future.traverse(1 to 16)(_ => Future(Thread.sleep(20))), Duration.Inf)
+    sc.setJobGroup("batch-group", "process", interruptOnCancel = false)
+    val prof = graft.QueryProfile.attach(TestSpark.spark)
+    try {
+      prof.reset()
+      assert(pipe.processBatch(t0) == 2)
+      prof.drain()
+      val names = prof.topStages(1000).map(_.name)
+      assert(names.nonEmpty)
+      assert(names.forall(_.startsWith("batch-group: ")), names.distinct.mkString("\n"))
+    } finally {
+      prof.detach(); sc.clearJobGroup()
+    }
+    deleteRecursively(new java.io.File(root))
+  }
+
   test("refresh policy: age bands + null-year + in-progress exclusion") {
     import TestSpark.spark.implicits._
     val now = ts("2026-06-01 00:00:00")

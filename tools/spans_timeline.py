@@ -9,7 +9,7 @@ inside it; for a run without cycles (maintain) each tick is the interval
 from one `streaming.applyTick` span's start to the next one's. Each line
 is a span's start offset from its cycle or tick, its wall time and its
 name, indented by nesting depth. Serving requests (spans with a request
-id) are counted per tick instead of listed; `--requests` lists them too.
+id) are counted per cycle or tick instead of listed.
 """
 
 import argparse
@@ -42,7 +42,6 @@ def windows(spans):
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("spans", help="a <result>.json.spans.json file")
-    ap.add_argument("--requests", action="store_true", help="list serving request spans too")
     args = ap.parse_args(argv)
     with open(args.spans) as fh:
         spans = sorted(json.load(fh), key=lambda s: s["start_ns"])
@@ -57,13 +56,13 @@ def main(argv):
         requests = [s for s in inside if s["request_id"] >= 0]
         base = depth(by_id[root], by_id) + 1 if root is not None else 0
         for s in inside:
-            if s["request_id"] >= 0 and not args.requests:
+            if s["request_id"] >= 0:
                 continue
             indent = "  " * max(depth(s, by_id) - base, 0)
             print(f"  +{(s['start_ns'] - a) / 1e9:8.3f} s {(s['end_ns'] - s['start_ns']) / 1e9:8.3f} s"
                   f"  {indent}{s['name']}")
-        if requests and not args.requests:
-            print(f"  ({len(requests)} request spans; --requests lists them)")
+        if requests:
+            print(f"  ({len(requests)} request spans)")
     return 0
 
 
