@@ -121,19 +121,48 @@ object LshBucket {
   private val A2 = XSql.A2.toArray
   private val B2 = XSql.B2.toArray
 
+  private val Planes = XSql.LshPlanes
+
+  /** w(p, i) at `weights(i * Planes + p)`, computed once per
+    * dimension and grown (replaced whole, so a reader never sees a
+    * half-filled table) the first time a longer vector comes.
+    */
+  @volatile private var weights: Array[Double] = table(64)
+
+  private def table(dims: Int): Array[Double] =
+    Array.tabulate(dims * Planes) { j =>
+      val (i, p) = (j / Planes, j % Planes)
+      ((A2(p) * (i + 1) + B2(p)) % XSql.PlaneMod - 1000).toDouble / 1000.0
+    }
+
+  /** One pass over `v` feeds all plane sums side by side. Each plane
+    * still adds its products in dimension order, so every sum — and
+    * so every bucket — is bit-identical to the plane-by-plane fold
+    * (the oracle's lambda form and [[bucketN]]); the planes'
+    * independent add chains overlap.
+    */
   def bucket(v: ArrayData): Long = {
     val n = v.numElements()
+    var w = weights
+    if (w.length < n * Planes) {
+      w = table(math.max(n, 2 * w.length / Planes)); weights = w
+    }
+    val acc = new Array[Double](Planes)
+    var i = 0
+    while (i < n) {
+      val x = v.getDouble(i)
+      val at = i * Planes
+      var p = 0
+      while (p < Planes) {
+        acc(p) += x * w(at + p)
+        p += 1
+      }
+      i += 1
+    }
     var out = 0L
     var p = 0
-    while (p < XSql.LshPlanes) {
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val w = ((A2(p) * (i + 1) + B2(p)) % XSql.PlaneMod - 1000).toDouble / 1000.0
-        acc += v.getDouble(i) * w
-        i += 1
-      }
-      if (acc > 0) out += (1L << p)
+    while (p < Planes) {
+      if (acc(p) > 0) out += (1L << p)
       p += 1
     }
     out

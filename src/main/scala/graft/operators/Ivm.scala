@@ -272,6 +272,16 @@ object Ivm {
     * few evicted groups — filter-then-fold computes the same rows
     * (the fold groups by every data column, so restricting by group
     * key commutes with it) at O(touched-group rows) shuffle cost.
+    *
+    * The view ⋈ delta merge runs ONCE, as one collect of the groups
+    * the delta touches: view rows of other groups cannot change, so
+    * the merge is O(touched groups), bounded by the micro-batch like
+    * every delta broadcast here. Both branches read the collected
+    * rows: the incremental one as they are, the rescan one as its
+    * key set, so neither plans a merge (or a delta aggregate) of its
+    * own. A tick that evicts nothing plans no rescan at all. The
+    * returned frame reads the view once more, for the untouched
+    * groups.
     */
   def applyDeltaTopKWith(view: DataFrame, changes: DataFrame,
       keys: Seq[String], valueCol: String, idCol: String, k: Int)(
@@ -287,7 +297,6 @@ object Ivm {
     val deltaR = delta.select(keys.map(kc => col(kc).as(s"_d_$kc")) ++
       (delta.columns.toSeq diff keys).map(col): _*)
     val cond = keys.map(kc => col(kc) <=> col(s"_d_$kc")).reduce(_ && _)
-    val merged = view.join(deltaR, cond, "full_outer")
     // rescan iff the group LOST rows and either a deleted pair sits at
     // or above the stored k-th (membership in the stored top-k), or
     // the view never stored the group (born and shrunk same tick)
@@ -298,16 +307,32 @@ object Ivm {
       .when(col("_ins").isNull || size(col("_ins")) === 0, col("topk"))
       .otherwise(slice(reverse(array_sort(
         concat(col("topk"), col("_ins")))), 1, k))
-    val incr = merged.filter(!needsRescan)
-      .select(keys.map(kc => coalesce(col(kc), col(s"_d_$kc")).as(kc)) :+
-        newTopk.as("topk"): _*)
+    // a shuffled join, not a broadcast of the view: the null-safe
+    // keys make every broadcast here an UnsafeHashedRelation, whose
+    // build takes a whole memory page (MBs) of driver heap however few
+    // rows it holds, and a tick already broadcasts the touched and the
+    // evicted keys
+    val merged = view.hint("merge").join(deltaR, cond, "right_outer")
+      .select(keys.map(kc => col(s"_d_$kc").as(kc)) ++
+        Seq(newTopk.as("topk"), needsRescan.as("_rescan")): _*)
+    val rows = merged.collect()
+    val touched = view.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), merged.schema)
+    val touchedKeys = touched.select(keys.map(kc => col(kc).as(s"_t_$kc")): _*)
+    val untouched = view.join(broadcast(touchedKeys),
+      keys.map(kc => col(kc) <=> col(s"_t_$kc")).reduce(_ && _), "left_anti")
+      .select((keys :+ "topk").map(col): _*)
+    // driver-side rows: one partition, so a published snapshot gets
+    // one file for them, not one per default-parallelism slot (every
+    // later tick reads each file's footer)
+    val incr = touched.filter(!col("_rescan"))
       .filter(col("topk").isNotNull && size(col("topk")) > 0)
-    val rescanKeys = merged.filter(needsRescan)
-      .select(keys.map(kc => coalesce(col(kc), col(s"_d_$kc")).as(kc)): _*)
-      .distinct()
-    val rescanned = aggregateTopK(rescanBase(rescanKeys),
-      keys, valueCol, idCol, k)
-    incr.unionByName(rescanned)
+      .select((keys :+ "topk").map(col): _*).coalesce(1)
+    val kept = untouched.unionByName(incr)
+    if (!rows.exists(_.getAs[Boolean]("_rescan"))) kept
+    else kept.unionByName(aggregateTopK(
+      rescanBase(touched.filter(col("_rescan")).select(keys.map(col): _*)),
+      keys, valueCol, idCol, k))
   }
 
   /** A derivation/group count that reaches zero is a legitimate drop;
@@ -409,9 +434,8 @@ object Ivm {
   def maxDeltaRows: Long =
     sys.props.get("graft.ivm.maxDeltaRows").map(_.toLong).getOrElse(16000000L)
 
-  private def guardDeltaBroadcast(d: DataFrame, which: String): Unit = {
+  private def guardDeltaBroadcast(n: Long, which: String): Unit = {
     val max = maxDeltaRows
-    val n = d.count()
     if (n > max) throw new IllegalStateException(
       s"joinViewDelta: $which has $n rows > $max " +
         "(graft.ivm.maxDeltaRows) — the delta-broadcast probe " +
@@ -422,7 +446,8 @@ object Ivm {
   }
 
   def joinViewDelta(aOld: DataFrame, bOld: DataFrame, dA: DataFrame,
-      dB: DataFrame, keys: Seq[String], viewCols: Seq[String]): DataFrame = {
+      dB: DataFrame, keys: Seq[String], viewCols: Seq[String],
+      deltaRows: Option[(Long, Long)] = None): DataFrame = {
     def signed(d: DataFrame): DataFrame = d
       .withColumn("_s",
         when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
@@ -451,9 +476,11 @@ object Ivm {
     // maxDeltaRows before any probe plan is built. The count is one
     // job over a delta the caller has materialized (a scan of a small
     // cached/checkpointed relation), and an O(state) catch-up delta
-    // is orders of magnitude over the line.
-    guardDeltaBroadcast(da, "dA")
-    guardDeltaBroadcast(db, "dB")
+    // is orders of magnitude over the line. A caller that already
+    // counted both deltas (applyTick's one pre-flight pass) passes the
+    // counts as `deltaRows` and the guard runs no job of its own.
+    guardDeltaBroadcast(deltaRows.fold(da.count())(_._1), "dA")
+    guardDeltaBroadcast(deltaRows.fold(db.count())(_._2), "dB")
     // Callers whose base frames are EXPENSIVE to materialize (fold
     // chains, multi-version unions) should pre-restrict them to the
     // delta's keys before passing them in — see

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The reference's four write disciplines over partitioned parquet
   * (SURVEY.md §2.1 S5-S12, §2.10 I1):
@@ -1120,9 +1120,12 @@ object TableStore {
     // names alone are not enough: the chain's reader infers the scan
     // schema from ONE file of the chain, so a same-named column at a
     // different type would surface as late scan errors instead of a
-    // loud publish-time failure. Order-insensitive, type-exact.
-    val parentTypes = parentSchema.fields.map(f => f.name -> f.dataType).toMap
-    val drifted = df.schema.fields.filter(f => parentTypes(f.name) != f.dataType)
+    // loud publish-time failure. Order-insensitive and type-exact up
+    // to nullability: a read makes every nested field nullable, so a
+    // frame built in memory (`array(col("id"))` over `spark.range`)
+    // carries non-nullable element types its parent can never show.
+    val parentTypes = parentSchema.fields.map(f => f.name -> asNullable(f.dataType)).toMap
+    val drifted = df.schema.fields.filter(f => parentTypes(f.name) != asNullable(f.dataType))
     require(drifted.isEmpty,
       s"publishVersionAppend: type drift — " +
         drifted.map(f => s"${f.name}: ${f.dataType.simpleString} vs parent " +
@@ -1145,6 +1148,17 @@ object TableStore {
         currentVersion(spark, path))
     }
     target
+  }
+
+  /** `t` with every nested field, array element and map value made
+    * nullable: the type a parquet read of `t` reports.
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case ArrayType(e, _) => ArrayType(asNullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(asNullable(k), asNullable(v), valueContainsNull = true)
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case other => other
   }
 
   /** CHECKPOINT an append chain: republish the live content as one

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Ivm, TableStore}
+import graft.operators.{CallerJobs, Ivm, TableStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -116,11 +116,12 @@ object JoinViewMaintenance {
           clusterBy = keys)
       else TableStore.publishFoldSnapshot(spark, p, df, note(InitTick),
         clusterBy = keys)
+    val inCaller = new CallerJobs(spark.sparkContext)
     Seq(
-      Future(pubBase(aPath, a)),
-      Future(pubBase(bPath, b)),
-      Future(TableStore.publishFoldSnapshotCanonical(spark, viewPath,
-        Ivm.joinView(a, b, keys), note(InitTick)))
+      Future(inCaller(pubBase(aPath, a))),
+      Future(inCaller(pubBase(bPath, b))),
+      Future(inCaller(TableStore.publishFoldSnapshotCanonical(spark, viewPath,
+        Ivm.joinView(a, b, keys), note(InitTick))))
     ).foreach(Await.result(_, Duration.Inf))
   }
 
@@ -257,6 +258,9 @@ object JoinViewMaintenance {
       taken += ((p, at, TableStore.reserveVersionAfter(spark, p, at)))
     } catch { case e: Throwable => cancelTaken(); throw e }
     val pins = taken.toSeq
+    // captured here, on the caller's thread: checkpointAll may run on
+    // the compactor's background thread, whose properties are not ours
+    val inCaller = new CallerJobs(spark.sparkContext)
     def checkpointAll(): Unit = {
       val compacts = pins.map { case (p, at, slot) =>
         // checkpoint snapshots re-establish the keyed layout (init's
@@ -267,9 +271,9 @@ object JoinViewMaintenance {
           clusterBy.get(p).filter(_.forall(df.columns.contains))
             .fold(df)(cols => df.repartitionByRange(cols.map(col): _*)
               .sortWithinPartitions(cols.map(col): _*))
-        Future(TableStore.publishReserved(spark, p, slot,
+        Future(inCaller(TableStore.publishReserved(spark, p, slot,
           clustered(TableStore.readFolded(spark, p, Some(at))),
-          checkpointNote(batchId)))
+          checkpointNote(batchId))))
       }
       compacts.foreach(Await.result(_, Duration.Inf): Unit)
     }
@@ -289,6 +293,41 @@ object JoinViewMaintenance {
         catch { case e: Throwable => cancelTaken(); throw e }
       case None => { checkpointAll(); retainAll() }
     }
+  }
+
+  /** One delta's row count and its [min, max] box per join key (None
+    * for a key that is null on every row).
+    */
+  private final case class DeltaStats(rows: Long, box: Seq[Option[(Any, Any)]])
+
+  /** [[DeltaStats]] of both deltas in ONE single-stage job: the two
+    * deltas are unioned into one partition, each side's keys in its
+    * own columns (so each keeps its own type), and one global
+    * aggregate takes every count, min and max. A single-partition
+    * child needs no exchange before the final aggregate, so this is
+    * one task over rows the caller has materialized (a micro-batch).
+    */
+  private def deltaStats(dA: DataFrame, dB: DataFrame,
+      keys: Seq[String]): (DeltaStats, DeltaStats) = {
+    val sides = Seq(dA, dB)
+    def keyCol(s: Int, kc: String) = s"_k${s}_$kc"
+    def tagged(s: Int): DataFrame = sides(s).select(lit(s).as("_side") +:
+      (for ((d, t) <- sides.zipWithIndex; kc <- keys) yield
+        (if (t == s) col(kc) else lit(null).cast(d.schema(kc).dataType))
+          .as(keyCol(t, kc))): _*)
+    val aggs = sides.indices.flatMap(s =>
+      count(when(col("_side") === s, lit(1))) +:
+        keys.flatMap(kc => Seq(min(col(keyCol(s, kc))), max(col(keyCol(s, kc))))))
+    val r = tagged(0).unionByName(tagged(1)).coalesce(1)
+      .agg(aggs.head, aggs.tail: _*).head()
+    def stats(s: Int): DeltaStats = {
+      val at = s * (1 + 2 * keys.size)
+      DeltaStats(r.getLong(at), keys.indices.map { i =>
+        val lo = at + 1 + 2 * i
+        if (r.isNullAt(lo)) None else Some((r.get(lo), r.get(lo + 1)))
+      })
+    }
+    (stats(0), stats(1))
   }
 
   /** Apply micro-batch `batchId` (deltas `dA`/`dB` in changesBetween
@@ -320,6 +359,7 @@ object JoinViewMaintenance {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val t0 = System.nanoTime()
+    val inCaller = new CallerJobs(spark.sparkContext)
     val needView = tickVersion(spark, viewPath, batchId).isEmpty
     val stagedView: Option[Future[String]] = if (needView) {
       // bases still sit at tick B-1 here (they publish after the view).
@@ -354,39 +394,42 @@ object JoinViewMaintenance {
         committed.count(_ >= TableStore.foldAnchor(spark, p, committed.last))
       }
       // delta-key-RANGE predicate on the probe scans (r15 verdict
-      // task 3): [min, max] of the opposing delta's first join key,
-      // collected as two scalars (one tiny agg job over the
-      // batch-sized delta), applied as a plain comparison filter —
-      // which, unlike the broadcast semi-join below, PUSHES DOWN to
-      // the parquet scans of the chain (no groupBy above them), so on
-      // the key-range-clustered snapshot layout (init/checkpoints)
-      // footer min/max excludes whole files/row groups and the probe
-      // reads O(touched key range), not O(state). Correct because
-      // every joinViewDelta term that touches the base is an inner
-      // equi-join on `keys`: rows outside the delta's key range
-      // cannot match. An EMPTY delta admits nothing (its probe term
-      // is empty anyway).
-      def rangeFilter(base: DataFrame, d: DataFrame): DataFrame = {
-        val k = keys.head
-        val r = d.agg(min(col(k)), max(col(k))).head()
-        if (r.isNullAt(0)) base.filter(lit(false))
-        else base.filter(col(k) >= lit(r.get(0)) && col(k) <= lit(r.get(1)))
-      }
-      def keyFilter(base: DataFrame, p: String, d: DataFrame): DataFrame = {
-        val ranged = rangeFilter(base, d)
+      // task 3): the opposing delta's [min, max] box over the join
+      // keys, applied as plain comparison filters — which, unlike the
+      // broadcast semi-join below, PUSH DOWN to the parquet scans of
+      // the chain (no groupBy above them), so on the key-range-
+      // clustered snapshot layout (init/checkpoints) footer min/max
+      // excludes whole files/row groups and the probe reads O(touched
+      // key range), not O(state). Correct because every joinViewDelta
+      // term that touches the base is an inner equi-join on `keys`:
+      // rows outside the delta's box cannot match, and neither can a
+      // delta row with a null key. An EMPTY delta (or one whose key is
+      // null on every row) admits nothing (its probe term is empty
+      // anyway). The boxes and both row counts come from ONE pre-flight
+      // job over the two deltas (deltaStats), which also feeds
+      // joinViewDelta's broadcast guard.
+      val (statsA, statsB) = deltaStats(dA, dB, keys)
+      def rangeFilter(base: DataFrame, st: DeltaStats): DataFrame =
+        if (st.rows == 0 || st.box.exists(_.isEmpty)) base.filter(lit(false))
+        else base.filter(keys.zip(st.box.flatten).map { case (kc, (lo, hi)) =>
+          col(kc) >= lit(lo) && col(kc) <= lit(hi) }.reduce(_ && _))
+      def keyFilter(base: DataFrame, p: String, d: DataFrame,
+          st: DeltaStats): DataFrame = {
+        val ranged = rangeFilter(base, st)
         // the semi-join only pays when it prunes a multi-version
         // union; on a bare snapshot the probe's inner join drops
         // non-matching survivors of the range predicate for free
         if (chainLen(p) <= 1) ranged
         else ranged.join(broadcast(d.select(keys.map(col): _*)), keys, "left_semi")
       }
-      val aPrev = keyFilter(aPrev0, aPath, dB)
-      val bPrev = keyFilter(bPrev0, bPath, dA)
+      val aPrev = keyFilter(aPrev0, aPath, dB, statsB)
+      val bPrev = keyFilter(bPrev0, bPath, dA, statsA)
       val viewCols = (aPrev0.columns ++ bPrev0.columns).distinct
         .filterNot(_ == "_mult").toSeq
-      val dView = Ivm.joinViewDelta(aPrev, bPrev, dA, dB, keys, viewCols)
+      val dView = Ivm.joinViewDelta(aPrev, bPrev, dA, dB, keys, viewCols,
+        deltaRows = Some((statsA.rows, statsB.rows)))
         .withColumnRenamed("_dmult", "_mult")
-      Some(Future(TableStore.stageVersionData(spark, viewPath, dView)))
+      Some(Future(inCaller(TableStore.stageVersionData(spark, viewPath, dView))))
     } else None
     // base deltas stage CONCURRENTLY with the view compute: staging
     // writes unreferenced dirs, so the view job still reads the bases
@@ -394,7 +437,7 @@ object JoinViewMaintenance {
     val stagedBases: Seq[(String, Option[Future[String]])] =
       Seq(aPath -> dA, bPath -> dB).map { case (p, d) =>
         p -> (if (tickVersion(spark, p, batchId).isEmpty)
-          Some(Future(TableStore.stageVersionData(spark, p, baseDelta(d))))
+          Some(Future(inCaller(TableStore.stageVersionData(spark, p, baseDelta(d)))))
         else None)
       }
     // all staging complete BEFORE the commit phase: the drain below
@@ -443,29 +486,43 @@ object JoinViewMaintenance {
 
   /** One guarded TOP-K-view tick — the continuous form of
     * [[graft.operators.Ivm.applyDeltaTopK]] under the same WAL
-    * discipline as [[applyTick]]: both publishes carry `tick=<b>`
+    * discipline as [[applyTick]]: both commits carry `tick=<b>`
     * notes and are SKIPPED when that tick already committed, so a
-    * redelivered micro-batch (crash between a publish and the stream
+    * redelivered micro-batch (crash between a commit and the stream
     * checkpoint's commit) rolls forward deterministically instead of
     * double-folding the base or double-inserting into the view.
     *
-    * Order is base-first because the evict-rescan ground truth must
-    * be the POST-tick base; on redelivery after a crash between the
-    * two publishes, the base guard skips (its fold already reflects
-    * the slice) and the view tick reruns against exactly that
-    * post-tick base — the state it needed anyway. The view is itself
-    * a versioned fold table (snapshot per tick — the view is
+    * Like applyTick it is a staged commit: the base fold delta stages
+    * on a pool thread while the view is computed and staged, then the
+    * markers land in the order base → view. The evict-rescan ground
+    * truth must be the POST-tick base, which the view compute reads
+    * as the committed chain plus the signed slice while the base
+    * marker is missing, and as the committed chain alone once it
+    * landed: on redelivery after a crash between the markers, the
+    * base guard skips (its fold already reflects the slice) and the
+    * view reruns against exactly that post-tick base. The view is
+    * itself a versioned fold table (snapshot per tick — the view is
     * O(groups·k), so a snapshot costs what a rewrite did), which is
-    * what makes its tick provable.
+    * what makes its tick provable. `afterPublish(path)` is the same
+    * test seam as applyTick's, called after each marker.
     */
   def topKTick(spark: SparkSession, basePath: String, viewPath: String,
       slice: DataFrame, batchId: Long, keys: Seq[String], valueCol: String,
       idCol: String, k: Int, compactEvery: Int = 0,
-      compactor: Option[AsyncCompactor] = None): Unit = {
-    if (tickVersion(spark, basePath, batchId).isEmpty)
-      TableStore.publishFoldDelta(spark, basePath,
-        baseDelta(slice), note(batchId)): Unit
-    if (tickVersion(spark, viewPath, batchId).isEmpty) {
+      compactor: Option[AsyncCompactor] = None,
+      afterPublish: String => Unit = _ => ()): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val inCaller = new CallerJobs(spark.sparkContext)
+    val signed = baseDelta(slice)
+    val needBase = tickVersion(spark, basePath, batchId).isEmpty
+    // staging writes an unreferenced dir: the view compute below still
+    // reads the base chain at B-1 until the marker lands
+    val stagedBase = if (needBase)
+      Some(Future(inCaller(TableStore.stageVersionData(spark, basePath, signed))))
+    else None
+    val viewStage = if (tickVersion(spark, viewPath, batchId).isEmpty) {
       // The rescan's base access goes through applyDeltaTopKWith so
       // the group restriction lands BELOW the fold: the old shape
       // (readFolded(basePath) up front) paid a full-state groupBy
@@ -474,14 +531,18 @@ object JoinViewMaintenance {
       // sf1 tick audit measured as st17's 1.72 growth at 10× state.
       // Filter-then-fold is exact (the fold groups by every data
       // column, so a group-key restriction commutes) and costs the
-      // chain scan plus an O(touched-group rows) fold. The
-      // single-snapshot chain keeps readFolded's filter-only fast
-      // path: a canonical snapshot needs no re-fold after the semi.
+      // chain scan plus an O(touched-group rows) fold. A single-
+      // snapshot post-tick chain (a redelivery onto a checkpoint)
+      // keeps readFolded's filter-only fast path: a canonical snapshot
+      // needs no re-fold after the semi.
       def foldedFor(gk: DataFrame): DataFrame = {
         val committed = TableStore.committedVersions(spark, basePath)
         val chainLen = committed.count(
-          _ >= TableStore.foldAnchor(spark, basePath, committed.last))
-        val chain = TableStore.readFoldedUnion(spark, basePath)
+          _ >= TableStore.foldAnchor(spark, basePath, committed.last)) +
+          (if (needBase) 1 else 0)
+        val committedChain = TableStore.readFoldedUnion(spark, basePath)
+        val chain = if (needBase) committedChain.unionByName(signed)
+          else committedChain
         val gkR = gk.select(keys.map(kc => col(kc).as(s"_g_$kc")): _*)
         val cond = keys.map(kc => col(kc) <=> col(s"_g_$kc")).reduce(_ && _)
         val touched = chain.join(broadcast(gkR), cond, "left_semi")
@@ -493,17 +554,26 @@ object JoinViewMaintenance {
             .filter(col("_mult") > 0).drop("_mult")
         }
       }
-      // Distinct publish: applyDeltaTopK emits ONE row per group by
-      // construction (incr from a per-group full-outer merge,
-      // rescanned from a groupBy, groups disjoint — IvmTopKSpec), so
-      // the canonicalizing groupBy of publishFoldSnapshot would be a
-      // per-tick full-view shuffle bought for nothing
-      TableStore.publishFoldSnapshotDistinct(spark, viewPath,
-        graft.operators.Ivm.applyDeltaTopKWith(
-          TableStore.readFolded(spark, viewPath).drop("_mult"),
-          slice, keys, valueCol, idCol, k)(foldedFor),
-        note(batchId)): Unit
-    }
+      // a distinct snapshot (publishFoldSnapshotDistinct's shape):
+      // applyDeltaTopK emits ONE row per group by construction (incr
+      // from the per-group merge, rescanned from a groupBy, groups
+      // disjoint — IvmTopKSpec), so the canonicalizing groupBy of
+      // publishFoldSnapshot would be a per-tick full-view shuffle
+      // bought for nothing
+      val next = Ivm.applyDeltaTopKWith(
+        TableStore.readFolded(spark, viewPath).drop("_mult"),
+        slice, keys, valueCol, idCol, k)(foldedFor)
+      Some(TableStore.stageVersionData(spark, viewPath,
+        next.withColumn("_mult", lit(1L))))
+    } else None
+    // ONE commit point per table, markers in WAL order base → view
+    stagedBase.map(Await.result(_, Duration.Inf)).foreach(st =>
+      TableStore.commitStagedVersion(spark, basePath, st,
+        TableStore.FoldDeltaPrefix + note(batchId)): Unit)
+    afterPublish(basePath)
+    viewStage.foreach(st =>
+      TableStore.commitStagedVersion(spark, viewPath, st, note(batchId)): Unit)
+    afterPublish(viewPath)
     // bound the BASE fold chain: without a checkpoint every tick's
     // newBase fold scans one more delta version — a per-tick term
     // linear in tick count (measured as a 1.4→2.9 s tilt across 30

@@ -125,4 +125,46 @@ class QueryProfileSpec extends SparkSpec {
       sc.clearJobGroup(); p.detach()
     }
   }
+
+  test("stages an applyTick and a topKTick start carry the caller's job group") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import graft.operators.{Ivm, TableStore}
+    import graft.streaming.JoinViewMaintenance
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_tick_jobs")
+    def path(n: String) = root.resolve(n).toString
+    val a = Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("k", "va")
+    val b = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "vb")
+    JoinViewMaintenance.init(spark, path("view"), path("a"), path("b"), a, b, Seq("k"))
+    val base = Seq((1L, 10L, 100L), (1L, 20L, 101L), (2L, 5L, 200L)).toDF("g", "v", "id")
+    TableStore.publishFoldSnapshot(spark, path("topk_base"), base, "tick=-1")
+    TableStore.publishFoldSnapshotDistinct(spark, path("topk_view"),
+      Ivm.aggregateTopK(base, Seq("g"), "v", "id", 1), "tick=-1")
+    val sc = spark.sparkContext
+    sc.setJobGroup("stale-group", "stale", interruptOnCancel = false)
+    Await.ready(Future.traverse(1 to 16)(_ => Future(Thread.sleep(20))), Duration.Inf)
+    val p = QueryProfile.attach(spark)
+    try {
+      p.reset()
+      sc.setJobGroup("tick-group", "maintain", interruptOnCancel = false)
+      // tick 1 is a compaction tick: the staging futures and the
+      // reserved-slot checkpoints both run on pool threads
+      JoinViewMaintenance.applyTick(spark, path("view"), path("a"), path("b"),
+        Seq((2L, "delete", "y"), (4L, "insert", "w")).toDF("k", "_change_type", "va"),
+        Seq((4L, "insert", 40L)).toDF("k", "_change_type", "vb"), Seq("k"), 1L)
+      JoinViewMaintenance.topKTick(spark, path("topk_base"), path("topk_view"),
+        Seq((1L, 20L, 101L, "delete"), (2L, 9L, 201L, "insert"))
+          .toDF("g", "v", "id", "_change_type"),
+        1L, Seq("g"), "v", "id", 1, compactEvery = JoinViewMaintenance.CompactEvery)
+      p.drain()
+      val names = p.topStages(1000).map(_.name)
+      assert(names.nonEmpty)
+      assert(names.forall(_.startsWith("tick-group: ")), names.distinct.mkString("\n"))
+    } finally {
+      sc.clearJobGroup(); p.detach()
+      deleteRecursively(root.toFile)
+    }
+  }
 }

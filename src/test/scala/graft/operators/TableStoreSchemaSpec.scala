@@ -106,6 +106,31 @@ class TableStoreSchemaSpec extends SparkSpec with BeforeAndAfterAll {
     sameAsSpark(TableStore.readVersion(spark, p), dirs: _*)
   }
 
+  test("an append built in memory passes the type check; real drift fails it") {
+    val p = tmp()
+    TableStore.publishVersion(spark, p, rows(10))
+    // array and struct columns built from spark.range carry
+    // non-nullable nested types; the parent's read types never do
+    val fresh = rows(4)
+    assert(!fresh.schema("ids").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .containsNull)
+    val v = TableStore.publishVersionAppend(spark, p, fresh)
+    assert(TableStore.readVersion(spark, p, Some(v)).count() == 14L)
+    val drift = intercept[IllegalArgumentException] {
+      TableStore.publishVersionAppend(spark, p,
+        rows(2).withColumn("id", col("id").cast("int")))
+    }
+    assert(drift.getMessage.contains("type drift") &&
+      drift.getMessage.contains("id: int vs parent bigint"), drift.getMessage)
+    val nested = intercept[IllegalArgumentException] {
+      TableStore.publishVersionAppend(spark, p,
+        rows(2).withColumn("ids", array(col("id").cast("int"))))
+    }
+    assert(nested.getMessage.contains("ids: array<int> vs parent array<bigint>"),
+      nested.getMessage)
+    assert(TableStore.readVersion(spark, p).count() == 14L)
+  }
+
   test("a parquet file without Spark's schema reads as Spark reads it") {
     val p = tmp()
     val schema = MessageTypeParser.parseMessageType(

@@ -69,6 +69,35 @@ class FetchPipelineSpec extends SparkSpec {
     assert(pipe.fetchBatch(t4) == 0)          // attempt_count == 3 -> excluded
   }
 
+  test("a lease the fetcher left in place holds its id until the lease expires") {
+    import TestSpark.spark.implicits._
+    val root = Files.createTempDirectory("graft_pipe").toString
+    val claims = scala.collection.mutable.ArrayBuffer[Seq[Long]]()
+    var dropped: Option[Long] = Some(62L)
+    // the default 30-minute lease expiry
+    val pipe = new FetchPipeline(TestSpark.spark, root, { ids =>
+      claims += ids
+      ids.filterNot(dropped.contains)
+        .map(id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true))
+    }, batchSize = 10, chunkSize = 10)
+    def leases() = TestSpark.spark.read.parquet(s"$root/fetch_in_progress")
+      .select("game_id").as[Long].collect().toSet
+    pipe.seedIds(Seq(61L, 62L, 63L).toDF("game_id"))
+    // the fetcher leaves 62 out: no tracking row, and its lease stays
+    assert(pipe.fetchBatch(ts("2026-01-01 00:00:00")) == 2)
+    assert(leases() == Set(62L))
+    dropped = None
+    // 10 minutes on the lease is live: nothing to claim, no fetch
+    assert(pipe.fetchBatch(ts("2026-01-01 00:10:00")) == 0)
+    assert(claims == Seq(Seq(61L, 62L, 63L)))
+    assert(leases() == Set(62L))
+    // past the expiry the lease is cleaned and 62 is claimed again
+    assert(pipe.fetchBatch(ts("2026-01-01 00:31:00")) == 1)
+    assert(claims.last == Seq(62L))
+    assert(leases().isEmpty)
+    deleteRecursively(new java.io.File(root))
+  }
+
   test("time-series append: second process of new data appends to games") {
     import TestSpark.spark.implicits._
     val pipe = mkPipeline { ids =>

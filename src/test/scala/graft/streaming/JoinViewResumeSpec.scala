@@ -361,6 +361,73 @@ class JoinViewResumeSpec extends SparkSpec {
     assert(tick1 == 1, s"base has $tick1 tick=1 publishes")
   }
 
+  /** topKTick's staged commit lays its markers base → view: a crash
+    * between them leaves the base at tick B and the view at B-1. The
+    * redelivered tick must skip the base, compute the view from the
+    * committed chain alone (no second fold of the slice), and land on
+    * the same view, chain and checkpoints as a run that never crashed.
+    */
+  test("topKTick: crash between the base and view markers resumes to the uninterrupted result") {
+    val spark = TestSpark.spark
+    val base0 = Seq((1L, 10L, 100L), (1L, 20L, 101L), (1L, 30L, 102L),
+      (1L, 40L, 103L), (2L, 5L, 200L), (3L, 7L, 300L)).toDF("g", "v", "id")
+    val slices = Seq(
+      // evicts g=1's stored max; inserts into g=2 and a new group 4
+      Seq((1L, 40L, 103L, "delete"), (2L, 50L, 201L, "insert"),
+        (4L, 9L, 400L, "insert")),
+      // empties g=3; g=1's update moves a stored member down
+      Seq((3L, 7L, 300L, "delete"), (1L, 30L, 102L, "update_preimage"),
+        (1L, 1L, 102L, "update_postimage")),
+      Seq((2L, 60L, 202L, "insert"), (1L, 20L, 101L, "delete")))
+      .map(_.toDF("g", "v", "id", "_change_type"))
+    def topkSet(df: DataFrame) = df
+      .select(col("g"), posexplode(col("topk")).as(Seq("p", "e")))
+      .select(col("g"), col("p"), col("e.v"), col("e.id"))
+      .as[(Long, Int, Long, Long)].collect().toSet
+    def baseSet(path: String) = TableStore.readFolded(spark, path)
+      .select("g", "v", "id", "_mult").as[(Long, Long, Long, Long)].collect().toSet
+    def play(crashTick: Option[Long]): (String, String) = {
+      val tmp = Files.createTempDirectory("graft_topk_crash")
+      val basePath = tmp.resolve("base").toString
+      val viewPath = tmp.resolve("view").toString
+      TableStore.publishFoldSnapshot(spark, basePath, base0, "tick=-1")
+      TableStore.publishFoldSnapshotDistinct(spark, viewPath,
+        Ivm.aggregateTopK(base0, Seq("g"), "v", "id", 2), "tick=-1")
+      def tick(b: Long, hook: String => Unit): Unit =
+        JoinViewMaintenance.topKTick(spark, basePath, viewPath, slices(b.toInt), b,
+          Seq("g"), "v", "id", 2, compactEvery = JoinViewMaintenance.CompactEvery,
+          afterPublish = hook)
+      for (b <- slices.indices.map(_.toLong)) {
+        if (crashTick.contains(b)) {
+          val ex = intercept[IllegalStateException](tick(b, p =>
+            if (p == basePath) throw new IllegalStateException(s"injected crash at tick $b")))
+          assert(ex.getMessage.contains("injected crash"))
+          // the crash really is between the markers
+          assert(JoinViewMaintenance.tickVersion(spark, basePath, b).isDefined)
+          assert(JoinViewMaintenance.tickVersion(spark, viewPath, b).isEmpty)
+        }
+        tick(b, _ => ())
+      }
+      (basePath, viewPath)
+    }
+    val (cleanBase, cleanView) = play(None)
+    val want = topkSet(Ivm.aggregateTopK(
+      TableStore.readFolded(spark, cleanBase).drop("_mult"), Seq("g"), "v", "id", 2))
+    assert(topkSet(TableStore.readFolded(spark, cleanView).drop("_mult")) == want)
+    for (crash <- slices.indices.map(_.toLong)) {
+      val (base, view) = play(Some(crash))
+      assert(baseSet(base) == baseSet(cleanBase), s"crash at tick $crash: base")
+      assert(topkSet(TableStore.readFolded(spark, view).drop("_mult")) == want,
+        s"crash at tick $crash: view")
+      // one tick=<b> commit per table per tick
+      for (p <- Seq(base, view); b <- slices.indices) {
+        val n = TableStore.committedVersions(spark, p).count(v =>
+          TableStore.versionNote(spark, p, v).exists(_.endsWith(s"tick=$b")))
+        assert(n == 1, s"crash at tick $crash: $p has $n tick=$b commits")
+      }
+    }
+  }
+
   /** st23's tick (manifestTick): the crash window BETWEEN the member
     * publishes and the manifest commit. The members land (guarded),
     * the manifest does not — a manifest reader still resolves the
