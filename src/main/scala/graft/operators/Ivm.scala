@@ -275,8 +275,11 @@ object Ivm {
     *
     * The view ⋈ delta merge runs ONCE, as one collect of the groups
     * the delta touches: view rows of other groups cannot change, so
-    * the merge is O(touched groups), bounded by the micro-batch like
-    * every delta broadcast here. Both branches read the collected
+    * the merge is O(touched groups). The collect is bounded at run
+    * time like [[joinViewDelta]]'s broadcasts: it stops one row past
+    * [[maxDeltaRows]] and a delta touching more groups than that is
+    * refused, so an O(state) diff never lands whole on the driver.
+    * Both branches read the collected
     * rows: the incremental one as they are, the rescan one as its
     * key set, so neither plans a merge (or a delta aggregate) of its
     * own. A tick that evicts nothing plans no rescan at all. The
@@ -315,7 +318,15 @@ object Ivm {
     val merged = view.hint("merge").join(deltaR, cond, "right_outer")
       .select(keys.map(kc => col(s"_d_$kc").as(kc)) ++
         Seq(newTopk.as("topk"), needsRescan.as("_rescan")): _*)
-    val rows = merged.collect()
+    val bound = maxDeltaRows
+    val rows = merged.limit(math.min(bound, Int.MaxValue - 1L).toInt + 1)
+      .collect()
+    if (rows.length > bound) throw new IllegalStateException(
+      s"applyDeltaTopK: the delta touches more than $bound groups " +
+        "(graft.ivm.maxDeltaRows) — the merge collects the touched groups " +
+        "to the driver, so the contract requires MICRO-BATCH-SIZED deltas; " +
+        "an O(state) catch-up must arrive as multiple ticks, or raise the " +
+        "bound only if driver memory can hold that many groups")
     val touched = view.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), merged.schema)
     val touchedKeys = touched.select(keys.map(kc => col(kc).as(s"_t_$kc")): _*)
@@ -413,7 +424,8 @@ object Ivm {
     * base row counts once.
     */
   /** Ceiling (rows, counted exactly) on a delta that may ride
-    * [[joinViewDelta]]'s broadcasts — the micro-batch contract as a
+    * [[joinViewDelta]]'s broadcasts, and on the groups
+    * [[applyDeltaTopKWith]] collects — the micro-batch contract as a
     * runtime bound. ROWS, not an optimizer size estimate: the first
     * implementation used `optimizedPlan.stats.sizeInBytes` and
     * false-positived immediately — i4's CDC diff (a full-outer-join
@@ -447,7 +459,7 @@ object Ivm {
 
   def joinViewDelta(aOld: DataFrame, bOld: DataFrame, dA: DataFrame,
       dB: DataFrame, keys: Seq[String], viewCols: Seq[String],
-      deltaRows: Option[(Long, Long)] = None): DataFrame = {
+      deltaRows: (Long, Long)): DataFrame = {
     def signed(d: DataFrame): DataFrame = d
       .withColumn("_s",
         when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
@@ -473,14 +485,14 @@ object Ivm {
     // The contract is now a RUNTIME GUARD, not just prose (r15
     // verdict task 5: "a comment is not a bound at 100 TB"): each
     // delta's rows are counted exactly and checked against
-    // maxDeltaRows before any probe plan is built. The count is one
-    // job over a delta the caller has materialized (a scan of a small
-    // cached/checkpointed relation), and an O(state) catch-up delta
-    // is orders of magnitude over the line. A caller that already
-    // counted both deltas (applyTick's one pre-flight pass) passes the
-    // counts as `deltaRows` and the guard runs no job of its own.
-    guardDeltaBroadcast(deltaRows.fold(da.count())(_._1), "dA")
-    guardDeltaBroadcast(deltaRows.fold(db.count())(_._2), "dB")
+    // maxDeltaRows before any probe plan is built. The caller passes
+    // the counts as `deltaRows` (dA's, dB's): a count is one job over
+    // a delta the caller has materialized (a scan of a small cached/
+    // checkpointed relation), which applyTick folds into its one
+    // pre-flight pass, and an O(state) catch-up delta is orders of
+    // magnitude over the line.
+    guardDeltaBroadcast(deltaRows._1, "dA")
+    guardDeltaBroadcast(deltaRows._2, "dB")
     // Callers whose base frames are EXPENSIVE to materialize (fold
     // chains, multi-version unions) should pre-restrict them to the
     // delta's keys before passing them in — see
@@ -505,7 +517,8 @@ object Ivm {
   def applyJoinDelta(view: DataFrame, aOld: DataFrame, bOld: DataFrame,
       dA: DataFrame, dB: DataFrame, keys: Seq[String]): DataFrame = {
     val viewCols = view.columns.filterNot(_ == "_mult").toSeq
-    val delta = joinViewDelta(aOld, bOld, dA, dB, keys, viewCols)
+    val delta = joinViewDelta(aOld, bOld, dA, dB, keys, viewCols,
+      (dA.count(), dB.count()))
     // NULL-SAFE on every view column: joinView's groupBy treats NULLs
     // as equal, so a NULL in any data column must still pair the view
     // row with its delta row — a plain equi-join would strand the

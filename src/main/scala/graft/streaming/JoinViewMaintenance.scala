@@ -427,7 +427,7 @@ object JoinViewMaintenance {
       val viewCols = (aPrev0.columns ++ bPrev0.columns).distinct
         .filterNot(_ == "_mult").toSeq
       val dView = Ivm.joinViewDelta(aPrev, bPrev, dA, dB, keys, viewCols,
-        deltaRows = Some((statsA.rows, statsB.rows)))
+        (statsA.rows, statsB.rows))
         .withColumnRenamed("_dmult", "_mult")
       Some(Future(inCaller(TableStore.stageVersionData(spark, viewPath, dView))))
     } else None

@@ -71,6 +71,27 @@ class IvmTopKSpec extends SparkSpec {
       "a below-k delete must not touch the base at all")
   }
 
+  test("a delta touching more groups than maxDeltaRows is refused before it reaches the driver") {
+    val v1 = base((1L, 10.0, 1L), (2L, 5.0, 2L), (3L, 7.0, 3L))
+    val v2 = base((1L, 10.0, 1L), (1L, 9.0, 4L), (2L, 5.0, 2L), (2L, 6.0, 5L),
+      (3L, 7.0, 3L))
+    val view1 = Ivm.aggregateTopK(v1, Seq("g"), "v", "id", K)
+    val changes = changesOf(Nil, Seq((1L, 9.0, 4L), (2L, 6.0, 5L)))
+    sys.props("graft.ivm.maxDeltaRows") = "1"
+    try {
+      val ex = intercept[IllegalStateException] {
+        Ivm.applyDeltaTopK(view1, changes, v2, Seq("g"), "v", "id", K)
+      }
+      assert(ex.getMessage.contains("MICRO-BATCH-SIZED"), ex.getMessage)
+      assert(ex.getMessage.contains("graft.ivm.maxDeltaRows"), ex.getMessage)
+    } finally sys.props -= "graft.ivm.maxDeltaRows"
+    // two touched groups fit a bound of two, and the default passes too
+    sys.props("graft.ivm.maxDeltaRows") = "2"
+    try check(v1, v2, Nil, Seq((1L, 9.0, 4L), (2L, 6.0, 5L)))
+    finally sys.props -= "graft.ivm.maxDeltaRows"
+    check(v1, v2, Nil, Seq((1L, 9.0, 4L), (2L, 6.0, 5L)))
+  }
+
   test("emptied group vanishes; group born this tick appears; same-tick birth+shrink rescans") {
     val v1 = base((1L, 10.0, 1L), (2L, 5.0, 2L))
     // group 2 emptied; group 3 born with two inserts and one delete
