@@ -17,7 +17,11 @@ import org.apache.spark.sql.functions._
   *     ratio + flatness) beside their batch replays, BENCH_SF1_TICKS;
   *   - `spot`  — the most expensive non-streaming queries one decade
   *     further (sf1 → sf10), plus the DOULION accuracy gate,
-  *     BENCH_SF10.
+  *     BENCH_SF10;
+  *   - `spot100` — five of them one decade further again (sf10 →
+  *     sf100), plus i4's pre-seeded tick, the LSH cap recall and the
+  *     DOULION gate, BENCH_SF100. Each row and each i4 phase runs in its
+  *     own session (see [[Spec]]'s `isolate`).
   *
   * Gates per query: no plan flip (any CartesianProduct at large stats,
   * or a BroadcastNestedLoopJoin more there than at small — a keyed
@@ -25,10 +29,12 @@ import org.apache.spark.sql.functions._
   * the wall ratio (min-of-reps large / small) under its ceiling, and,
   * where the audit gates memory, no [[QueryProfile]] headroom flag.
   *
-  * Usage: tools/run.sh graft.ScaleAudit <plan|docs|state|ticks|spot>
-  *          [smallDir largeDir [out]]
+  * Usage: tools/run.sh graft.ScaleAudit
+  *          <plan|docs|state|ticks|spot|spot100> [smallDir largeDir [out]]
   * Prints one JSON line per query, writes the JSON report to `out`
-  * (each spec's default) and exits nonzero on any gate failure.
+  * (each spec's default) and exits nonzero on any gate failure. A row
+  * or extra that throws counts as one failed gate, its message in the
+  * report, and the audit moves on.
   */
 object ScaleAudit {
 
@@ -95,7 +101,7 @@ object ScaleAudit {
       memFlag: Boolean, ticks: Seq[Double])
 
   final class Harness(val spark: SparkSession) {
-    private val prof = QueryProfile.attach(spark)
+    val prof: QueryProfile = QueryProfile.attach(spark)
 
     def close(): Unit = prof.detach()
 
@@ -105,8 +111,7 @@ object ScaleAudit {
       * `reps = 0` plans without executing. `ticks` sets the
       * `graft.state.ticks` replay length.
       */
-    def run(name: String, dir: String, reps: Int, ticks: Option[Int],
-        afterRep: () => Unit = () => ()): Run = {
+    def run(name: String, dir: String, reps: Int, ticks: Option[Int]): Run = {
       ticks.foreach(t => sys.props("graft.state.ticks") = t.toString)
       if (reps == 0) {
         val plan = SparkEntry.queries(name)(spark, dir)
@@ -119,12 +124,25 @@ object ScaleAudit {
         val df = SparkEntry.queries(name)(spark, dir)
         df.write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
-        val ticks = prof.tickWalls
-        afterRep()
         Run(secs, opCounts(df.queryExecution.executedPlan.toString()),
           prof.peakTaskMb, prof.spillMb, prof.driverHeapMb,
-          prof.headroomFlag(Slots), ticks)
+          prof.headroomFlag(Slots), prof.tickWalls)
       }.minBy(_.secs)
+    }
+  }
+
+  /** Where an audit measures: on `shared`, or, when that is None, on a
+    * new `Session.local(Slots)` per call. The new session is stopped
+    * after the call, which deletes its block-manager dir (shuffle and
+    * local-checkpoint blocks), and the Scratch dirs made meanwhile are
+    * removed, so an isolated audit reclaims only its own scratch.
+    */
+  final class Sessions(shared: Option[Harness]) {
+    def apply[A](body: Harness => A): A = shared match {
+      case Some(h) => body(h)
+      case None =>
+        val h = new Harness(Session.local(Slots))
+        try body(h) finally { h.close(); h.spark.stop(); Scratch.cleanup() }
     }
   }
 
@@ -169,29 +187,49 @@ object ScaleAudit {
     * the per-query rows (after them otherwise).
     */
   final case class Extra(key: String, consts: Seq[(String, Any)],
-      run: (Harness, Spec, String, String) => (Obj, Int), first: Boolean)
+      run: (Sessions, Spec, String, String) => (Obj, Int), first: Boolean)
+
+  /** An extra's run that measures in one session. */
+  private def inOne(gate: (Harness, Spec, String, String) => (Obj, Int)) =
+    (on: Sessions, spec: Spec, small: String, large: String) =>
+      on(gate(_, spec, small, large))
 
   /** One audit. `ticks` is the (small, large) `graft.state.ticks`, left
     * untouched when None; `labels` name the two sides in report keys;
     * `defaults` are (smallDir, largeDir, out); `header` leads the report.
+    * `isolate` runs each row, each extra and each i4 phase in its own
+    * session (see [[Sessions]]); a row first runs its own query once on
+    * the small dir to warm up. Isolated rows must not rely on Scratch
+    * dirs an earlier row made.
     */
   final case class Spec(queries: Seq[String], defaultCeiling: Double,
       ceilings: Map[String, Double] = Map.empty, noiseFloorSec: Double = 0.0,
       reps: Int, ticks: Option[(Int, Int)] = None, memGates: Boolean = false,
-      warmup: Seq[String] = Nil, extra: Option[Extra] = None,
+      warmup: Seq[String] = Nil, extras: Seq[Extra] = Nil,
+      isolate: Boolean = false,
       labels: (String, String), defaults: (String, String, String),
       header: Seq[(String, String)])
 
-  /** Runs `spec` on `spark` and writes its report to `out`; returns the
-    * exit code (1 on any gate failure).
+  /** The first line of `e`'s message, for a report. */
+  private def firstLine(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.toString).linesIterator.nextOption()
+      .getOrElse(e.toString).take(300)
+
+  /** Runs `spec` and writes its report to `out`; returns the exit code
+    * (1 on any gate failure). `spark` is the session of a spec that does
+    * not isolate, and None for one that does.
     */
-  def audit(spark: SparkSession, spec: Spec, small: String, large: String,
-      out: String): Int = {
-    val h = new Harness(spark)
+  def audit(spark: Option[SparkSession], spec: Spec, small: String,
+      large: String, out: String): Int = {
+    require(spark.isEmpty == spec.isolate,
+      "an isolating spec builds its own sessions; any other runs on the one given")
+    val shared = spark.map(new Harness(_))
+    val on = new Sessions(shared)
     val (s, l) = spec.labels
     val (ticksS, ticksL) = (spec.ticks.map(_._1), spec.ticks.map(_._2))
     // absorb codegen / scan-service / streaming-machinery startup per dir
-    for ((dir, t) <- Seq(small -> ticksS, large -> ticksL); q <- spec.warmup)
+    for (h <- shared; (dir, t) <- Seq(small -> ticksS, large -> ticksL);
+         q <- spec.warmup)
       h.run(q, dir, spec.reps, t)
 
     final case class Row(name: String, small: Run, large: Run) {
@@ -210,30 +248,37 @@ object ScaleAudit {
         "mem_flag" -> large.memFlag)
     }
     def runExtra(e: Extra) = {
-      val (json, fails) = e.run(h, spec, small, large)
+      val (json, fails) = try e.run(on, spec, small, large) catch {
+        case x: Exception => (Obj("error" -> firstLine(x), "fail" -> true), 1)
+      }
       println(render(Obj(e.key -> json)))
       (e.key -> json, fails)
     }
-    val early = spec.extra.filter(_.first).map(runExtra)
-    val rows = spec.queries.map { n =>
-      val row = Row(n, h.run(n, small, spec.reps, ticksS),
-        h.run(n, large, spec.reps, ticksL))
-      println(render(Obj(("query" -> n) +: row.json.fields: _*)))
+    val early = spec.extras.filter(_.first).map(runExtra)
+    val measured = spec.queries.map { n =>
+      val row = try Right(on { h =>
+        if (spec.isolate) h.run(n, small, 1, ticksS)
+        Row(n, h.run(n, small, spec.reps, ticksS),
+          h.run(n, large, spec.reps, ticksL))
+      }) catch { case x: Exception => Left(n -> firstLine(x)) }
+      println(render(row.fold({ case (q, e) => Obj("query" -> q, "error" -> e) },
+        r => Obj(("query" -> n) +: r.json.fields: _*))))
       row
     }
-    val extra = early.orElse(spec.extra.map(runExtra))
-    h.close()
+    val extras = early ++ spec.extras.filterNot(_.first).map(runExtra)
+    shared.foreach(_.close())
 
-    val fails = rows.map(_.fails).sum + extra.map(_._2).sum
+    val rows = measured.collect { case Right(r) => r }
+    val errors = measured.collect { case Left(e) => e }
+    val fails = rows.map(_.fails).sum + errors.size + extras.map(_._2).sum
     val (totS, totL) = (rows.map(_.small.secs).sum, rows.map(_.large.secs).sum)
-    val worst = rows.maxBy(_.ratio)
     val memory = if (spec.memGates) "per-run max task peakExecutionMemory x " +
       s"$Slots slots <= 80 pct of the unified execution pool" else "recorded, not gated"
     val gates = Seq("default_max_ratio" -> spec.defaultCeiling,
       "noise_floor_sec" -> spec.noiseFloorSec, "max_ratio" -> spec.ceilings,
       "reps" -> spec.reps) ++
       spec.ticks.toSeq.flatMap { case (a, b) => Seq("ticks_small" -> a, "ticks_large" -> b) } ++
-      Seq("plan_flips" -> 0, "memory" -> memory) ++ spec.extra.toSeq.flatMap(_.consts)
+      Seq("plan_flips" -> 0, "memory" -> memory) ++ spec.extras.flatMap(_.consts)
     val report = Obj(spec.header ++ Seq(
       "gates" -> Obj(gates: _*),
       s"total_${s}_sec" -> totS,
@@ -241,12 +286,14 @@ object ScaleAudit {
       "wall_ratio" -> totL / totS,
       "plan_audit" -> (s"${rows.size} queries, ${rows.count(_.flip)} flips " +
         "(CartesianProduct or new BroadcastNestedLoopJoin), " +
-        s"${rows.count(_.ratioFail)} wall-ratio gate failures"),
-      "memory_audit" -> s"${rows.count(_.large.memFlag)} of ${rows.size} large runs flagged",
-      "worst_query" -> Obj("name" -> worst.name, "ratio" -> worst.ratio),
-      "fails" -> fails) ++
-      extra.map(_._1) :+
-      ("queries" -> Obj(rows.map(r => r.name -> r.json): _*)): _*)
+        s"${rows.count(_.ratioFail)} wall-ratio gate failures, " +
+        s"${errors.size} failed runs"),
+      "memory_audit" -> s"${rows.count(_.large.memFlag)} of ${rows.size} large runs flagged") ++
+      rows.maxByOption(_.ratio).map(w =>
+        "worst_query" -> Obj("name" -> w.name, "ratio" -> w.ratio)) ++
+      Seq("fails" -> fails) ++ extras.map(_._1) :+
+      ("queries" -> Obj(measured.map(_.fold({ case (q, e) =>
+        q -> Obj("error" -> e, "fail" -> true) }, r => r.name -> r.json)): _*)): _*)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       render(report, lines = 2).getBytes("UTF-8"))
     println(s"wrote $out (fails=$fails)")
@@ -257,10 +304,10 @@ object ScaleAudit {
     case mode :: rest if Specs.contains(mode) && rest.size <= 3 =>
       val spec = Specs(mode)
       val (ds, dl, dout) = spec.defaults
-      val spark = Session.local(Slots)
+      val spark = if (spec.isolate) None else Some(Session.local(Slots))
       val code = try audit(spark, spec, rest.lift(0).getOrElse(ds),
         rest.lift(1).getOrElse(dl), rest.lift(2).getOrElse(dout))
-      finally spark.stop()
+      finally spark.foreach(_.stop())
       if (code != 0) sys.exit(code)
     case other =>
       sys.error(s"usage: ScaleAudit <${Specs.keys.toSeq.sorted.mkString("|")}> " +
@@ -282,6 +329,8 @@ object ScaleAudit {
     "docs" -> Spec(
       queries = DocsQueries, defaultCeiling = 5.0, ceilings = DocsCeilings,
       noiseFloorSec = 0.25, reps = 2, warmup = DocsQueries.take(1),
+      extras = Seq(Extra("incr_cap_recall", Seq("incr_min_recall" -> MinRecall),
+        inOne(incrRecallGate), first = false)),
       labels = ("sf0.1", "sf1"), defaults = (Sf01, "/tmp/sf1", "BENCH_SF1_DOCS.json"),
       header = Seq(
         "metric" -> "docs_scale_headroom",
@@ -291,8 +340,8 @@ object ScaleAudit {
       queries = StateQueries, defaultCeiling = 4.0, ceilings = StateCeilings,
       reps = 2, ticks = Some((3, 6)),
       warmup = Seq("s17_compaction", "st12_stream_cdc_apply"),
-      extra = Some(Extra("skipping_probe", Seq("probe_max_planned" -> ProbeMaxPlanned),
-        skippingGate, first = false)),
+      extras = Seq(Extra("skipping_probe", Seq("probe_max_planned" -> ProbeMaxPlanned),
+        inOne(skippingGate), first = false)),
       labels = ("sf0.1", "sf1"), defaults = (Sf01, "/tmp/sf1", "BENCH_SF1_STATE.json"),
       header = Seq(
         "metric" -> "state_scale_headroom",
@@ -303,9 +352,9 @@ object ScaleAudit {
       defaultCeiling = 4.0, ceilings = Map("i4_join_view_ivm" -> 5.5),
       reps = 1, ticks = Some((3, 3)), memGates = true,
       warmup = Seq("st15_stream_join_ivm"),
-      extra = Some(Extra("streaming", Seq("tick_ratio_max" -> MaxTickRatio,
+      extras = Seq(Extra("streaming", Seq("tick_ratio_max" -> MaxTickRatio,
         "flatness_max" -> MaxFlatness, "stream_ticks_small" -> StreamTicks._1,
-        "stream_ticks_large" -> StreamTicks._2), tickGate, first = true)),
+        "stream_ticks_large" -> StreamTicks._2), inOne(tickGate), first = true)),
       labels = ("small", "large"), defaults = (Sf01, "/tmp/sf1", "BENCH_SF1_TICKS.json"),
       header = Seq(
         "metric" -> "ivm_tick_scale_headroom",
@@ -314,14 +363,31 @@ object ScaleAudit {
       queries = SpotQueries, defaultCeiling = 12.0,
       ceilings = Map("g3_triangle_count" -> 32.0), noiseFloorSec = 0.5,
       reps = 2, memGates = true, warmup = SpotQueries.take(1),
-      extra = Some(Extra("doulion_accuracy", Seq("doulion_max_err" -> DoulionMaxErr),
-        doulionGate, first = true)),
+      extras = Seq(Extra("doulion_accuracy", Seq("doulion_max_err" -> DoulionMaxErr),
+        inOne(doulionGate), first = true)),
       labels = ("sf1", "sf10"), defaults = ("/tmp/sf1", "/tmp/sf10", "BENCH_SF10.json"),
       header = Seq(
         "metric" -> "spot_scale_headroom_100x",
         "data_ratio" -> "sf1 -> sf10 (10x on top of the committed 10x audits; 100x the sf0.1 bench SF — lineitem ~60M rows, documents 500k, embeddings 200k, events 10M; tools/gen_sf.py seed 4242)",
         "why" -> "the 10x audits' 1.5-1.8x wall ratios prove overhead domination; this decade is compute-dominated, so a hidden quadratic term has nowhere to hide",
-        "protocol" -> "min-of-2, local[32], per-dir warmup query")))
+        "protocol" -> "min-of-2, local[32], per-dir warmup query")),
+    "spot100" -> Spec(
+      queries = Spot100Queries, defaultCeiling = 12.0,
+      ceilings = Map("g6_triangle_doulion" -> 32.0), reps = 2, memGates = true,
+      isolate = true,
+      extras = Seq(
+        Extra("i4_tick", Seq("i4_tick_max_ratio" -> I4TickMaxRatio), i4TickGate,
+          first = false),
+        Extra("lsh_cap_recall", Seq("lsh_min_recall" -> MinRecall),
+          inOne(lshRecallGate), first = false),
+        Extra("doulion_accuracy", Seq("doulion_max_err" -> DoulionMaxErr),
+          inOne(doulionGate), first = false)),
+      labels = ("sf10", "sf100"), defaults = ("/tmp/sf10", "/tmp/sf100", "BENCH_SF100.json"),
+      header = Seq(
+        "metric" -> "spot_scale_headroom_1000x",
+        "data_ratio" -> "sf10 -> sf100 (one decade past the committed 100x spot audit; 1000x the sf0.1 bench SF — lineitem ~600M rows, orders 150M, documents 5M, embeddings 2M, events 100M; tools/gen_sf.py seed 4242)",
+        "why" -> "every prior decade caught a real super-linear term; sf100 is where a vertex-sized broadcast, a driver-sized collect or a small-constant n log n actually shows",
+        "protocol" -> "ONE SESSION PER ROW: per-query scratch is tens of GB at this volume and accumulates for the life of a session, so each row, each extra and each i4 phase runs in its own local[32] session, stopped (its block-manager dir deleted) and its Scratch dirs removed before the next; each row warms its query once on the small dir first; min-of-2")))
 
   // ---- docs: the training-data operator family
 
@@ -431,6 +497,80 @@ object ScaleAudit {
     // the inflated reading; a genuinely quadratic pair generator
     // (corpus x corpus) would read ~100x and still trips it
     "k25_bitext_margin" -> 6.5)
+
+  /** The recall floor of the LSH occupancy caps (`lsh_cap_recall`,
+    * `incr_cap_recall`): capped pairs / uncapped pairs, where the capped
+    * set is a subset by construction (LshCapSpec, LshIncrementalSpec).
+    */
+  private val MinRecall = 0.99
+
+  /** `capped` / `uncapped`, and 1 when there is nothing to recall. */
+  private def recall(capped: Long, uncapped: Long): Double =
+    if (uncapped == 0) 1.0 else capped.toDouble / uncapped
+
+  /** Shingled documents of `dir`, cached. */
+  private def shingled(spark: SparkSession, dir: String) = {
+    implicit val dl: graft.functions.XSql.Dialect = graft.functions.XSql.Spark
+    spark.read.parquet(s"$dir/documents.parquet")
+      .withColumn("sh", expr(graft.functions.XSql.shinglesOfText("text")))
+      .select("doc_id", "sh").cache()
+  }
+
+  /** The stored-side cap's recall (d9, st7) on the large dir, the scale
+    * where stored-bucket occupancy first exceeds BucketCap at sf1
+    * (BENCH_SF1_INCR). d9: capped vs uncapped candidate pairs of its
+    * (new × old) ∪ (new × new-prior) policy, fresh = doc_id % 5 == 4,
+    * plus the kept/drop verdict agreement over the new docs (the field
+    * its consumers act on). st7: the union over 3 sequential batches
+    * (doc_id % 3) of per-batch incremental pairs. Gate: all three at
+    * least [[MinRecall]].
+    */
+  private def incrRecallGate(h: Harness, spec: Spec, small: String,
+      large: String): (Obj, Int) = {
+    import graft.operators.Lsh
+    import org.apache.spark.sql.DataFrame
+    val sh = shingled(h.spark, large)
+    val bands = Lsh.bands(sh)
+      .select("band_idx", "band_key", "doc_id", "sh")
+      .filter(col("band_key").isNotNull).cache()
+    val fresh9 = bands.filter(col("doc_id") % 5 === 4)
+    val stored9 = bands.filter(col("doc_id") % 5 =!= 4)
+    def verdicts(cand: DataFrame) = cand
+      .groupBy("na").agg(
+        countDistinct(when(col("b_old"), col("ob"))).as("n_old"),
+        countDistinct(when(!col("b_old") && col("ob") < col("na"),
+          col("ob"))).as("n_prior"))
+      .select(col("na"), (col("n_old") === 0 && col("n_prior") === 0).as("kept"))
+    def pairs9(c: DataFrame) =
+      c.filter(col("b_old") || col("ob") < col("na"))
+        .select(least(col("na"), col("ob")).as("a"),
+          greatest(col("na"), col("ob")).as("b")).distinct().count()
+    val unc9 = Lsh.incrementalCandidates(fresh9, stored9, 0.5)
+    val cap9 = Lsh.incrementalCandidatesCapped(fresh9, stored9, 0.5)
+    val (p9u, p9c) = (pairs9(unc9), pairs9(cap9))
+    val disagree = verdicts(unc9).withColumnRenamed("kept", "ku")
+      .join(verdicts(cap9).withColumnRenamed("kept", "kc"), Seq("na"), "full_outer")
+      .filter(!(col("ku") <=> col("kc"))).count()
+    val nNew = sh.filter(col("doc_id") % 5 === 4).count()
+    def st7Pairs(capped: Boolean): Long = (0 until 3).map { k =>
+      val nb = bands.filter(col("doc_id") % 3 === k)
+      val st = bands.filter(col("doc_id") % 3 < k)
+      if (capped) Lsh.incrementalPairsCapped(nb, st, 0.5)
+      else Lsh.incrementalPairs(nb, st, 0.5)
+    }.reduce(_ unionByName _).select("doc_a", "doc_b").distinct().count()
+    val (p7u, p7c) = (st7Pairs(false), st7Pairs(true))
+    bands.unpersist(); sh.unpersist()
+    val agreement = if (nNew == 0) 1.0 else 1.0 - disagree.toDouble / nNew
+    val fail = Seq(recall(p9c, p9u), agreement, recall(p7c, p7u)).exists(_ < MinRecall)
+    (Obj("scale" -> spec.labels._2,
+      "d9" -> Obj("uncapped_pairs" -> p9u, "capped_pairs" -> p9c,
+        "pair_recall" -> recall(p9c, p9u), "verdict_disagree" -> disagree,
+        "n_new_docs" -> nNew, "verdict_agreement" -> agreement),
+      "st7" -> Obj("uncapped_pairs" -> p7u, "capped_pairs" -> p7c,
+        "pair_recall" -> recall(p7c, p7u)),
+      "cap" -> Lsh.BucketCap, "min_recall" -> MinRecall, "fail" -> fail),
+      if (fail) 1 else 0)
+  }
 
   // ---- state: the lakehouse / IVM / streaming-state family
 
@@ -635,5 +775,190 @@ object ScaleAudit {
       s"${s}_exact" -> exS, s"${s}_est" -> estS, s"${s}_err" -> errS,
       s"${l}_exact" -> exL, s"${l}_est" -> estL, s"${l}_err" -> errL,
       "fail" -> fail), if (fail) 1 else 0)
+  }
+
+  // ---- spot100: the decade after (sf10 → sf100)
+
+  /** The sf100 spot rows, each with its scale contract:
+    *   - g6: O((pm)^1.5) in sampled edges (p = 1/4 DOULION), so 10×
+    *     data admits ~32×; accuracy is gated against the exact count;
+    *   - d15: O(W log W) in the total window count (~90 per doc), three
+    *     skinny shuffles, window width sized off the corpus bytes;
+    *   - d11: a 64k-stride-bounded quantizer (fixed training sample,
+    *     one broadcast argmin pass), ~linear;
+    *   - j17: three O(dim) scd2Upsert version writes plus an equi
+    *     SortMergeJoin of facts × history (the dim crosses the broadcast
+    *     budget between sf1 and sf10, so this decade stays in one
+    *     regime), validity-window fan-out at most 3 versions per key;
+    *   - c3: occupancy-capped + hub-star LSH pairs, O(buckets·cap² +
+    *     rows) collision volume, recall gated by `lsh_cap_recall`.
+    * Every row but g6 gates at the 12× default.
+    */
+  private val Spot100Queries = Seq(
+    "g6_triangle_doulion", "d15_substring_dedup", "d11_semantic_dedup",
+    "j17_temporal_dim_join", "c3_dedup_by_components")
+
+  /** The occupancy-cap recall on the real corpus distribution: capped +
+    * star pairs vs the uncapped truth on the small dir, where the cap
+    * engages (from sf1 up) but the uncapped join is still affordable.
+    */
+  private def lshRecallGate(h: Harness, spec: Spec, small: String,
+      large: String): (Obj, Int) = {
+    import graft.operators.Lsh
+    val sh = shingled(h.spark, small)
+    val full = Lsh.verifiedPairs(sh, 0.5).count()
+    val capped = Lsh.verifiedPairsCapped(sh, 0.5).count()
+    sh.unpersist()
+    val fail = recall(capped, full) < MinRecall
+    (Obj("uncapped_pairs" -> full, "capped_pairs" -> capped,
+      "recall" -> recall(capped, full), "cap" -> Lsh.BucketCap,
+      "min_recall" -> MinRecall, "fail" -> fail), if (fail) 1 else 0)
+  }
+
+  /** i4's tick is measured on a fixed-size slice: the edit script
+    * applies to orders with o_orderkey below this at every scale, so the
+    * batch is the same while the maintained state grows 10×.
+    */
+  private val I4SliceMax = 1000000L
+
+  /** Tick wall = O(base probe scan) + O(batch · fanout); the probes
+    * read both fold snapshots once, so the tick ratio is held to the
+    * 10× data ratio's 12× default.
+    */
+  private val I4TickMaxRatio = 12.0
+
+  /** i4's pre-tick bases, the catalog body's shapes: orders projected to
+    * its three view columns; lineitem one row per (orderkey, linenumber)
+    * with a deterministic max.
+    */
+  private def i4Bases(spark: SparkSession, dir: String) = {
+    val a = spark.read.parquet(s"$dir/orders.parquet")
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    val b = spark.read.parquet(s"$dir/lineitem.parquet")
+      .groupBy(col("l_orderkey").as("o_orderkey"), col("l_linenumber"))
+      .agg(max(col("l_extendedprice")).as("l_extendedprice"))
+    (a, b)
+  }
+
+  /** Runs `body` with one shuffle partition per ~8 MB of `dir`'s
+    * lineitem, within [8, 2048] (the catalog i4's discipline without its
+    * 32 ceiling: 32 partitions at sf100 are ~19M-row tasks).
+    */
+  private def volumeSized[A](spark: SparkSession, dir: String)(body: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val liBytes = Tables.inputBytes(s"$dir/lineitem.parquet")
+    spark.conf.set(key, math.max(8L, math.min(2048L, liBytes / (8L << 20))).toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** One i4 phase's report object, wall and memory flag. */
+  private final case class Phase(json: Obj, wall: Double, memFlag: Boolean)
+
+  private def phase(h: Harness, name: String, t0: Long, more: (String, Any)*) = {
+    val wall = (System.nanoTime() - t0) / 1e9
+    val flag = h.prof.headroomFlag(Slots)
+    Phase(Obj(Seq("phase" -> name, "wall" -> wall, "peak_task_mb" -> h.prof.peakTaskMb,
+      "spill_mb" -> h.prof.spillMb) ++ more :+ ("mem_flag" -> flag): _*), wall, flag)
+  }
+
+  /** Seeds `store` with the three pre-tick fold states (base A, base B
+    * and their join view) as v0 snapshots: the O(data) step by
+    * construction, timed as its own number and never gated. The bases
+    * are clustered on the join key, so a tick's key-range probe can
+    * prune their files; the view seeds by a direct join with _mult = 1
+    * (unique inputs: every view tuple once), without Ivm.joinView's
+    * canonicalizing shuffle.
+    */
+  private def i4Seed(h: Harness, dir: String, store: String): Phase =
+    volumeSized(h.spark, dir) {
+      import graft.operators.TableStore
+      import graft.streaming.JoinViewMaintenance.InitTick
+      h.prof.reset()
+      val t0 = System.nanoTime()
+      val (a, b) = i4Bases(h.spark, dir)
+      val note = s"tick=$InitTick"
+      TableStore.publishFoldSnapshotDistinct(h.spark, s"$store/fa", a, note,
+        clusterBy = Seq("o_orderkey"))
+      TableStore.publishFoldSnapshotDistinct(h.spark, s"$store/fb", b, note,
+        clusterBy = Seq("o_orderkey"))
+      TableStore.publishFoldSnapshotCanonical(h.spark, s"$store/view",
+        a.join(b, "o_orderkey").withColumn("_mult", lit(1L)), note)
+      phase(h, "seed", t0, "store_gb" -> Tables.inputBytes(store) / 1e9)
+    }
+
+  /** ONE maintenance tick through applyTick (the catalog i4's and the
+    * st15 loop's path) on the seeded `store`, its changelogs the keyed
+    * diffs of the slice and its edit. With `check`, the maintained view
+    * must equal a join of the edited bases in three global multiset sums
+    * (count, Σ price, Σ extended price): a sign, multiplicity or
+    * changelog-shape error cannot cancel out of all three.
+    */
+  private def i4Tick(h: Harness, dir: String, store: String,
+      check: Boolean): Phase = volumeSized(h.spark, dir) {
+    import graft.operators.TableStore
+    import graft.queries.{editLineitem, editOrders}
+    import org.apache.spark.sql.{Column, DataFrame}
+    val (a, b) = i4Bases(h.spark, dir)
+    val slice = col("o_orderkey") < I4SliceMax
+    val (aS, bS) = (a.filter(slice), b.filter(slice))
+    val dA = TableStore.diffKeyed(aS, editOrders(aS), Seq("o_orderkey"))
+      .localCheckpoint()
+    val dB = TableStore.diffKeyed(bS, editLineitem(bS),
+      Seq("o_orderkey", "l_linenumber")).localCheckpoint()
+    val (nA, nB) = (dA.count(), dB.count())
+    h.prof.reset()
+    val t0 = System.nanoTime()
+    graft.streaming.JoinViewMaintenance.applyTick(h.spark, s"$store/view",
+      s"$store/fa", s"$store/fb", dA, dB, Seq("o_orderkey"), batchId = 0L)
+    val done = phase(h, "tick", t0, "delta_a_rows" -> nA, "delta_b_rows" -> nB,
+      "checked" -> check)
+    if (check) {
+      def sums(df: DataFrame, mult: Column) = {
+        val r = df.agg(sum(mult),
+          sum(col("o_totalprice").cast("decimal(30,2)") * mult),
+          sum(col("l_extendedprice").cast("decimal(30,2)") * mult)).head()
+        (r.getLong(0), r.getDecimal(1), r.getDecimal(2))
+      }
+      val maintained = sums(TableStore.readFoldedUnion(h.spark, s"$store/view"),
+        col("_mult"))
+      val expected = sums(a.filter(!slice).unionByName(editOrders(aS))
+        .join(b.filter(!slice).unionByName(editLineitem(bS)), "o_orderkey"), lit(1L))
+      require(maintained == expected,
+        s"i4 tick: maintained $maintained != recomputed $expected")
+    }
+    done
+  }
+
+  /** Per scale, one session seeds a fresh store and another runs the
+    * tick (the maintained == recomputed check on the small side), then
+    * the store goes. Gates the tick ratio and every phase's memory.
+    */
+  private def i4TickGate(on: Sessions, spec: Spec, small: String,
+      large: String): (Obj, Int) = {
+    def scale(dir: String, check: Boolean): (Phase, Phase) = {
+      val store = new Scratch
+      try {
+        val root = store.dir("i4_store").toString
+        (on(i4Seed(_, dir, root)), on(i4Tick(_, dir, root, check)))
+      } finally store.cleanup()
+    }
+    val (s, l) = spec.labels
+    val (seedS, tickS) = scale(small, check = true)
+    val (seedL, tickL) = scale(large, check = false)
+    val tr = ratio(tickS.wall, tickL.wall)
+    val fail = tr > I4TickMaxRatio
+    val memFails = Seq(seedS.memFlag || tickS.memFlag, seedL.memFlag || tickL.memFlag)
+      .count(identity)
+    (Obj("protocol" -> ("per scale, one session seeds the fold states and " +
+        "another runs ONE applyTick with the i4 edit script restricted to " +
+        s"o_orderkey < $I4SliceMax (the same batch at both scales, 10x state); " +
+        s"maintained == recomputed is checked on the $s side"),
+      "gate" -> I4TickMaxRatio,
+      s -> Obj("seed" -> seedS.json, "tick" -> tickS.json),
+      l -> Obj("seed" -> seedL.json, "tick" -> tickL.json),
+      "tick_ratio" -> tr,
+      "seed_ratio_recorded_ungated" -> ratio(seedS.wall, seedL.wall),
+      "fail" -> fail), memFails + (if (fail) 1 else 0))
   }
 }

@@ -6,9 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 /** Scratch directories: each [[dir]] is a new `graft_<name>*` directory
   * under `java.io.tmpdir`, removed with everything in it by [[cleanup]]
-  * (`File.deleteOnExit` removes only empty directories). The
-  * `graft_<name>` prefix is a contract: `ScaleSpot100Check` reclaims
-  * i4's scratch between runs by it.
+  * (`File.deleteOnExit` removes only empty directories).
   */
 final class Scratch {
   private val made = new ConcurrentLinkedQueue[Path]()
@@ -30,6 +28,9 @@ object Scratch {
   sys.addShutdownHook(jvm.cleanup())
 
   def dir(name: String): Path = jvm.dir(name)
+
+  /** Removes every directory [[dir]] and [[table]] made so far. */
+  def cleanup(): Unit = jvm.cleanup()
 
   /** A not-yet-existing path in a new scratch dir, for a writer that
     * creates its own table directory. */

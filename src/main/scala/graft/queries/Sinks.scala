@@ -274,18 +274,7 @@ object Sinks {
       val viewPath = Scratch.table("i3_view")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      // inserted rows take NEGATED keys: TPC-H keys are >= 1, so -k
-      // can never collide with a real key at ANY scale factor (a
-      // fixed +offset would collide once keys exceed it, silently
-      // breaking the key-uniqueness the changelog diff requires)
-      val edited = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_custkey", when(col("o_orderkey") % 17 === 0,
-          col("o_custkey") + 1).otherwise(col("o_custkey")))
-        .withColumn("o_totalprice", when(col("o_orderkey") % 11 === 0,
-          col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-        .unionByName(o.filter(col("o_orderkey") % 13 === 0)
-          .select((-col("o_orderkey")).as("o_orderkey"),
-            col("o_custkey"), (col("o_totalprice") + 1000).as("o_totalprice")))
+      val edited = editOrders(o)
       val v1 = TableStore.publishVersion(s, path, o, note = "base")
       val v2 = TableStore.publishVersion(s, path, edited, note = "edit")
       // materialize the view at v1, then maintain it WITHOUT v1
@@ -353,14 +342,7 @@ object Sinks {
       val a = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .cache()
-      val editedA = a.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_custkey", when(col("o_orderkey") % 17 === 0,
-          col("o_custkey") + 1).otherwise(col("o_custkey")))
-        .withColumn("o_totalprice", when(col("o_orderkey") % 11 === 0,
-          col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-        .unionByName(a.filter(col("o_orderkey") % 13 === 0)
-          .select((-col("o_orderkey")).as("o_orderkey"),
-            col("o_custkey"), (col("o_totalprice") + 1000).as("o_totalprice")))
+      val editedA = editOrders(a)
       // the synthetic lineitem does NOT have unique (orderkey,
       // linenumber) pairs (unlike real TPC-H), and a keyed changelog
       // diff needs a real key — collapse to one row per key with a
@@ -372,15 +354,7 @@ object Sinks {
         .groupBy(col("l_orderkey").as("o_orderkey"), col("l_linenumber"))
         .agg(max(col("l_extendedprice")).as("l_extendedprice"))
         .localCheckpoint()
-      val bTouched = (col("o_orderkey") + col("l_linenumber")) % 6
-      val editedB = b.filter(bTouched =!= 0)
-        .withColumn("l_extendedprice",
-          when((col("o_orderkey") + col("l_linenumber")) % 9 === 0,
-            col("l_extendedprice") + 100).otherwise(col("l_extendedprice")))
-        .unionByName(b.filter(col("o_orderkey") % 13 === 0)
-          .select(col("o_orderkey"),
-            (col("l_linenumber") + 100).as("l_linenumber"),
-            col("l_extendedprice")))
+      val editedB = editLineitem(b)
       // right-size the shuffles to the INPUT VOLUME, not a constant:
       // at bench scale the producer states are O(100k) rows and 8
       // partitions cut scheduler contention across the three
@@ -491,14 +465,7 @@ object Sinks {
       val viewPath = Scratch.table("i5_view")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      val edited = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_custkey", when(col("o_orderkey") % 17 === 0,
-          col("o_custkey") + 1).otherwise(col("o_custkey")))
-        .withColumn("o_totalprice", when(col("o_orderkey") % 11 === 0,
-          col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-        .unionByName(o.filter(col("o_orderkey") % 13 === 0)
-          .select((-col("o_orderkey")).as("o_orderkey"),
-            col("o_custkey"), (col("o_totalprice") + 1000).as("o_totalprice")))
+      val edited = editOrders(o)
       val v1 = TableStore.publishVersion(s, path, o, note = "base")
       val v2 = TableStore.publishVersion(s, path, edited, note = "edit")
       TableStore.overwrite(Ivm.aggregateWithExtrema(
@@ -607,14 +574,7 @@ object Sinks {
       val viewPath = Scratch.table("i7_view")
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      val edited = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_custkey", when(col("o_orderkey") % 17 === 0,
-          col("o_custkey") + 1).otherwise(col("o_custkey")))
-        .withColumn("o_totalprice", when(col("o_orderkey") % 11 === 0,
-          col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-        .unionByName(o.filter(col("o_orderkey") % 13 === 0)
-          .select((-col("o_orderkey")).as("o_orderkey"),
-            col("o_custkey"), (col("o_totalprice") + 1000).as("o_totalprice")))
+      val edited = editOrders(o)
       val v1 = TableStore.publishVersion(s, path, o, note = "base")
       val v2 = TableStore.publishVersion(s, path, edited, note = "edit")
       TableStore.overwrite(Ivm.aggregateTopK(
@@ -1468,16 +1428,7 @@ object Sinks {
       val viewPath2 = Scratch.table("s32_view2")
       val base = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      // the i4 edit script: deletes, group-moving updates, inserts on
-      // collision-free negated keys
-      val edited = base.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_custkey", when(col("o_orderkey") % 17 === 0,
-          col("o_custkey") + 1).otherwise(col("o_custkey")))
-        .withColumn("o_totalprice", when(col("o_orderkey") % 11 === 0,
-          col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-        .unionByName(base.filter(col("o_orderkey") % 13 === 0)
-          .select((-col("o_orderkey")).as("o_orderkey"),
-            col("o_custkey"), (col("o_totalprice") + 1000).as("o_totalprice")))
+      val edited = editOrders(base)
       val v1 = TableStore.publishVersion(s, basePath, base, note = "base")
       TableStore.overwrite(Ivm.aggregate(
         TableStore.readVersion(s, basePath, Some(v1)),

@@ -163,18 +163,9 @@ object StreamingOps {
       val tmp = Scratch.dir("st12")
       val snaps = tmp.resolve("snap").toString
       val viewPath = tmp.resolve("view").toString
-      // the same adversarial edit script as i3 (deletes, in-place and
-      // group-moving updates, inserts into new groups)
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      val edited = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_custkey", when(col("o_orderkey") % 17 === 0,
-          col("o_custkey") + 1).otherwise(col("o_custkey")))
-        .withColumn("o_totalprice", when(col("o_orderkey") % 11 === 0,
-          col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-        .unionByName(o.filter(col("o_orderkey") % 13 === 0)
-          .select((-col("o_orderkey")).as("o_orderkey"),
-            col("o_custkey"), (col("o_totalprice") + 1000).as("o_totalprice")))
+      val edited = editOrders(o)
       val v1 = TableStore.publishVersion(s, snaps, o, note = "base")
       val v2 = TableStore.publishVersion(s, snaps, edited, note = "edit")
       // the view is an AGGREGATE FOLD TABLE (partial-aggregate log):
@@ -507,14 +498,7 @@ object StreamingOps {
       val viewPath = tmp.resolve("view").toString
       val o = t(s, d, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      val edited = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_custkey", when(col("o_orderkey") % 17 === 0,
-          col("o_custkey") + 1).otherwise(col("o_custkey")))
-        .withColumn("o_totalprice", when(col("o_orderkey") % 11 === 0,
-          col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-        .unionByName(o.filter(col("o_orderkey") % 13 === 0)
-          .select((-col("o_orderkey")).as("o_orderkey"),
-            col("o_custkey"), (col("o_totalprice") + 1000).as("o_totalprice")))
+      val edited = editOrders(o)
       TableStore.publishFoldSnapshot(s, basePath, o, "tick=-1")
       // aggregateTopK ends in a groupBy over the view's key — one row
       // per group by construction, so the distinct publish skips the

@@ -51,6 +51,40 @@ package object queries {
   def davgSql(expr: String, scale: Int = 2): String =
     s"(cast(sum(cast($expr as decimal(30,$scale))) as double) / cast(count($expr) as double))"
 
+  /** The adversarial orders edit script the IVM queries share, over
+    * (o_orderkey, o_custkey, o_totalprice): it deletes o_orderkey % 7,
+    * moves % 17 to the next customer (a group-moving update), doubles
+    * % 11's price and inserts every % 13 order again at price + 1000.
+    * Inserted rows take NEGATED keys: TPC-H keys are >= 1, so -k never
+    * collides with a real key at any scale factor (a fixed +offset
+    * would once keys exceed it, breaking the key uniqueness a keyed
+    * changelog diff needs).
+    */
+  def editOrders(o: DataFrame): DataFrame =
+    o.filter(col("o_orderkey") % 7 =!= 0)
+      .withColumn("o_custkey", when(col("o_orderkey") % 17 === 0,
+        col("o_custkey") + 1).otherwise(col("o_custkey")))
+      .withColumn("o_totalprice", when(col("o_orderkey") % 11 === 0,
+        col("o_totalprice") * 2).otherwise(col("o_totalprice")))
+      .unionByName(o.filter(col("o_orderkey") % 13 === 0)
+        .select((-col("o_orderkey")).as("o_orderkey"),
+          col("o_custkey"), (col("o_totalprice") + 1000).as("o_totalprice")))
+
+  /** i4's lineitem edit script, over (o_orderkey, l_linenumber,
+    * l_extendedprice) with one row per key: it deletes
+    * (o_orderkey + l_linenumber) % 6, adds 100 to % 9's price and
+    * inserts every o_orderkey % 13 line again at l_linenumber + 100.
+    */
+  def editLineitem(b: DataFrame): DataFrame = {
+    val k = col("o_orderkey") + col("l_linenumber")
+    b.filter(k % 6 =!= 0)
+      .withColumn("l_extendedprice", when(k % 9 === 0,
+        col("l_extendedprice") + 100).otherwise(col("l_extendedprice")))
+      .unionByName(b.filter(col("o_orderkey") % 13 === 0)
+        .select(col("o_orderkey"), (col("l_linenumber") + 100).as("l_linenumber"),
+          col("l_extendedprice")))
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(spark, dir, name)
 }

@@ -45,7 +45,7 @@ class DiagSpec extends SparkSpec {
   }
 
   test("plans writes the final and the build plans; st15's has one view delta per tick") {
-    val out = Files.createTempDirectory("graft_diag_spec")
+    val out = Scratch.dir("diag_spec")
     try {
       val lines = diag("plans", out.toString, "_t")
       assert(lines.count(_.startsWith("wrote ")) == 4, lines)
@@ -57,6 +57,6 @@ class DiagSpec extends SparkSpec {
       val viewDeltas = build.linesIterator
         .count(_.matches("Arguments: file:.*/view/d_[0-9a-f]+, .*"))
       assert(viewDeltas == EventStream.ticks(3), build.take(2000))
-    } finally deleteRecursively(out.toFile)
+    } finally Scratch.remove(out.toFile)
   }
 }

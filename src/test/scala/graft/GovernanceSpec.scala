@@ -16,7 +16,7 @@ class GovernanceSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("t37: conjunctive query scans only its terms' index partitions") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_t37spec")
+    val tmp = Scratch.dir("t37spec")
     val path = s"$tmp/postings"
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
     docs.select(col("doc_id"),
@@ -35,7 +35,7 @@ class GovernanceSpec extends SparkSpec {
     // directory pruning: ≤3 of the 20+ letter partitions are listed
     assert(scan.selectedPartitions.partitionCount <= 3,
       s"expected ≤3 pruned partitions, scanned ${scan.selectedPartitions.partitionCount} of $nAll")
-    deleteRecursively(tmp.toFile)
+    Scratch.remove(tmp.toFile)
   }
 
   test("j18: grid-cell point-in-interval join plans no nested loop") {
@@ -53,7 +53,7 @@ class GovernanceSpec extends SparkSpec {
 
   test("signed postings retraction zeroes a doc's terms and filter drops them") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_i9spec")
+    val tmp = Scratch.dir("i9spec")
     val path = s"$tmp/p"
     val postings = Seq((1L, "alpha"), (1L, "beta"), (2L, "beta"))
       .toDF("doc_id", "term")
@@ -68,7 +68,7 @@ class GovernanceSpec extends SparkSpec {
     assert(df.filter(col("df") < 0).isEmpty)
     val live = df.filter(col("df") > 0).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(live == Map("beta" -> 1L))
-    deleteRecursively(tmp.toFile)
+    Scratch.remove(tmp.toFile)
   }
 
   test("a23: PSI of two identical snapshots is exactly zero per bin") {

@@ -11,7 +11,7 @@ package graft
 class InputBytesSpec extends SparkSpec {
 
   test("file, directory (markers skipped), and missing-path sizing") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ib").toFile
+    val tmp = Scratch.dir("ib").toFile
     try {
       def put(rel: String, n: Int): Unit = {
         val f = new java.io.File(tmp, rel)
@@ -34,6 +34,6 @@ class InputBytesSpec extends SparkSpec {
       // the caller contract: a File.length on the directory would have
       // reported the dir-entry size, not the data
       assert(new java.io.File(s"$tmp/ds.parquet").length != 1750L)
-    } finally deleteRecursively(tmp)
+    } finally Scratch.remove(tmp)
   }
 }

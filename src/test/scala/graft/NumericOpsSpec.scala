@@ -56,7 +56,7 @@ class NumericOpsSpec extends SparkSpec {
 
   test("a22: recovers a planted exact line (slope 2, intercept 5, r = 1)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ols")
+    val tmp = Scratch.dir("ols")
     try {
       // v = 2h + 5 exactly, in cents-exact doubles, across 100 hours;
       // ts written as NANOS longs — the raw layout Tables.load expects
@@ -72,6 +72,6 @@ class NumericOpsSpec extends SparkSpec {
       assert(out.getAs[Double]("slope") == 2.0, out)
       assert(out.getAs[Double]("intercept") == 5.0, out)
       assert(out.getAs[Double]("r") == 1.0, out)
-    } finally deleteRecursively(tmp.toFile)
+    } finally Scratch.remove(tmp.toFile)
   }
 }

@@ -423,7 +423,7 @@ class PlanSpec extends SparkSpec {
     import graft.operators.TableStore
     import org.apache.spark.sql.functions.col
     withConf("spark.sql.adaptive.enabled", "true") {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_plan_dv")
+      val tmp = Scratch.dir("plan_dv")
       val path = tmp.resolve("t").toString
       TableStore.overwrite(
         Tables.load(spark, sf, "orders").select("o_orderkey", "o_totalprice"), path)
@@ -462,7 +462,7 @@ class PlanSpec extends SparkSpec {
   test("s24: the snapshot diff is ONE full-outer join + in-place explode — no union of four scans") {
     import graft.operators.TableStore
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_plan_cdc")
+    val tmp = Scratch.dir("plan_cdc")
     val path = tmp.resolve("t").toString
     val n = Tables.load(spark, sf, "nation").select("n_nationkey", "n_name")
     val v1 = TableStore.publishVersion(spark, path, n)

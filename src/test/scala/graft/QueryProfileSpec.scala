@@ -133,7 +133,7 @@ class QueryProfileSpec extends SparkSpec {
     import graft.operators.{Ivm, TableStore}
     import graft.streaming.JoinViewMaintenance
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_tick_jobs")
+    val root = Scratch.dir("tick_jobs")
     def path(n: String) = root.resolve(n).toString
     val a = Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("k", "va")
     val b = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "vb")
@@ -164,7 +164,7 @@ class QueryProfileSpec extends SparkSpec {
       assert(names.forall(_.startsWith("tick-group: ")), names.distinct.mkString("\n"))
     } finally {
       sc.clearJobGroup(); p.detach()
-      deleteRecursively(root.toFile)
+      Scratch.remove(root.toFile)
     }
   }
 }

@@ -1,11 +1,57 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.TimeUnit
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.types.{DataType, StructType}
+
 import ScaleAudit._
 
-/** The scale-audit harness: its gate logic as pure functions, and one
-  * end-to-end `plan` audit on the committed testdata.
+/** The scale-audit harness: its gate logic as pure functions, one
+  * end-to-end `plan` audit on the committed testdata, the extras' run
+  * order, and (in a child JVM, because they stop sessions) the
+  * isolating `spot100` audit's scratch reclaim and report.
   */
 class ScaleAuditSpec extends SparkSpec {
+
+  private val Sf0001 = "/root/testdata/sf0.001"
+  private val Sf001 = "/root/testdata/sf0.01"
+
+  /** Runs [[ScaleAuditChild]] with its own Spark local dir and
+    * java.io.tmpdir; its output must end in CHILD_DONE.
+    */
+  private def child(args: String*): Unit = {
+    val (local, tmp) = (Scratch.dir("audit_child_local"), Scratch.dir("audit_child_tmp"))
+    val log = tmp.resolveSibling(tmp.getFileName.toString + ".log").toFile
+    val pb = new ProcessBuilder(ChildJvm.command(Seq(s"-Djava.io.tmpdir=$tmp"),
+      "graft.ScaleAuditChild", args: _*).asJava)
+      .redirectErrorStream(true).redirectOutput(log)
+    pb.environment().put("SPARK_LOCAL_DIRS", local.toString)
+    val proc = pb.start()
+    try {
+      val exited = proc.waitFor(15, TimeUnit.MINUTES)
+      val out = Files.readAllLines(log.toPath).asScala.toSeq
+      assert(exited && proc.exitValue() == 0 && out.lastOption.contains("CHILD_DONE"),
+        out.takeRight(40).mkString("\n"))
+    } finally {
+      proc.destroyForcibly()
+      Seq(local.toFile, tmp.toFile, log).foreach(Scratch.remove)
+    }
+  }
+
+  /** Every field path of a JSON report, parents included. */
+  private def keyPaths(json: Path): Set[String] = {
+    def walk(t: DataType, at: String): Seq[String] = t match {
+      case st: StructType => st.fields.toSeq.flatMap { f =>
+        val p = if (at.isEmpty) f.name else s"$at.${f.name}"
+        p +: walk(f.dataType, p)
+      }
+      case _ => Nil
+    }
+    walk(spark.read.option("multiLine", "true").json(json.toString).schema, "").toSet
+  }
 
   private def ops(cp: Int, bnlj: Int): Map[String, Int] =
     JoinOps.map(_ -> 0).toMap ++
@@ -52,12 +98,11 @@ class ScaleAuditSpec extends SparkSpec {
   }
 
   test("plan audit end to end: sf0.001 -> sf0.01 over two q-queries") {
-    val out = java.nio.file.Files.createTempFile("graft_scale_audit", ".json")
+    val out = Scratch.dir("scale_audit").resolve("report.json")
     try {
       val spec = Specs("plan").copy(
         queries = Seq("q1_pricing_summary", "q3_shipping_priority"))
-      val code = audit(spark, spec, "/root/testdata/sf0.001",
-        "/root/testdata/sf0.01", out.toString)
+      val code = audit(Some(spark), spec, Sf0001, Sf001, out.toString)
       assert(code == 0)
       val report = spark.read.option("multiLine", "true").json(out.toString)
       assert(report.columns.toSeq == Seq("fails", "gates", "memory_audit",
@@ -70,5 +115,41 @@ class ScaleAuditSpec extends SparkSpec {
         .forall(row.columns.contains), row.columns.mkString(","))
       assert(report.selectExpr("fails").head().getLong(0) == 0L)
     } finally java.nio.file.Files.deleteIfExists(out)
+  }
+
+  test("first extras run before the rows and the others after, in spec order") {
+    val out = Scratch.dir("scale_audit_order").resolve("report.json")
+    def mark(key: String, first: Boolean) =
+      Extra(key, Seq(s"${key}_const" -> 1), (_, _, _, _) => (Obj("ran" -> true), 0), first)
+    val spec = Specs("plan").copy(queries = Seq("q1_pricing_summary"), extras =
+      Seq(mark("a", first = true), mark("b", first = false), mark("c", first = true)))
+    val printed = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(printed)(audit(Some(spark), spec, Sf0001, Sf001, out.toString))
+    assert(code == 0)
+    val lines = printed.toString("UTF-8").linesIterator.toSeq
+    assert(lines.take(4).map(_.takeWhile(_ != ':')) ==
+      Seq("{\"a\"", "{\"c\"", "{\"query\"", "{\"b\""), lines.mkString("\n"))
+    val report = new String(Files.readAllBytes(out), "UTF-8")
+    val at = Seq("\"fails\"", "\"a\"", "\"c\"", "\"b\"", "\"queries\"").map(report.indexOf(_))
+    assert(at.forall(_ >= 0) && at == at.sorted, report)
+    assert(Seq("a_const", "b_const", "c_const").forall(report.contains))
+  }
+
+  test("an isolated audit reclaims each session's block-manager and Scratch dirs") {
+    child("isolation", Sf0001)
+  }
+
+  test("spot100 end to end: sf0.001 -> sf0.01 on one row keeps BENCH_SF100's key paths") {
+    val q = "j17_temporal_dim_join"
+    val out = Scratch.dir("spot100_report").resolve("report.json")
+    child("spot100", Sf0001, Sf001, out.toString, q)
+    // the report-key migrations CHANGES.md lists: the contract strings
+    // moved to ScaleAudit's Spot100Queries doc, DOULION's bound to gates
+    val migrated = Set(s"queries.$q.contract", "doulion_accuracy.max_err")
+    val committed = keyPaths(java.nio.file.Paths.get("BENCH_SF100.json"))
+      .filter(p => !p.startsWith("queries.") || p == s"queries.$q" ||
+        p.startsWith(s"queries.$q.")) -- migrated
+    val missing = committed -- keyPaths(out)
+    assert(missing.isEmpty, missing.toSeq.sorted.mkString(", "))
   }
 }

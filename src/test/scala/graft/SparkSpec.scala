@@ -12,7 +12,7 @@ object TestSpark {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        Scratch.dir("wh").toString)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
@@ -26,12 +26,26 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+}
 
-  /** Recursive delete for spec-created temp dirs (repeated local runs
-    * must not accumulate /tmp garbage).
-    */
-  def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
+/** A child `java` command on the test classpath, with the JDK 17
+  * add-opens build.sbt forks tests with, for specs that need a second
+  * process (one that stops its sessions, or races this one).
+  */
+object ChildJvm {
+  private val addOpens = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar",
+  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+
+  def command(jvmOpts: Seq[String], mainClass: String, args: String*): Seq[String] =
+    Seq(System.getProperty("java.home") + "/bin/java") ++ addOpens ++ Seq(
+      "-Xmx2g", "-Dspark.ui.enabled=false",
+      "-Dspark.sql.session.timeZone=UTC", "-Duser.timezone=UTC") ++ jvmOpts ++
+      Seq("-cp", System.getProperty("java.class.path"), mainClass) ++ args
 }

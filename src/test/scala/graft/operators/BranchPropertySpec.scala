@@ -4,7 +4,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Randomized branch/merge scripts replayed against an in-memory
   * model: forks from the current tip, writes on live branches, and
@@ -23,8 +23,7 @@ class BranchPropertySpec extends SparkSpec {
     import spark.implicits._
     val rnd = new Random(4242)
     for (script <- 1 to 4) {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_brprop$script")
+      val root = Scratch.dir(s"brprop$script")
       val parent = s"$root/parent"
       var model = Set(0L)
       TableStore.publishVersion(spark, parent, Seq(0L).toDF("k"), "base")
@@ -74,7 +73,7 @@ class BranchPropertySpec extends SparkSpec {
       val got = TableStore.readVersion(spark, parent)
         .select("k").as[Long].collect().toSet
       assert(got == model, s"script $script: parent $got != model $model")
-      deleteRecursively(root.toFile)
+      Scratch.remove(root.toFile)
     }
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** Branch/merge semantics beyond s35's oracle row: the zero-copy
   * fork invariant, read-through before any branch write, the
@@ -10,11 +10,7 @@ import graft.SparkSpec
   */
 class BranchSpec extends SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$name")
-    d.toFile.deleteOnExit()
-    s"$d/t"
-  }
+  private def tmp(name: String): String = Scratch.table(name)
 
   test("fork writes only the marker and reads through to parent@base") {
     import spark.implicits._

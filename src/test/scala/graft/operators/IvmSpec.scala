@@ -1,7 +1,6 @@
 package graft.operators
 
-import java.nio.file.Files
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,7 +22,7 @@ class IvmSpec extends SparkSpec {
         BigDecimal(r.getDecimal(2)))).toSet
 
   test("applyDelta == recompute across delete / group-move / empty-group / new-group; empty delta is identity") {
-    val p = Files.createTempDirectory("graft_ivm").toString + "/t"
+    val p = Scratch.table("ivm")
     val v1Data = rows(
       (1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0), (4L, "c", 40.0))
     // v2: delete 1 (shrinks a), move 3 from b to a (empties b),
@@ -48,7 +47,7 @@ class IvmSpec extends SparkSpec {
 
   test("NULL group keys fold into the null group, not a stranded row (null-safe merge)") {
     import TestSpark.spark.implicits._
-    val p = Files.createTempDirectory("graft_ivm_null").toString + "/t"
+    val p = Scratch.table("ivm_null")
     def rowsN(rs: (Long, Option[String], Double)*): DataFrame =
       rs.toDF("id", "grp", "amt")
     // v1: two rows in the NULL group + one in b; v2 deletes one null-
@@ -70,7 +69,7 @@ class IvmSpec extends SparkSpec {
 
   test("distinct-count state: multiplicity decrement vs pair emptied (i6's contract)") {
     import TestSpark.spark.implicits._
-    val p = Files.createTempDirectory("graft_ivm_dst").toString + "/t"
+    val p = Scratch.table("ivm_dst")
     def rowsV(rs: (Long, String, String)*): DataFrame =
       rs.toDF("id", "grp", "v")
     // group a holds value x TWICE and y once; group b holds z once.

@@ -32,9 +32,10 @@ import org.apache.spark.sql.functions._
   *      so partitioning/arrival order cannot change the capped set.
   *
   * The quantitative recall on the REAL corpus distribution lives in
-  * the scale audit (sf1: 22,830 of 22,838 pairs, 0.99965 — recorded
-  * via ScaleSpot100Check --lsh-recall), not here: an engineered spec
-  * corpus measures properties, not the production distribution.
+  * the scale audit (sf1: 22,830 of 22,838 pairs, 0.99965; `ScaleAudit
+  * spot100`'s `lsh_cap_recall` measures it on its small dir), not
+  * here: an engineered spec corpus measures properties, not the
+  * production distribution.
   */
 class LshCapSpec extends SparkSpec {
 

@@ -1,9 +1,8 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 
 /** Property test for the storage layer — the IvmJoinPropertySpec
   * discipline applied to [[TableStore.mergeClauses]] composed with
@@ -54,7 +53,7 @@ class MergeFoldPropertySpec extends SparkSpec {
     } yield (init, script, compactAfter)
 
     val prop = Prop.forAll(gen) { case (init, script, compactAfter) =>
-      val base = Files.createTempDirectory("graft_mergeprop").toString
+      val base = Scratch.dir("mergeprop").toString
       val tPath = base + "/t"
       val fPath = base + "/fold"
       TableStore.overwrite(init.toSeq.toDF("k", "v"), tPath)

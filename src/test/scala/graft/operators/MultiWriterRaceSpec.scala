@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeUnit
 
-import graft.SparkSpec
+import graft.{ChildJvm, Scratch, SparkSpec}
 
 /** CROSS-PROCESS multi-writer gate (round 14, verdict task #4): two
   * real JVMs race `publishVersion` / `publishWithRetry` /
@@ -25,27 +25,10 @@ class MultiWriterRaceSpec extends SparkSpec {
 
   import spark.implicits._
 
-  /** Same module surface build.sbt forks tests with — the child is a
-    * plain `java` spawn, so it needs the JDK17 add-opens Spark wants. */
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private case class Child(proc: Process, lines: () => Seq[String])
 
   private def spawnChild(args: String*): Child = {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC", "-Duser.timezone=UTC",
-      "-cp", cp, "graft.operators.MultiWriterChild") ++ args
+    val cmd = ChildJvm.command(Nil, "graft.operators.MultiWriterChild", args: _*)
     val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val t = new Thread(() => {
@@ -82,12 +65,12 @@ class MultiWriterRaceSpec extends SparkSpec {
   }
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    Scratch.dir(prefix).toString
 
   test("claim-based publishers in two JVMs land distinct ordered versions; a changefeed tail sees every commit exactly once") {
-    val dir = tmp("graft_race_claims")
+    val dir = tmp("race_claims")
     val table = s"$dir/t"
-    val sync = tmp("graft_race_sync1")
+    val sync = tmp("race_sync1")
     val n = 6
     // seed v1 so the changefeed can infer its schema before the race
     val seed = TableStore.publishVersion(spark, table,
@@ -143,14 +126,14 @@ class MultiWriterRaceSpec extends SparkSpec {
     q.awaitTermination(120000)
     assert(seen.sorted.toSeq == committed,
       s"changefeed saw ${seen.sorted} of $committed")
-    deleteRecursively(new java.io.File(dir))
-    deleteRecursively(new java.io.File(sync))
+    Scratch.remove(new java.io.File(dir))
+    Scratch.remove(new java.io.File(sync))
   }
 
   test("CAS increments from two JVMs lose no update (optimistic concurrency across processes)") {
-    val dir = tmp("graft_race_cas")
+    val dir = tmp("race_cas")
     val table = s"$dir/t"
-    val sync = tmp("graft_race_sync2")
+    val sync = tmp("race_sync2")
     val n = 5
     val child = spawnChild("cas", table, n.toString, sync)
     race(child, sync) {
@@ -172,14 +155,14 @@ class MultiWriterRaceSpec extends SparkSpec {
       .collect()(0).getAs[Long]("value")
     assert(finalValue == 2L * n,
       s"lost update: ${2 * n} increments, counter reads $finalValue")
-    deleteRecursively(new java.io.File(dir))
-    deleteRecursively(new java.io.File(sync))
+    Scratch.remove(new java.io.File(dir))
+    Scratch.remove(new java.io.File(sync))
   }
 
   test("reserveVersionAfter fails loudly when another PROCESS commits inside its pinned window") {
-    val dir = tmp("graft_race_reserve")
+    val dir = tmp("race_reserve")
     val table = s"$dir/t"
-    val sync = tmp("graft_race_sync3")
+    val sync = tmp("race_sync3")
     val v1 = TableStore.publishVersion(spark, table,
       Seq(("seed", 0L)).toDF("writer", "seq"))
 
@@ -209,7 +192,7 @@ class MultiWriterRaceSpec extends SparkSpec {
     val after = TableStore.publishVersion(spark, table,
       Seq(("parent", 2L)).toDF("writer", "seq"))
     assert(after > childV, "cancelled reservation must free the table")
-    deleteRecursively(new java.io.File(dir))
-    deleteRecursively(new java.io.File(sync))
+    Scratch.remove(new java.io.File(dir))
+    Scratch.remove(new java.io.File(sync))
   }
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 
 /** Property test for RESERVED-SLOT checkpoints under retention — the
   * protocol st15/i4's compaction ticks run (s50 gates one happy path;
@@ -92,7 +91,7 @@ class ReservedSlotPropertySpec extends SparkSpec {
     } yield (init, script)
 
     val prop = Prop.forAll(gen) { case (init, script) =>
-      val path = Files.createTempDirectory("graft_resprop").toString + "/t"
+      val path = Scratch.table("resprop")
       var model: Map[Long, Long] = fold(Map.empty, init.map(_ -> 1L))
       TableStore.publishFoldSnapshot(spark, path,
         init.map(k => (k, 1L)).toDF("k", "_mult"), "v0")

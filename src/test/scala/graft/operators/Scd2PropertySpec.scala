@@ -1,8 +1,7 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 
 /** Property test for [[TableStore.scd2Upsert]]: for arbitrary
   * monotone batch sequences over a small key space, the stored
@@ -49,7 +48,7 @@ class Scd2PropertySpec extends SparkSpec {
 
     val created = scala.collection.mutable.ListBuffer.empty[java.io.File]
     val prop = Prop.forAll(seqGen) { batches =>
-      val dir = Files.createTempDirectory("graft_scd2prop")
+      val dir = Scratch.dir("scd2prop")
       created.synchronized { created += dir.toFile }
       val p = dir.toString + "/t"
       val dated = batches.zip(dates)
@@ -80,7 +79,7 @@ class Scd2PropertySpec extends SparkSpec {
     // remnants) — repeated local runs must not accumulate /tmp garbage
     val res =
       try SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
-      finally created.foreach(deleteRecursively)
+      finally created.foreach(Scratch.remove)
     assert(res.passed, res.status.toString)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import java.nio.file.Files
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import org.apache.spark.sql.functions._
 
 /** Stats-manifest pruning semantics: the index must be IO-invisible
@@ -17,7 +16,7 @@ class SkippingIndexSpec extends SparkSpec {
   }
 
   test("pruned scan equals the full-scan result and skips most files") {
-    val base = Files.createTempDirectory("graft_skip_idx").toString
+    val base = Scratch.dir("skip_idx").toString
     val path = s"$base/t"
     grid(path)
     SkippingIndex.build(spark, path, Seq("x", "y"))
@@ -35,7 +34,7 @@ class SkippingIndexSpec extends SparkSpec {
   }
 
   test("an empty-intersection predicate plans zero files and returns the schema") {
-    val base = Files.createTempDirectory("graft_skip_idx0").toString
+    val base = Scratch.dir("skip_idx0").toString
     val path = s"$base/t"
     grid(path)
     SkippingIndex.build(spark, path, Seq("x", "y"))
@@ -46,7 +45,7 @@ class SkippingIndexSpec extends SparkSpec {
   }
 
   test("a stale index (table rewritten underneath) fails loudly instead of wrong results") {
-    val base = Files.createTempDirectory("graft_skip_stale").toString
+    val base = Scratch.dir("skip_stale").toString
     val path = s"$base/t"
     grid(path)
     SkippingIndex.build(spark, path, Seq("x", "y"))
@@ -65,7 +64,7 @@ class SkippingIndexSpec extends SparkSpec {
   }
 
   test("bloom index prunes point lookups min/max cannot; absent keys plan ~zero files; stale fails") {
-    val base = Files.createTempDirectory("graft_skip_bloom").toString
+    val base = Scratch.dir("skip_bloom").toString
     val path = s"$base/t"
     // cluster by y → x is scattered: every file spans the x range
     val g = TestSpark.spark.range(64L * 64L)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.file.Files
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,7 +24,7 @@ class SkippingIvmSpec extends SparkSpec {
 
   test("join-IVM base probe plans <=2 of 10 files for a narrow-key delta; result == recompute") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_skip_ivm")
+    val tmp = Scratch.dir("skip_ivm")
     val aPath = tmp.resolve("base_a").toString
 
     // base A: 1000 keys range-clustered into 10 files (~100-key boxes)
@@ -60,7 +60,7 @@ class SkippingIvmSpec extends SparkSpec {
 
   test("extrema-IVM rescan probe stays file-pruned when most deltas hit extrema") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_skip_ivm_x")
+    val tmp = Scratch.dir("skip_ivm_x")
     val v1Path = tmp.resolve("base_v1").toString
     val v2Path = tmp.resolve("base_v2").toString
 
@@ -108,7 +108,7 @@ class SkippingIvmSpec extends SparkSpec {
 
   test("empty or NULL-key delta probes zero files") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_skip_ivm_e")
+    val tmp = Scratch.dir("skip_ivm_e")
     val p = tmp.resolve("base").toString
     writeClustered(spark.range(0, 100)
       .select(col("id").as("k"), col("id").as("v")), p, "k", 4)

@@ -1,7 +1,6 @@
 package graft.operators
 
-import java.nio.file.Files
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import org.apache.spark.sql.functions._
 
 /** Layout + pruning proof: the bucket predicate must land in
@@ -11,7 +10,7 @@ class TableLayoutSpec extends SparkSpec {
 
   test("range-bucketed point lookup prunes to one partition") {
     import TestSpark.spark.implicits._
-    val path = Files.createTempDirectory("graft_layout").toString + "/t"
+    val path = Scratch.table("layout")
     val df = (0L until 10000L).map(i => (i, s"row$i")).toDF("game_id", "payload")
     TableLayout.writeRangeBucketed(df, path, "game_id", 1000L)
 
@@ -31,7 +30,7 @@ class TableLayoutSpec extends SparkSpec {
 
   test("time-series layout partitions by day and prunes day ranges") {
     import TestSpark.spark.implicits._
-    val path = Files.createTempDirectory("graft_layout_ts").toString + "/t"
+    val path = Scratch.table("layout_ts")
     val rows = (0 until 96).map { h =>
       (h.toLong % 7, java.sql.Timestamp.valueOf(f"2026-01-${1 + h / 24}%02d $h%02d:00:00".replace(f"$h%02d:", f"${h % 24}%02d:")))
     }
@@ -46,7 +45,7 @@ class TableLayoutSpec extends SparkSpec {
 
   test("evolved table: each spec leg prunes its own directories; stitched read is exact") {
     import TestSpark.spark.implicits._
-    val base = Files.createTempDirectory("graft_layout_evo").toString
+    val base = Scratch.dir("layout_evo").toString
     val (dayPath, monthPath) = (base + "/day", base + "/month")
     // 6 months of daily rows; the spec evolves after March
     val rows = for (m <- 1 to 6; dom <- Seq(5, 15, 25)) yield
@@ -82,7 +81,7 @@ class TableLayoutSpec extends SparkSpec {
 
   test("spec HISTORY: day->month->day re-evolution keeps three pruned legs with distinct ids") {
     import TestSpark.spark.implicits._
-    val root = Files.createTempDirectory("graft_layout_hist").toString + "/t"
+    val root = Scratch.table("layout_hist")
     val rows = for (m <- 1 to 6; dom <- Seq(5, 15, 25)) yield
       (m.toLong * 100 + dom,
         java.sql.Timestamp.valueOf(f"2026-$m%02d-$dom%02d 12:00:00"))
@@ -140,7 +139,7 @@ class TableLayoutSpec extends SparkSpec {
 
   test("z-order files have 2-D-bounded boxes: a y-only predicate skips most files; a linear sort skips none") {
     import TestSpark.spark.implicits._
-    val base = Files.createTempDirectory("graft_layout_z").toString
+    val base = Scratch.dir("layout_z").toString
     // a full 64x64 grid: every (x, y) cell once, in hash order
     val grid = TestSpark.spark.range(64L * 64L)
       .select((col("id") % 64).as("x"), expr("id div 64").as("y"))
@@ -182,7 +181,7 @@ class TableLayoutSpec extends SparkSpec {
 
   test("replaceDays rewrites only the targeted day partitions and restores the overwrite conf") {
     import TestSpark.spark.implicits._
-    val path = Files.createTempDirectory("graft_layout_rw").toString + "/t"
+    val path = Scratch.table("layout_rw")
     val df = Seq(
       (1L, "2024-03-01 10:00:00", 1.0), (2L, "2024-03-02 10:00:00", 2.0),
       (3L, "2024-03-03 10:00:00", 3.0))

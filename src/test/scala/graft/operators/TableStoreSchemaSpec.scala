@@ -12,7 +12,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 /** `TableStore.read` / `readVersion` take the schema from a footer on
   * the driver: the same schema as Spark's own inference, no Spark job,
@@ -21,10 +21,10 @@ import graft.SparkSpec
 class TableStoreSchemaSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val dirs = scala.collection.mutable.ListBuffer[java.io.File]()
-  override def afterAll(): Unit = dirs.foreach(deleteRecursively)
+  override def afterAll(): Unit = dirs.foreach(Scratch.remove)
 
   private def tmp(): String = {
-    val d = Files.createTempDirectory("graft_schema").toFile
+    val d = Scratch.dir("schema").toFile
     dirs += d
     s"${d.getPath}/t"
   }

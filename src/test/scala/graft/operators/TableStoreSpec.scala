@@ -1,13 +1,12 @@
 package graft.operators
 
-import java.nio.file.Files
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 
 /** Write-discipline semantics on tiny tables (SURVEY §2.1 S5-S12). */
 class TableStoreSpec extends SparkSpec {
 
   private def scratch(): String =
-    Files.createTempDirectory("graft_store_spec").toString + "/t"
+    Scratch.table("store_spec")
 
   private def kv(rows: (Long, String)*) = {
     import TestSpark.spark.implicits._

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.Files
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import org.apache.spark.sql.functions._
 
 /** End-to-end ingest lifecycle on fixtures (SURVEY §3.1): queue →
@@ -28,7 +28,7 @@ class FetchPipelineSpec extends SparkSpec {
        |}}}""".stripMargin
 
   private def mkPipeline(fetchFn: Seq[Long] => Seq[FetchPipeline.Fetched]) = {
-    val root = Files.createTempDirectory("graft_pipe").toString
+    val root = Scratch.dir("pipe").toString
     new FetchPipeline(TestSpark.spark, root, fetchFn,
       batchSize = 10, chunkSize = 2, retryAfterMinutes = 60)
   }
@@ -71,7 +71,7 @@ class FetchPipelineSpec extends SparkSpec {
 
   test("a lease the fetcher left in place holds its id until the lease expires") {
     import TestSpark.spark.implicits._
-    val root = Files.createTempDirectory("graft_pipe").toString
+    val root = Scratch.dir("pipe").toString
     val claims = scala.collection.mutable.ArrayBuffer[Seq[Long]]()
     var dropped: Option[Long] = Some(62L)
     // the default 30-minute lease expiry
@@ -95,7 +95,7 @@ class FetchPipelineSpec extends SparkSpec {
     assert(pipe.fetchBatch(ts("2026-01-01 00:31:00")) == 1)
     assert(claims.last == Seq(62L))
     assert(leases().isEmpty)
-    deleteRecursively(new java.io.File(root))
+    Scratch.remove(new java.io.File(root))
   }
 
   test("time-series append: second process of new data appends to games") {
@@ -137,7 +137,7 @@ class FetchPipelineSpec extends SparkSpec {
 
   test("the ledger marks each pending payload once: processed or parse_error") {
     import TestSpark.spark.implicits._
-    val root = Files.createTempDirectory("graft_pipe").toString
+    val root = Scratch.dir("pipe").toString
     val pipe = new FetchPipeline(TestSpark.spark, root, ids => ids.map {
       case 32L => FetchPipeline.Fetched(32L, "not json", success = true)
       case id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true)
@@ -151,12 +151,12 @@ class FetchPipelineSpec extends SparkSpec {
     // a second batch finds nothing pending and adds no ledger row
     assert(pipe.processBatch(ts("2026-01-01 01:00:00")) == 0)
     assert(ledger(root).size == 3)
-    deleteRecursively(new java.io.File(root))
+    Scratch.remove(new java.io.File(root))
   }
 
   test("a failed core-table write lands no history and no ledger row; the retry lands each game once") {
     import TestSpark.spark.implicits._
-    val root = Files.createTempDirectory("graft_pipe").toString
+    val root = Scratch.dir("pipe").toString
     val pipe = new FetchPipeline(TestSpark.spark, root,
       ids => ids.map(id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true)),
       batchSize = 10, chunkSize = 2)
@@ -166,7 +166,7 @@ class FetchPipelineSpec extends SparkSpec {
     assert(pipe.processBatch(t0) == 1)
     // the next batch's game_mechanics write fails: a file holds its place
     val blocker = new java.io.File(s"$root/core/game_mechanics")
-    deleteRecursively(blocker)
+    Scratch.remove(blocker)
     Files.write(blocker.toPath, "not a table".getBytes("UTF-8"))
     pipe.seedIds(Seq(42L, 43L).toDF("game_id"))
     val t1 = ts("2026-01-02 00:00:00")
@@ -186,7 +186,7 @@ class FetchPipelineSpec extends SparkSpec {
     }
     assert(ledger(root).map(_._1) == Set(41L, 42L, 43L))
     assert(pipe.processBatch(ts("2026-01-02 02:00:00")) == 0)
-    deleteRecursively(new java.io.File(root))
+    Scratch.remove(new java.io.File(root))
   }
 
   test("the concurrent core-table writes run under the caller's job group") {
@@ -195,7 +195,7 @@ class FetchPipelineSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     import TestSpark.spark.implicits._
     val sc = TestSpark.spark.sparkContext
-    val root = Files.createTempDirectory("graft_pipe").toString
+    val root = Scratch.dir("pipe").toString
     val pipe = new FetchPipeline(TestSpark.spark, root,
       ids => ids.map(id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true)),
       batchSize = 10, chunkSize = 2)
@@ -217,7 +217,7 @@ class FetchPipelineSpec extends SparkSpec {
     } finally {
       prof.detach(); sc.clearJobGroup()
     }
-    deleteRecursively(new java.io.File(root))
+    Scratch.remove(new java.io.File(root))
   }
 
   test("refresh policy: age bands + null-year + in-progress exclusion") {

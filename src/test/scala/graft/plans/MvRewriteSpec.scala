@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.operators.{Ivm, TableStore}
 import graft.queries.dsum
 
@@ -18,11 +18,7 @@ class MvRewriteSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def scratch(name: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$name").toFile
-    dir.deleteOnExit()
-    s"${dir.getAbsolutePath}/t"
-  }
+  private def scratch(name: String): String = Scratch.table(name)
 
   // the OPTIMIZED logical plan is where the rewrite lands (AQE hides
   // physical children behind AdaptiveSparkPlanExec until execution)

@@ -1,9 +1,8 @@
 package graft.serve
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import graft.operators.TableStore
 import graft.streaming.JoinViewMaintenance
 import org.apache.spark.sql.functions._
@@ -41,7 +40,7 @@ class ServeWhileMaintainSpec extends SparkSpec {
 
   test("32-way burst stays pinned-correct and overlapped while applyTick, checkpoints, publishes and vacuum churn the store") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_serve_maintain")
+    val tmp = Scratch.dir("serve_maintain")
     val profPath = tmp.resolve("profiles").toString
     val viewPath = tmp.resolve("view").toString
     val aPath = tmp.resolve("base_a").toString
@@ -210,7 +209,7 @@ class ServeWhileMaintainSpec extends SparkSpec {
       stop.set(true)
       srv.stop()
       readers.close()
-      deleteRecursively(tmp.toFile)
+      Scratch.remove(tmp.toFile)
     }
   }
 }

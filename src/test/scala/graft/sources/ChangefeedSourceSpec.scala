@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import graft.operators.TableStore
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ class ChangefeedSourceSpec extends SparkSpec {
 
   test("changefeed: commit-ordered versions, orphan invisibility, live pickup, checkpointed resume") {
     import TestSpark.spark.implicits._
-    val tmp = Files.createTempDirectory("graft_changefeed")
+    val tmp = Scratch.dir("changefeed")
     val path = tmp.resolve("t").toString
     val ckpt = tmp.resolve("ckpt").toString
 
@@ -83,7 +83,7 @@ class ChangefeedSourceSpec extends SparkSpec {
 
   test("maxVersionsPerTrigger=1: a multi-commit replay arrives as one batch per version") {
     import TestSpark.spark.implicits._
-    val tmp = Files.createTempDirectory("graft_changefeed_adm")
+    val tmp = Scratch.dir("changefeed_adm")
     val path = tmp.resolve("t").toString
     val v1 = TableStore.publishVersion(spark, path, Seq((1L, "a")).toDF("k", "v"))
     val v2 = TableStore.publishVersion(spark, path, Seq((2L, "b")).toDF("k", "v"))
@@ -108,7 +108,7 @@ class ChangefeedSourceSpec extends SparkSpec {
 
   test("stable frontier: a slow publisher's number is held while young, delivered when it commits, skipped when dead") {
     import TestSpark.spark.implicits._
-    val tmp = Files.createTempDirectory("graft_changefeed_frontier")
+    val tmp = Scratch.dir("changefeed_frontier")
     val path = tmp.resolve("t").toString
     val v1 = TableStore.publishVersion(spark, path, Seq((1L, "a")).toDF("k", "v"))
     // a slow claim-based publisher holds the next number: claim file
@@ -171,7 +171,7 @@ class ChangefeedSourceSpec extends SparkSpec {
     // slow-checkpoint-publisher case the frontier rule must not skip
     sys.props("graft.reservation.heartbeat.ms") = "50"
     try {
-      val tmp = Files.createTempDirectory("graft_changefeed_reserved")
+      val tmp = Scratch.dir("changefeed_reserved")
       val path = tmp.resolve("t").toString
       val v1 = TableStore.publishVersion(spark, path,
         Seq((1L, "a")).toDF("k", "v"))
@@ -217,7 +217,7 @@ class ChangefeedSourceSpec extends SparkSpec {
 
   test("additive upstream evolution mid-stream: new columns are invisible, declared columns keep flowing") {
     import TestSpark.spark.implicits._
-    val tmp = Files.createTempDirectory("graft_changefeed_drift")
+    val tmp = Scratch.dir("changefeed_drift")
     val path = tmp.resolve("t").toString
     val v1 = TableStore.publishVersion(spark, path, Seq((1L, "a")).toDF("k", "v"))
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long, String)]()

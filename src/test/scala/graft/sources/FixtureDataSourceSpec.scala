@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.parse.BggParser
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class FixtureDataSourceSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_fixtures")
+    val d = Scratch.dir("fixtures")
     def write(id: Long, name: String): Unit =
       Files.writeString(d.resolve(s"$id.json"),
         s"""{"items": {"item": {"@id": "$id",

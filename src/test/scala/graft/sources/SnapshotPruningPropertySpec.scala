@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import graft.operators.TableStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -25,7 +25,7 @@ class SnapshotPruningPropertySpec extends SparkSpec {
   private val N = 4096L
 
   private lazy val path: String = {
-    val p = Files.createTempDirectory("graft_prune_prop").toString + "/t"
+    val p = Scratch.table("prune_prop")
     val df = spark.range(0, N).select(
       col("id").as("a"),
       ((col("id") * 2654435761L) % N).as("b"),

@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
-
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.operators.{SkippingIndex, TableStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -16,7 +14,7 @@ class TableSnapshotSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def newTable(): String =
-    Files.createTempDirectory("graft_snapsource").toString + "/t"
+    Scratch.table("snapsource")
 
   private def read(path: String, opts: (String, String)*): DataFrame =
     opts.foldLeft(spark.read.format("graft-table"))(

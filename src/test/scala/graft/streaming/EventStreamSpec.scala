@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -46,7 +46,7 @@ class EventStreamSpec extends SparkSpec {
     // batch i. Tag each part, record per-batch contents via
     // foreachBatch, assert batch -> part is the identity.
     import TestSpark.spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_seqspec")
+    val tmp = Scratch.dir("seqspec")
     val parts = Seq(0, 1, 2).map(i => Seq((i, s"part$i")).toDF("part", "tag"))
     val stream = EventStream.sequencedFileStream(spark, parts,
       tmp.resolve("stage").toString)

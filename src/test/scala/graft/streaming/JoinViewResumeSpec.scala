@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import graft.operators.{Ivm, TableStore}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,7 +19,7 @@ class JoinViewResumeSpec extends SparkSpec {
 
   test("mid-tick crash + resume == recompute (roll-forward), redelivery is skipped") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_jvm_resume")
+    val tmp = Scratch.dir("jvm_resume")
     val viewPath = tmp.resolve("view").toString
     val aPath = tmp.resolve("base_a").toString
     val bPath = tmp.resolve("base_b").toString
@@ -89,7 +88,7 @@ class JoinViewResumeSpec extends SparkSpec {
     */
   test("redelivery of a fully-committed compaction tick is skipped, not re-applied") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_jvm_redeliver")
+    val tmp = Scratch.dir("jvm_redeliver")
     val viewPath = tmp.resolve("view").toString
     val aPath = tmp.resolve("base_a").toString
     val bPath = tmp.resolve("base_b").toString
@@ -163,7 +162,7 @@ class JoinViewResumeSpec extends SparkSpec {
     */
   test("async compactor: deferred checkpoints drain safely; result == recompute") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_jvm_async")
+    val tmp = Scratch.dir("jvm_async")
     val viewPath = tmp.resolve("view").toString
     val aPath = tmp.resolve("base_a").toString
     val bPath = tmp.resolve("base_b").toString
@@ -244,7 +243,7 @@ class JoinViewResumeSpec extends SparkSpec {
     */
   test("folded base multiplicity weights the view delta (duplicate rows)") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_jvm_mult")
+    val tmp = Scratch.dir("jvm_mult")
     val viewPath = tmp.resolve("view").toString
     val aPath = tmp.resolve("base_a").toString
     val bPath = tmp.resolve("base_b").toString
@@ -305,7 +304,7 @@ class JoinViewResumeSpec extends SparkSpec {
     */
   test("topKTick: redelivered tick is idempotent; mid-tick crash rolls forward") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_topk_redeliver")
+    val tmp = Scratch.dir("topk_redeliver")
     val basePath = tmp.resolve("base").toString
     val viewPath = tmp.resolve("view").toString
     val base0 = Seq((1L, 10L, 100L), (1L, 20L, 101L), (1L, 30L, 102L),
@@ -387,7 +386,7 @@ class JoinViewResumeSpec extends SparkSpec {
     def baseSet(path: String) = TableStore.readFolded(spark, path)
       .select("g", "v", "id", "_mult").as[(Long, Long, Long, Long)].collect().toSet
     def play(crashTick: Option[Long]): (String, String) = {
-      val tmp = Files.createTempDirectory("graft_topk_crash")
+      val tmp = Scratch.dir("topk_crash")
       val basePath = tmp.resolve("base").toString
       val viewPath = tmp.resolve("view").toString
       TableStore.publishFoldSnapshot(spark, basePath, base0, "tick=-1")
@@ -438,7 +437,7 @@ class JoinViewResumeSpec extends SparkSpec {
     */
   test("manifestTick: crash before manifest commit leaves tick invisible; redelivery rolls forward") {
     val spark = TestSpark.spark
-    val tmp = Files.createTempDirectory("graft_manifest_tick")
+    val tmp = Scratch.dir("manifest_tick")
     val basePath = tmp.resolve("base").toString
     val viewPath = tmp.resolve("view").toString
     val maniPath = tmp.resolve("mani").toString

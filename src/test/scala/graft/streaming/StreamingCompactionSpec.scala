@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.functions.XSql
 import graft.functions.XSql.{Spark => SqlSpark}
 import graft.operators.{Lsh, TableStore}
@@ -35,7 +35,7 @@ class StreamingCompactionSpec extends SparkSpec {
       (11L, "an entirely different document about spark engines"),
       (12L, "nothing like anything stored before at all friends"))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_spec")
+    val dir = Scratch.dir("compact_spec")
     val store = dir.resolve("bands").toString
     // accrete the store the way st7 does: one append per batch
     stored.grouped(2).foreach { chunk =>
@@ -66,6 +66,6 @@ class StreamingCompactionSpec extends SparkSpec {
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(rows.keySet == Set(1L, 2L, 3L, 4L))
-    deleteRecursively(dir.toFile)
+    Scratch.remove(dir.toFile)
   }
 }

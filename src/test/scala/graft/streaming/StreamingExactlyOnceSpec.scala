@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 import graft.operators.TableStore
 
 /** st9's atomic versioned commit (StreamingOps.applyBatchExactlyOnce)
@@ -33,7 +33,7 @@ class StreamingExactlyOnceSpec extends SparkSpec {
         r.getDecimal(2).doubleValue())).toMap
 
   test("writer killed between data write and commit: replay converges, no double-count") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_eo_spec")
+    val tmp = Scratch.dir("eo_spec")
     val path = tmp.resolve("t").toString
     val b0 = events(1L -> 10.0, 2L -> 5.0)
     val b1 = events(1L -> 2.0, 3L -> 1.0)
@@ -101,7 +101,7 @@ class StreamingExactlyOnceSpec extends SparkSpec {
     val confKeys = Seq("spark.sql.adaptive.enabled",
       "spark.sql.shuffle.partitions")
     val confBefore = confKeys.map(k => k -> spark.conf.get(k)).toMap
-    val tmp = java.nio.file.Files.createTempDirectory("graft_eo_race")
+    val tmp = Scratch.dir("eo_race")
     val path = tmp.resolve("t").toString
 
     // overlapping user ids so the merged rows genuinely combine both

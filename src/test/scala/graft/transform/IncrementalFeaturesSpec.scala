@@ -1,6 +1,6 @@
 package graft.transform
 
-import graft.{SparkSpec, TestSpark}
+import graft.{Scratch, SparkSpec, TestSpark}
 import graft.operators.TableStore
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,7 @@ class IncrementalFeaturesSpec extends SparkSpec {
 
     val t1 = ts("2026-01-01 00:00:00")
     val t2 = ts("2026-02-01 00:00:00")
-    val path = java.nio.file.Files.createTempDirectory("graft_incr").toString + "/features"
+    val path = Scratch.dir("incr").toString + "/features"
 
     // bootstrap: only game 1 existed
     TableStore.overwrite(
