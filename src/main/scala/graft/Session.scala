@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * with shuffle partitions = cpus, UTC, ANSI off, the legacy parquet
   * `nanosAsLong` flag (older testdata stores `events.ts` as
   * TIMESTAMP(NANOS); see [[Tables.normalizeTs]]), AQE on, no UI, ERROR
-  * log level and graft's native functions registered. A conf only one
-  * main needs stays at that main's call site.
+  * log level and graft's native functions registered, which also makes
+  * [[graft.operators.NioLocalFileSystem]] its `file:` filesystem. A
+  * conf only one main needs stays at that main's call site.
   */
 object Session {
 

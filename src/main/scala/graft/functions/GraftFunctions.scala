@@ -42,9 +42,13 @@ object GraftFunctions {
 
   /** Idempotent: registers only the table entries the session does not
     * already carry (operators emit these calls and must work in any
-    * session, including one built with [[GraftExtensions]]).
+    * session, including one built with [[GraftExtensions]]). First it
+    * makes [[graft.operators.NioLocalFileSystem]] the session's `file:`
+    * filesystem, unless `fs.file.impl` is set: the registry's first use
+    * builds the shared state, which opens the warehouse dir.
     */
   def register(spark: SparkSession): Unit = {
+    graft.operators.NioLocalFileSystem.install(spark.sparkContext.hadoopConfiguration)
     val registry = spark.sessionState.functionRegistry
     Table.filterNot(f => registry.functionExists(f.id))
       .foreach(f => registry.registerFunction(f.id, f.info, f.build _))

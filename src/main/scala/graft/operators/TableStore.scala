@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -80,10 +81,25 @@ object TableStore {
     fs(spark, path).exists(new Path(path))
 
   def append(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
+    writer(df).mode("append").parquet(path)
 
   def overwrite(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
+    writer(df).mode("overwrite").parquet(path)
+
+  /** The writer every write of this store goes through. A driver-side
+    * frame (its optimized plan a `LocalRelation`, as for a
+    * `Seq(...).toDF`) is written as one file: Spark would spread its
+    * rows over `defaultParallelism` files, each paying a create, a
+    * `.crc`, a task commit and, on every later read, a footer. Any
+    * other frame keeps its partitioning, and only a frame whose leaves
+    * are all local relations is optimized here to find out.
+    */
+  private def writer(df: DataFrame): DataFrameWriter[Row] = {
+    val qe = df.queryExecution
+    val local = qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+      qe.optimizedPlan.isInstanceOf[LocalRelation]
+    (if (local) df.coalesce(1) else df).write
+  }
 
   /** S7: insert source rows whose key is absent from the target;
     * existing target rows are never touched.
@@ -214,7 +230,7 @@ object TableStore {
     } else {
       val epoch = cutoff.getTime
       val staged = archivePath + s"__batch$epoch"
-      old.write.mode("overwrite").parquet(staged)
+      writer(old).mode("overwrite").parquet(staged)
       val f = fs(spark, archivePath)
       val archDir = new Path(archivePath)
       if (!f.exists(archDir)) f.mkdirs(archDir)
@@ -371,7 +387,7 @@ object TableStore {
     */
   def rewrite(spark: SparkSession, path: String, df: DataFrame): Unit = {
     val staged = path + "__staged"
-    df.write.mode("overwrite").parquet(staged)
+    writer(df).mode("overwrite").parquet(staged)
     val f = fs(spark, path)
     val p = new Path(path)
     val oldP = new Path(path + "__old")
@@ -494,7 +510,7 @@ object TableStore {
     */
   private def writeDataDir(spark: SparkSession, df: DataFrame,
       dir: String): Unit = {
-    df.write.parquet(dir)
+    writer(df).parquet(dir)
     val f = fs(spark, dir)
     val dirPath = new Path(dir)
     // a 0-partition plan may write no part files — and, plan-dependent,
@@ -502,10 +518,8 @@ object TableStore {
     val empty = !f.exists(dirPath) || !f.listStatus(dirPath)
       .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     if (empty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-        .repartition(1)
-        .write.mode("overwrite").parquet(dir)
+      writer(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
+        .repartition(1)).mode("overwrite").parquet(dir)
   }
 
   def publishVersion(spark: SparkSession, path: String, df: DataFrame,
@@ -1500,7 +1514,7 @@ object TableStore {
     val staged = f.listStatus(p).toSeq
       .filter(st => st.getPath.getName.startsWith("d_") &&
         !referenced.contains(st.getPath.getName) &&
-        now - st.getModificationTime > minAgeMs)
+        now - st.getModificationTime >= minAgeMs)
     staged.foreach(st => f.delete(st.getPath, true): Unit)
     (orphans.size + staged.size).toLong
   }

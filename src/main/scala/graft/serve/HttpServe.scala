@@ -37,7 +37,12 @@ final class HttpServe(readers: Readers, port: Int = 0) {
 
   private val server =
     HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  private val pool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(4,
+      (r: Runnable) => new Thread(r, s"graft-http-${n.incrementAndGet()}"))
+  }
+  server.setExecutor(pool)
 
   private val GameRe = "/games/(-?\\d+)".r
   private val SimilarRe = "/games/(-?\\d+)/similar".r
@@ -45,7 +50,13 @@ final class HttpServe(readers: Readers, port: Int = 0) {
   server.createContext("/", (ex: HttpExchange) => handle(ex))
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+  /** Stops the server and lets the pool's threads end: they are not
+    * daemons, so a left-over pool would keep the JVM alive.
+    */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+  }
   def boundPort: Int = server.getAddress.getPort
 
   private def handle(ex: HttpExchange): Unit =

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session keeps the
-  * suite fast; specs must not mutate global state).
+  * suite fast; specs must not mutate global state). Its `file:`
+  * filesystem is the one every main installs through
+  * `GraftFunctions.register`, so the specs write as production does.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -18,6 +20,7 @@ object TestSpark {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.operators.NioLocalFileSystem].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -725,6 +725,18 @@ class TableStoreSpec extends SparkSpec {
     assert(!new java.io.File(s"$p/d_crashed2").exists())
   }
 
+  test("vacuum with minAgeMs = 0 reclaims a staging dir written the same millisecond") {
+    import TestSpark.spark.implicits._
+    val p = scratch()
+    TableStore.publishVersionIf(spark, p, Seq((0L, 0L)).toDF("k", "n"), "live", None)
+    (1 to 20).foreach { i =>
+      Seq((i.toLong, i.toLong)).toDF("k", "n").write.parquet(s"$p/d_crashed$i")
+      // the freshest a dir can be when vacuum looks at it
+      assert(new java.io.File(s"$p/d_crashed$i").setLastModified(System.currentTimeMillis()))
+      assert(TableStore.vacuum(spark, p, minAgeMs = 0L) == 1L, s"round $i")
+    }
+  }
+
   test("readFoldedUnion: aggregating the raw signed chain == aggregating the folded state") {
     import TestSpark.spark.implicits._
     import org.apache.spark.sql.functions.{col, sum}
@@ -882,5 +894,41 @@ class TableStoreSpec extends SparkSpec {
     assert(results.filter(_.isFailure).forall(
       _.failed.get.getMessage.contains("immutable")))
     assert(TableStore.tags(spark, p) == Map("race" -> v1))
+  }
+
+  private def parquetFiles(dir: String): Int = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(dir)).count(_.getName.endsWith(".parquet"))
+  }
+
+  test("a driver-side frame lands as one file; a scanned frame keeps its files") {
+    import TestSpark.spark.implicits._
+    val rows = (1L to 8L).map(i => (i, s"v$i")).toDF("k", "v")
+    val appended = scratch()
+    TableStore.append(rows, appended)
+    TableStore.append(rows, appended)
+    assert(parquetFiles(appended) == 2)
+    val published = scratch()
+    TableStore.publishVersion(spark, published, rows)
+    assert(parquetFiles(published) == 1)
+    val staged = scratch()
+    TableStore.publishVersionIf(spark, staged, rows, "cas", None)
+    assert(parquetFiles(staged) == 1)
+    val rewritten = scratch()
+    TableStore.overwrite(rows, rewritten)
+    TableStore.rewrite(spark, rewritten, rows.filter("k > 4"))
+    assert(parquetFiles(rewritten) == 1)
+    assert(readSorted(rewritten).map(_._1) == (5L to 8L))
+
+    val multi = scratch()
+    spark.range(0, 100, 1, 4).selectExpr("id AS k").write.parquet(multi)
+    assert(parquetFiles(multi) == 4)
+    val copy = scratch()
+    TableStore.overwrite(TableStore.read(spark, multi), copy)
+    assert(parquetFiles(copy) == 4)
+    val copied = scratch()
+    TableStore.publishVersion(spark, copied, TableStore.read(spark, multi))
+    assert(parquetFiles(copied) == 4)
   }
 }

@@ -226,4 +226,22 @@ class HttpServeSpec extends SparkSpec {
       readers.close()
     }
   }
+
+  test("stop() ends the request pool's threads") {
+    import scala.jdk.CollectionConverters._
+    def live(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    val idle = TestSpark.spark.range(0).selectExpr("id AS vec_id")
+    val readers = new Readers(TestSpark.spark, idle, idle, idle)
+    val before = live()
+    val srv = new HttpServe(readers)
+    srv.start()
+    try (1 to 8).foreach(_ => assert(get(srv.boundPort, "/health")._1 == 200))
+    finally srv.stop()
+    val deadline = System.nanoTime() + 5000000000L
+    while ((live() -- before).nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    val left = live() -- before
+    readers.close()
+    assert(left.isEmpty, s"alive 5 s after stop(): ${left.map(_.getName)}")
+  }
 }
