@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native sketch expressions over a word-hash array — the hot inner
+/* Native sketch expressions over a word-hash array — the hot inner
   * loops of the dedup path. Arithmetic is EXACTLY the lambda forms in
   * [[XSql]] (which the DuckDB oracle still runs), so results stay
   * bit-identical; these exist because the interpreted higher-order-

@@ -32,6 +32,32 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Ivm {
 
+  /** A changelog row's direction: an insert or an update postimage
+    * adds the row, a delete or an update preimage retracts it.
+    */
+  private val isInsert: Column = col("_change_type").isin("insert", "update_postimage")
+
+  /** A changelog row's sign: +1 when it adds the row, -1 when it
+    * retracts it — the one place a changelog's `_change_type` becomes
+    * a multiplicity.
+    */
+  private[graft] val changeSign: Column = when(isInsert, lit(1L)).otherwise(lit(-1L))
+
+  /** A changelog slice as its SIGNED PARTIAL aggregate — the rows a
+    * log-structured aggregate view stores per tick, in the
+    * [[aggregate]] column shape (`n` carries ±row counts, `sum_<c>`
+    * signed partial sums). O(touched groups in the batch), never the
+    * view; the read-side merge is [[TableStore.readFoldedAgg]].
+    */
+  def aggDelta(changes: DataFrame, keys: Seq[String],
+      sumCols: Seq[String]): DataFrame =
+    changes
+      .withColumn("_sign", changeSign)
+      .groupBy(keys.map(col): _*)
+      .agg(sum(col("_sign")).as("n"),
+        sumCols.map(c => sum(col(c).cast(DecimalType(30, 2)) * col("_sign"))
+          .cast(DecimalType(30, 2)).as(s"sum_$c")): _*)
+
   /** Fold a changelog into a materialized aggregate view.
     *
     * @param view    materialized `keys ++ (n, sum_<c>...)` frame with
@@ -40,25 +66,6 @@ object Ivm {
     * @param changes [[TableStore.changesBetween]] output whose row
     *                columns include `keys` and `sumCols`
     */
-  /** A changelog slice as its SIGNED PARTIAL aggregate — the rows a
-    * log-structured aggregate view stores per tick, in the
-    * [[aggregate]] column shape (`n` carries ±row counts, `sum_<c>`
-    * signed partial sums). O(touched groups in the batch), never the
-    * view; the read-side merge is [[TableStore.readFoldedAgg]].
-    */
-  def aggDelta(changes: DataFrame, keys: Seq[String],
-      sumCols: Seq[String]): DataFrame = {
-    val sign = when(
-      col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    changes
-      .withColumn("_sign", sign)
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("_sign")).as("n"),
-        sumCols.map(c => sum(col(c).cast(DecimalType(30, 2)) * col("_sign"))
-          .cast(DecimalType(30, 2)).as(s"sum_$c")): _*)
-  }
-
   def applyDelta(view: DataFrame, changes: DataFrame, keys: Seq[String],
       sumCols: Seq[String]): DataFrame = {
     val delta = aggDelta(changes, keys, sumCols)
@@ -154,11 +161,8 @@ object Ivm {
   def applyDeltaWithExtrema(view: DataFrame, changes: DataFrame,
       newBase: DataFrame, keys: Seq[String], sumCols: Seq[String],
       minCols: Seq[String], maxCols: Seq[String]): DataFrame = {
-    val sign = when(
-      col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
     val delta = changes
-      .withColumn("_sign", sign)
+      .withColumn("_sign", changeSign)
       .groupBy(keys.map(col): _*)
       .agg(sum(col("_sign")).as("_dn"),
         (sumCols.map(c => sum(col(c).cast(DecimalType(30, 2)) * col("_sign"))
@@ -289,14 +293,13 @@ object Ivm {
   def applyDeltaTopKWith(view: DataFrame, changes: DataFrame,
       keys: Seq[String], valueCol: String, idCol: String, k: Int)(
       rescanBase: DataFrame => DataFrame): DataFrame = {
-    val isIns = col("_change_type").isin("insert", "update_postimage")
     val pair = struct(col(valueCol).as("v"), col(idCol).as("id"))
     val delta = changes
       .groupBy(keys.map(col): _*)
       .agg(
-        reverse(array_sort(collect_list(when(isIns, pair)))).as("_ins"),
-        max(when(!isIns, pair)).as("_del_max"),
-        sum(when(!isIns, lit(1L)).otherwise(lit(0L))).as("_n_del"))
+        reverse(array_sort(collect_list(when(isInsert, pair)))).as("_ins"),
+        max(when(!isInsert, pair)).as("_del_max"),
+        sum(when(!isInsert, lit(1L)).otherwise(lit(0L))).as("_n_del"))
     val deltaR = delta.select(keys.map(kc => col(kc).as(s"_d_$kc")) ++
       (delta.columns.toSeq diff keys).map(col): _*)
     val cond = keys.map(kc => col(kc) <=> col(s"_d_$kc")).reduce(_ && _)
@@ -402,27 +405,6 @@ object Ivm {
       .agg(count(lit(1)).as("_mult"))
   }
 
-  /** Bring a [[joinView]] from version N to N+1 given BOTH sides'
-    * changelogs ([[TableStore.changesBetween]] shape: key columns +
-    * `_change_type` + data columns) and both sides' OLD (version-N)
-    * states. Either delta may be empty. Unchanged view rows pass
-    * through untouched; rows whose derivation count reaches zero
-    * vanish.
-    */
-  /** The SIGNED view delta Δ(A⋈B) of the bilinear rule — the rows a
-    * log-structured view version stores (O(batch·fanout), never the
-    * view): ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB with sign-multiplying cross term,
-    * aggregated to (viewCols..., _dmult). [[applyJoinDelta]] folds it
-    * into a materialized view; a fold table publishes it directly.
-    *
-    * `aOld`/`bOld` may carry a `_mult` multiplicity column (the shape
-    * [[TableStore.readFolded]] returns): a base row folded to
-    * multiplicity k contributes k derivations to each matching delta
-    * row, so the single-sided terms weight by it — dropping `_mult`
-    * before the probe would undercount whenever a duplicate base row
-    * was folded into one weighted row. Absent `_mult` means every
-    * base row counts once.
-    */
   /** Ceiling (rows, counted exactly) on a delta that may ride
     * [[joinViewDelta]]'s broadcasts, and on the groups
     * [[applyDeltaTopKWith]] collects — the micro-batch contract as a
@@ -457,14 +439,25 @@ object Ivm {
         "hold the broadcast relation")
   }
 
+  /** The SIGNED view delta Δ(A⋈B) of the bilinear rule — the rows a
+    * log-structured view version stores (O(batch·fanout), never the
+    * view): ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB with sign-multiplying cross term,
+    * aggregated to (viewCols..., _dmult). [[applyJoinDelta]] folds it
+    * into a materialized view; a fold table publishes it directly.
+    *
+    * `aOld`/`bOld` may carry a `_mult` multiplicity column (the shape
+    * [[TableStore.readFolded]] returns): a base row folded to
+    * multiplicity k contributes k derivations to each matching delta
+    * row, so the single-sided terms weight by it — dropping `_mult`
+    * before the probe would undercount whenever a duplicate base row
+    * was folded into one weighted row. Absent `_mult` means every
+    * base row counts once.
+    */
   def joinViewDelta(aOld: DataFrame, bOld: DataFrame, dA: DataFrame,
       dB: DataFrame, keys: Seq[String], viewCols: Seq[String],
       deltaRows: (Long, Long)): DataFrame = {
-    def signed(d: DataFrame): DataFrame = d
-      .withColumn("_s",
-        when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-          .otherwise(lit(-1L)))
-      .drop("_change_type")
+    def signed(d: DataFrame): DataFrame =
+      d.withColumn("_s", changeSign).drop("_change_type")
     def weighted(base: DataFrame): DataFrame =
       if (base.columns.contains("_mult")) base.withColumnRenamed("_mult", "_w")
       else base.withColumn("_w", lit(1L))
@@ -514,6 +507,13 @@ object Ivm {
       .agg(sum(col("_s")).as("_dmult"))
   }
 
+  /** Bring a [[joinView]] from version N to N+1 given BOTH sides'
+    * changelogs ([[TableStore.changesBetween]] shape: key columns +
+    * `_change_type` + data columns) and both sides' OLD (version-N)
+    * states. Either delta may be empty. Unchanged view rows pass
+    * through untouched; rows whose derivation count reaches zero
+    * vanish.
+    */
   def applyJoinDelta(view: DataFrame, aOld: DataFrame, bOld: DataFrame,
       dA: DataFrame, dB: DataFrame, keys: Seq[String]): DataFrame = {
     val viewCols = view.columns.filterNot(_ == "_mult").toSeq

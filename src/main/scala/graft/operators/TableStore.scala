@@ -118,12 +118,7 @@ object TableStore {
     */
   def deleteInsert(spark: SparkSession, path: String, batch: DataFrame,
       keys: Seq[String]): Unit =
-    if (!exists(spark, path)) overwrite(batch, path)
-    else {
-      val kept = read(spark, path)
-        .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      rewrite(spark, path, kept.unionByName(batch))
-    }
+    upsertByKey(spark, path, batch, keys)
 
   /** S12/I1: key-preserving upsert — source rows win on key collision. */
   def upsertByKey(spark: SparkSession, path: String, src: DataFrame,
@@ -457,6 +452,29 @@ object TableStore {
 
   private def deletesPath(path: String): String = path + "__deletes"
 
+  /** Write `df` as a version/staging dir, guaranteeing the dir is
+    * READABLE even when `df` is empty: an empty frame often plans
+    * zero partitions and writes zero part files, and a fileless dir
+    * fails every later `spark.read.parquet` at schema inference. A
+    * legitimately EMPTY state is not an error — a fold table whose
+    * rows were all retracted checkpoints an empty snapshot
+    * (ReservedSlotPropertySpec found exactly this) — so a fileless
+    * write is re-done as one single-partition schema-only file.
+    */
+  private def writeDataDir(spark: SparkSession, df: DataFrame,
+      dir: String): Unit = {
+    writer(df).parquet(dir)
+    val f = fs(spark, dir)
+    val dirPath = new Path(dir)
+    // a 0-partition plan may write no part files — and, plan-dependent,
+    // sometimes not even the directory
+    val empty = !f.exists(dirPath) || !f.listStatus(dirPath)
+      .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    if (empty)
+      writer(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
+        .repartition(1)).mode("overwrite").parquet(dir)
+  }
+
   // ------------------------------------------------------ snapshots
 
   /** Versioned snapshots ("time travel") — the dataset-reproducibility
@@ -499,29 +517,6 @@ object TableStore {
     * retention keeps the markers, so dropped versions stay burned and
     * their commit notes remain queryable.
     */
-  /** Write `df` as a version/staging dir, guaranteeing the dir is
-    * READABLE even when `df` is empty: an empty frame often plans
-    * zero partitions and writes zero part files, and a fileless dir
-    * fails every later `spark.read.parquet` at schema inference. A
-    * legitimately EMPTY state is not an error — a fold table whose
-    * rows were all retracted checkpoints an empty snapshot
-    * (ReservedSlotPropertySpec found exactly this) — so a fileless
-    * write is re-done as one single-partition schema-only file.
-    */
-  private def writeDataDir(spark: SparkSession, df: DataFrame,
-      dir: String): Unit = {
-    writer(df).parquet(dir)
-    val f = fs(spark, dir)
-    val dirPath = new Path(dir)
-    // a 0-partition plan may write no part files — and, plan-dependent,
-    // sometimes not even the directory
-    val empty = !f.exists(dirPath) || !f.listStatus(dirPath)
-      .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (empty)
-      writer(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
-        .repartition(1)).mode("overwrite").parquet(dir)
-  }
-
   def publishVersion(spark: SparkSession, path: String, df: DataFrame,
       note: String = ""): Long = {
     requireCleanNote(note)
@@ -536,13 +531,9 @@ object TableStore {
     // is safe because committed versions always have markers
     f.delete(vDir, true)
     writeDataDir(spark, df, vDir.toString)
-    val marker = new Path(s"$path/_committed_v$v")
-    if (!createExclusive(f, marker, note.getBytes("UTF-8")))
-      throw new java.io.IOException(
-        s"publishVersion: marker $marker already exists — " +
-          "claim uniqueness was violated")
-    f.delete(new Path(s"$path/_claim_v$v"), false)
-    v
+    commit(f, path, v, Commit(note), claimed = true)(marker =>
+      new java.io.IOException(s"publishVersion: marker $marker already exists — " +
+        "claim uniqueness was violated"))
   }
 
   /** Reserve the NEXT version number without writing any data: the
@@ -681,13 +672,9 @@ object TableStore {
       // attempt at this reserved slot may have left bytes
       f.delete(vDir, true)
       writeDataDir(spark, df, vDir.toString)
-      val marker = new Path(s"$path/_committed_v$v")
-      if (!createExclusive(f, marker, note.getBytes("UTF-8")))
-        throw new java.io.IOException(
-          s"publishReserved: marker $marker already exists — " +
-            "the reservation was committed twice")
-      f.delete(new Path(s"$path/_claim_v$v"), false)
-      v
+      commit(f, path, v, Commit(note), claimed = true)(marker =>
+        new java.io.IOException(s"publishReserved: marker $marker already exists — " +
+          "the reservation was committed twice"))
     } finally {
       // success or failure, the reservation's heartbeat ends here: on
       // success the claim is gone; on failure the claim stops beating
@@ -732,21 +719,12 @@ object TableStore {
   def publishVersionIf(spark: SparkSession, path: String, df: DataFrame,
       note: String, expected: Option[Long]): Long = {
     requireCleanNote(note)
-    val f = fs(spark, path)
-    val base = new Path(path)
-    if (!f.exists(base)) f.mkdirs(base)
     val cur = currentVersion(spark, path)
     if (cur != expected) throw ConcurrentVersionException(path, expected, cur)
-    val target = expected.getOrElse(0L) + 1L
-    val stage = s"d_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    writeDataDir(spark, df, s"$path/$stage")
-    val marker = new Path(s"$path/_committed_v$target")
-    if (!createExclusive(f, marker, (note + DataPtr + stage).getBytes("UTF-8"))) {
-      f.delete(new Path(s"$path/$stage"), true)
-      throw ConcurrentVersionException(path, expected,
-        currentVersion(spark, path))
-    }
-    target
+    val stage = stageVersionData(spark, path, df)
+    commit(fs(spark, path), path, expected.getOrElse(0L) + 1L,
+      Commit(note, Some(stage)), claimed = false)(_ =>
+      ConcurrentVersionException(path, expected, currentVersion(spark, path)))
   }
 
   /** Stage `df`'s data under an unreferenced content-addressed dir at
@@ -781,14 +759,10 @@ object TableStore {
       note: String = ""): Long = {
     requireCleanNote(note)
     val f = fs(spark, path)
-    val v = claimNumber(f, path)
-    val marker = new Path(s"$path/_committed_v$v")
-    if (!createExclusive(f, marker, (note + DataPtr + stage).getBytes("UTF-8")))
-      throw new java.io.IOException(
-        s"commitStagedVersion: marker $marker already exists — " +
-          "claim uniqueness was violated")
-    f.delete(new Path(s"$path/_claim_v$v"), false)
-    v
+    commit(f, path, claimNumber(f, path), Commit(note, Some(stage)),
+      claimed = true)(marker =>
+      new java.io.IOException(s"commitStagedVersion: marker $marker already exists — " +
+        "claim uniqueness was violated"))
   }
 
   /** Retry loop for CAS read-modify-write: `attempt` receives the
@@ -848,6 +822,25 @@ object TableStore {
       }
     }
 
+  /** The one commit step of every publish: ONE create-exclusive of
+    * version `v`'s marker holding `rec`, then, for a `claimed` number,
+    * the claim's removal. When the marker already exists the caller's
+    * `lost` error is raised; a CAS commit (no claim) also deletes its
+    * staged dir first, which no marker can ever reference.
+    */
+  private def commit(f: FileSystem, path: String, v: Long, rec: Commit,
+      claimed: Boolean)(lost: Path => Exception): Long = {
+    val marker = markerPath(path, v)
+    if (!createExclusive(f, marker, rec.bytes)) {
+      if (!claimed) rec.dataDir.foreach(d => f.delete(new Path(s"$path/$d"), true))
+      throw lost(marker)
+    }
+    if (claimed) f.delete(new Path(s"$path/_claim_v$v"), false)
+    v
+  }
+
+  private def markerPath(path: String, v: Long): Path = new Path(s"$path/_committed_v$v")
+
   /** Claim the next version number: 1 + max over committed markers,
     * v=N dirs (orphans burn their number) and outstanding claims;
     * collide-and-retry upward on the create-exclusive claim file.
@@ -899,8 +892,7 @@ object TableStore {
     val f = fs(spark, path)
     var last = Long.MinValue
     committedVersions(spark, path).map { v =>
-      val raw = f.getFileStatus(new Path(s"$path/_committed_v$v"))
-        .getModificationTime
+      val raw = f.getFileStatus(markerPath(path, v)).getModificationTime
       val adj = if (last == Long.MinValue) raw else math.max(raw, last + 1)
       last = adj
       (v, adj)
@@ -928,7 +920,7 @@ object TableStore {
   private val DataPtr = "\n@data="
 
   /** A note containing the pointer delimiter would make
-    * [[versionDataDir]] read a caller-chosen string as a data pointer
+    * [[versionDataDirs]] read a caller-chosen string as a data pointer
     * — reject it loudly at publish time instead of corrupting reads.
     */
   private def requireCleanNote(note: String): Unit = {
@@ -947,17 +939,45 @@ object TableStore {
     */
   private val BasePtr = "\n@base="
 
-  private def markerContent(spark: SparkSession, path: String,
-      v: Long): Option[String] = {
-    val f = fs(spark, path)
-    val marker = new Path(s"$path/_committed_v$v")
-    if (!f.exists(marker)) None
-    else {
-      val in = f.open(marker)
-      val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      in.close()
-      Some(s)
+  /** One commit marker's content, parsed once: the caller's note, the
+    * data dir a staged commit points to (None: the `v=N` dir) and an
+    * append commit's parent version. On disk it is the note, then
+    * `\n@data=<dir>` and `\n@base=<N>` when set.
+    */
+  private final case class Commit(note: String, dataDir: Option[String] = None,
+      base: Option[Long] = None) {
+    def bytes: Array[Byte] =
+      (note + dataDir.fold("")(DataPtr + _) + base.fold("")(BasePtr + _)).getBytes("UTF-8")
+  }
+
+  private object Commit {
+    def parse(s: String): Commit = {
+      def field(ptr: String): Option[String] = Some(s.indexOf(ptr)).filter(_ >= 0)
+        .map(i => s.substring(i + ptr.length).takeWhile(_ != '\n').trim)
+      val cut = Seq(s.indexOf(DataPtr), s.indexOf(BasePtr)).filter(_ >= 0)
+      Commit(if (cut.isEmpty) s else s.substring(0, cut.min), field(DataPtr),
+        field(BasePtr).map(_.toLong))
     }
+  }
+
+  /** Version `v`'s commit record (one open of its marker), or None for
+    * a version never committed.
+    */
+  private def commitRecord(f: FileSystem, path: String, v: Long): Option[Commit] =
+    try Some(Commit.parse(readText(f, markerPath(path, v))))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** [[commitRecord]] remembered per version, for a call that walks
+    * many versions' chains.
+    */
+  private def commitRecords(f: FileSystem, path: String): Long => Option[Commit] = {
+    val seen = scala.collection.mutable.Map.empty[Long, Option[Commit]]
+    v => seen.getOrElseUpdate(v, commitRecord(f, path, v))
   }
 
   /** The commit note version `v` was published with ("" if none), or
@@ -967,32 +987,19 @@ object TableStore {
     * agnostic.
     */
   def versionNote(spark: SparkSession, path: String, v: Long): Option[String] =
-    markerContent(spark, path, v).map { s =>
-      val cut = Seq(s.indexOf(DataPtr), s.indexOf(BasePtr)).filter(_ >= 0)
-      if (cut.isEmpty) s else s.substring(0, cut.min)
-    }
+    commitRecord(fs(spark, path), path, v).map(_.note)
 
   /** The parent version of an APPEND commit (None for full-snapshot /
     * CAS commits). The chain is what [[versionDataDirs]] walks.
     */
   def versionBase(spark: SparkSession, path: String, v: Long): Option[Long] =
-    markerContent(spark, path, v).flatMap { s =>
-      val i = s.indexOf(BasePtr)
-      if (i < 0) None
-      else Some(s.substring(i + BasePtr.length).takeWhile(_ != '\n').trim.toLong)
-    }
+    commitRecord(fs(spark, path), path, v).flatMap(_.base)
 
   /** The data directory version `v` reads from: the marker's pointer
     * for CAS commits, the conventional `v=N` dir otherwise.
     */
-  private def versionDataDir(spark: SparkSession, path: String,
-      v: Long): String =
-    markerContent(spark, path, v) match {
-      case Some(s) if s.contains(DataPtr) =>
-        val tail = s.substring(s.indexOf(DataPtr) + DataPtr.length)
-        s"$path/${tail.takeWhile(_ != '\n').trim}"
-      case _ => s"$path/v=$v"
-    }
+  private def dataDir(path: String, v: Long, rec: Option[Commit]): String =
+    rec.flatMap(_.dataDir).fold(s"$path/v=$v")(d => s"$path/$d")
 
   /** ALL data directories version `v` reads from, base-chain first:
     * an append commit's content is its parent's content plus its own
@@ -1003,15 +1010,18 @@ object TableStore {
     * Delta checkpoints bound its log replay.
     */
   def versionDataDirs(spark: SparkSession, path: String,
-      v: Long): Seq[String] = {
+      v: Long): Seq[String] =
+    chainDirs(path, v, commitRecord(fs(spark, path), path, _))
+
+  private def chainDirs(path: String, v: Long,
+      rec: Long => Option[Commit]): Seq[String] = {
     val seen = scala.collection.mutable.Set.empty[Long]
     def walk(x: Long): List[String] = {
       require(seen.add(x),
         s"versionDataDirs: append-chain cycle at version $x of $path")
-      versionBase(spark, path, x) match {
-        case Some(b) => walk(b) :+ versionDataDir(spark, path, x)
-        case None => List(versionDataDir(spark, path, x))
-      }
+      val r = rec(x)
+      val own = dataDir(path, x, r)
+      r.flatMap(_.base).fold(List(own))(walk(_) :+ own)
     }
     walk(v)
   }
@@ -1034,8 +1044,8 @@ object TableStore {
       committed: Set[Long]): Seq[String] = {
     require(committed.contains(v),
       s"versionFiles: version $v at $path is not committed")
-    val dir = new Path(versionDataDir(spark, path, v))
     val f = fs(spark, path)
+    val dir = new Path(dataDir(path, v, commitRecord(f, path, v)))
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -1092,14 +1102,22 @@ object TableStore {
     */
   def snapshotDataDirs(spark: SparkSession, path: String,
       version: Option[Long] = None): Seq[String] = {
+    val f = fs(spark, path)
     val committed = committedVersions(spark, path)
     if (committed.isEmpty) sys.error(s"readVersion: no published version at $path")
-    val v = version.getOrElse(committed.last)
+    checkedDataDirs(f, path, committed, version.getOrElse(committed.last),
+      commitRecord(f, path, _))
+  }
+
+  /** [[snapshotDataDirs]] of version `v` against one listing of the
+    * `committed` versions and a record source.
+    */
+  private def checkedDataDirs(f: FileSystem, path: String, committed: Seq[Long],
+      v: Long, rec: Long => Option[Commit]): Seq[String] = {
     require(committed.contains(v),
       s"readVersion: version $v at $path is not committed " +
         "(a crashed publish's orphan dir is not a version)")
-    val dirs = versionDataDirs(spark, path, v)
-    val f = fs(spark, path)
+    val dirs = chainDirs(path, v, rec)
     dirs.foreach(d => require(f.exists(new Path(d)),
       s"readVersion: version $v's data at $d does not exist at $path " +
         "(dropped by retention)"))
@@ -1150,18 +1168,10 @@ object TableStore {
     // any race — two appends to the same parent serialize, the loser
     // gets ConcurrentVersionException to re-read and retry instead of
     // silently dropping the winner's rows from its chain
-    val f = fs(spark, path)
-    val target = parent + 1L
-    val stage = s"d_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    writeDataDir(spark, df, s"$path/$stage")
-    val marker = new Path(s"$path/_committed_v$target")
-    if (!createExclusive(f, marker,
-        (note + DataPtr + stage + BasePtr + parent).getBytes("UTF-8"))) {
-      f.delete(new Path(s"$path/$stage"), true)
-      throw ConcurrentVersionException(path, Some(parent),
-        currentVersion(spark, path))
-    }
-    target
+    val stage = stageVersionData(spark, path, df)
+    commit(fs(spark, path), path, parent + 1L,
+      Commit(note, Some(stage), Some(parent)), claimed = false)(_ =>
+      ConcurrentVersionException(path, Some(parent), currentVersion(spark, path)))
   }
 
   /** `t` with every nested field, array element and map value made
@@ -1244,12 +1254,7 @@ object TableStore {
     val p = new Path(branchMetaPath(branchPath))
     val f = fs(spark, branchPath)
     require(f.exists(p), s"branchBase: $branchPath is not a branch")
-    val in = f.open(p)
-    val content = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      out.toString("UTF-8")
-    } finally in.close()
+    val content = readText(f, p)
     content.split(";") match {
       case Array(par, b) if par.startsWith("parent=") && b.startsWith("base=") =>
         (par.stripPrefix("parent="), b.stripPrefix("base=").trim.toLong)
@@ -1314,13 +1319,20 @@ object TableStore {
     */
   def readPinned(spark: SparkSession, manifestPath: String, table: String,
       manifestVersion: Option[Long] = None): DataFrame = {
+    val (p, v) = pin(spark, manifestPath, table, manifestVersion)
+    readVersion(spark, p, Some(v))
+  }
+
+  /** The (table path, pinned version) a manifest holds for `table`. */
+  private def pin(spark: SparkSession, manifestPath: String, table: String,
+      manifestVersion: Option[Long]): (String, Long) = {
     val row = readVersion(spark, manifestPath, manifestVersion)
       .filter(col("table_name") === table)
       .select("table_path", "pinned_version")
       .collect()
     require(row.length == 1,
       s"readPinned: manifest at $manifestPath has ${row.length} rows for $table")
-    readVersion(spark, row.head.getString(0), Some(row.head.getLong(1)))
+    (row.head.getString(0), row.head.getLong(1))
   }
 
   /** The table's version ledger as a queryable DataFrame — Delta's
@@ -1350,11 +1362,12 @@ object TableStore {
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
       try r.getRecordCount finally r.close()
     }
+    val rec = commitRecords(f, path)
     versions.map { v =>
-      val note = versionNote(spark, path, v).getOrElse("")
+      val note = rec(v).fold("")(_.note)
       val kind = if (note.startsWith(FoldDeltaPrefix)) "fold_delta"
         else "snapshot"
-      val n = versionDataDirs(spark, path, v).map { d =>
+      val n = chainDirs(path, v, rec).map { d =>
         val dp = new Path(d)
         if (!f.exists(dp)) 0L // reclaimed by retention: data gone, marker stays
         else f.listStatus(dp).toSeq
@@ -1374,13 +1387,8 @@ object TableStore {
     */
   def readPinnedFolded(spark: SparkSession, manifestPath: String,
       table: String, manifestVersion: Option[Long] = None): DataFrame = {
-    val row = readVersion(spark, manifestPath, manifestVersion)
-      .filter(col("table_name") === table)
-      .select("table_path", "pinned_version")
-      .collect()
-    require(row.length == 1,
-      s"readPinnedFolded: manifest at $manifestPath has ${row.length} rows for $table")
-    readFolded(spark, row.head.getString(0), Some(row.head.getLong(1)))
+    val (p, v) = pin(spark, manifestPath, table, manifestVersion)
+    readFolded(spark, p, Some(v))
   }
 
   /** Row-level changelog between two committed versions — the
@@ -1480,8 +1488,8 @@ object TableStore {
     * publisher — an in-flight publish's half-written dir is
     * indistinguishable from a crashed one's. Returns the number of
     * orphan dirs reclaimed.
-    */
-  /** @param minAgeMs stale-staging retention (default 1 h, like
+    *
+    * @param minAgeMs stale-staging retention (default 1 h, like
     *   Delta's VACUUM retention): an unreferenced `d_*` dir younger
     *   than this is presumed an IN-FLIGHT CAS publish whose marker
     *   hasn't landed yet and is left alone. Callers whose publishers
@@ -1509,7 +1517,7 @@ object TableStore {
     // same stale-file age guard Delta's VACUUM applies; threshold is
     // the minAgeMs parameter)
     val referenced = committed.map(v =>
-      new Path(versionDataDir(spark, path, v)).getName)
+      new Path(dataDir(path, v, commitRecord(f, path, v))).getName)
     val now = System.currentTimeMillis()
     val staged = f.listStatus(p).toSeq
       .filter(st => st.getPath.getName.startsWith("d_") &&
@@ -1524,6 +1532,49 @@ object TableStore {
     * numbers stay burned and their commit notes remain readable —
     * only the storage is reclaimed.
     */
+  def dropVersionsBelow(spark: SparkSession, path: String, keepFrom: Long): Unit = {
+    val f = fs(spark, path)
+    val committed = committedVersions(spark, path)
+    val cur = committed.lastOption.getOrElse(return)
+    val rec = commitRecords(f, path)
+    // tagged versions are retention-exempt: a tag IS a retention
+    // contract (Iceberg's expire_snapshots never expires a tagged
+    // snapshot) — reproducibility pins survive any keepFrom
+    val keep = tags(spark, path).values.toSet + cur
+    // append-chain reachability: a kept version's content may live in
+    // dirs committed by versions below the floor (the chain's parents)
+    // — those dirs are LIVE DATA, not expired history (Delta's vacuum
+    // deletes only files unreachable from retained versions)
+    val referenced: Set[String] = committed
+      .filter(v => v >= keepFrom || keep(v))
+      .flatMap(chainDirs(path, _, rec)).toSet
+    // a version dir's sibling skipping index (`<dir>__idx`, see
+    // SkippingIndex) is stale garbage once its data is reclaimed
+    def drop(dir: Path): Unit = {
+      f.delete(dir, true): Unit
+      f.delete(new Path(dir.toString + "__idx"), true): Unit
+    }
+    val statuses = f.listStatus(new Path(path))
+    statuses.filter(_.getPath.getName.startsWith("v=")).foreach { st =>
+      // non-numeric v=* entries (a version dir's `v=N__idx`) are not
+      // versions — never parse-crash on them, never delete them here
+      scala.util.Try(st.getPath.getName.stripPrefix("v=").toLong)
+        .toOption.foreach { v =>
+          if (v < keepFrom && !keep(v) && !referenced(s"$path/v=$v"))
+            drop(st.getPath)
+        }
+    }
+    // CAS commits keep their data behind marker pointers — reclaim
+    // those the same way (markers stay, numbers stay burned)
+    committed.foreach { v =>
+      if (v < keepFrom && !keep(v)) {
+        val d = dataDir(path, v, rec(v))
+        if (d != s"$path/v=$v" && !referenced(d))
+          drop(new Path(d))
+      }
+    }
+  }
+
   // ------------------------------------------------------ fold tables
 
   /** Log-structured ("fold") tables on the SAME versioned substrate —
@@ -1588,7 +1639,7 @@ object TableStore {
     * shuffle width (callers size it to volume), so no local constant
     * is introduced. Empty `clusterBy` = today's layout, unchanged.
     */
-  private def clusterFold(df: DataFrame, clusterBy: Seq[String]): DataFrame =
+  private[graft] def clusterFold(df: DataFrame, clusterBy: Seq[String]): DataFrame =
     if (clusterBy.isEmpty || !clusterBy.forall(df.columns.contains)) df
     else df.repartitionByRange(clusterBy.map(col): _*)
       .sortWithinPartitions(clusterBy.map(col): _*)
@@ -1637,11 +1688,54 @@ object TableStore {
     * anchor (and the retention horizon: versions below it can never
     * be referenced again).
     */
-  def foldAnchor(spark: SparkSession, path: String, v: Long): Long =
-    committedVersions(spark, path).filter(_ <= v).reverse
-      .find(x => !isFoldDelta(spark, path, x))
+  def foldAnchor(spark: SparkSession, path: String, v: Long): Long = {
+    val f = fs(spark, path)
+    anchorOf(path, committedVersions(spark, path), v, commitRecord(f, path, _))
+  }
+
+  private def anchorOf(path: String, committed: Seq[Long], v: Long,
+      rec: Long => Option[Commit]): Long =
+    committed.filter(_ <= v).reverse
+      .find(x => !rec(x).exists(_.note.startsWith(FoldDeltaPrefix)))
       .getOrElse(sys.error(
         s"readFolded: no full snapshot at or before v=$v at $path"))
+
+  /** A fold table's chain at one version: the anchor snapshot and every
+    * delta after it as UNFOLDED signed `rows`, and the number of
+    * versions (`links`) they span. Both come from one marker listing,
+    * so a checkpoint committing meanwhile cannot make them disagree.
+    */
+  final case class FoldChain(rows: DataFrame, links: Int) {
+
+    /** The multiset state: group by every data column, sum `_mult`,
+      * keep `_mult > 0`. A one-link chain is a canonical snapshot
+      * ([[publishFoldSnapshot]]), so it is only filtered.
+      */
+    def folded: DataFrame = fold(rows.columns.filterNot(_ == "_mult").toSeq, "_mult")
+
+    private[TableStore] def fold(keys: Seq[String], count: String,
+        sums: Column*): DataFrame =
+      if (links <= 1) rows.filter(col(count) > 0)
+      else rows.groupBy(keys.map(col): _*)
+        .agg(sum(col(count)).as(count), sums: _*)
+        .filter(col(count) > 0)
+  }
+
+  /** The [[FoldChain]] at version `upTo` (default: latest): one
+    * listing of the committed versions, one open per marker.
+    */
+  def foldChain(spark: SparkSession, path: String,
+      upTo: Option[Long] = None): FoldChain = {
+    val f = fs(spark, path)
+    val committed = committedVersions(spark, path)
+    if (committed.isEmpty) sys.error(s"readFolded: no published version at $path")
+    val v = upTo.getOrElse(committed.last)
+    val rec = commitRecords(f, path)
+    val anchor = anchorOf(path, committed, v, rec)
+    val links = committed.filter(x => x >= anchor && x <= v)
+    FoldChain(links.map(x => readParquet(spark, checkedDataDirs(f, path, committed, x, rec)))
+      .reduce(_ unionByName _), links.size)
+  }
 
   /** The logical multiset state at version `upTo` (default: latest):
     * anchor snapshot ⊎ Σ deltas, `_mult > 0`. The single-snapshot
@@ -1652,20 +1746,8 @@ object TableStore {
     * the anchor and one delta later.
     */
   def readFolded(spark: SparkSession, path: String,
-      upTo: Option[Long] = None): DataFrame = {
-    val committed = committedVersions(spark, path)
-    if (committed.isEmpty) sys.error(s"readFolded: no published version at $path")
-    val v = upTo.getOrElse(committed.last)
-    val anchor = foldAnchor(spark, path, v)
-    val chain = committed.filter(x => x >= anchor && x <= v)
-    val all = chain.map(x => readVersion(spark, path, Some(x)))
-      .reduce(_ unionByName _)
-    val dataCols = all.columns.filterNot(_ == "_mult").toSeq
-    if (chain.size == 1) all.filter(col("_mult") > 0)
-    else all.groupBy(dataCols.map(col): _*)
-      .agg(sum(col("_mult")).as("_mult"))
-      .filter(col("_mult") > 0)
-  }
+      upTo: Option[Long] = None): DataFrame =
+    foldChain(spark, path, upTo).folded
 
   /** The UNFOLDED signed chain at `upTo` (anchor snapshot plus every
     * delta, `_mult` signed, no merge): for consumers that fold the
@@ -1677,16 +1759,8 @@ object TableStore {
     * one aggregate over the log and a state-wide shuffle before it.
     */
   def readFoldedUnion(spark: SparkSession, path: String,
-      upTo: Option[Long] = None): DataFrame = {
-    val committed = committedVersions(spark, path)
-    if (committed.isEmpty)
-      sys.error(s"readFoldedUnion: no published version at $path")
-    val v = upTo.getOrElse(committed.last)
-    val anchor = foldAnchor(spark, path, v)
-    committed.filter(x => x >= anchor && x <= v)
-      .map(x => readVersion(spark, path, Some(x)))
-      .reduce(_ unionByName _)
-  }
+      upTo: Option[Long] = None): DataFrame =
+    foldChain(spark, path, upTo).rows
 
   /** Materialize the current folded state as a new FULL snapshot —
     * the checkpoint that bounds chain length and unlocks retention.
@@ -1708,64 +1782,10 @@ object TableStore {
     * aggregate fold table publishes THIS read's result.
     */
   def readFoldedAgg(spark: SparkSession, path: String, keys: Seq[String],
-      sumCols: Seq[String], upTo: Option[Long] = None): DataFrame = {
-    val committed = committedVersions(spark, path)
-    if (committed.isEmpty) sys.error(s"readFoldedAgg: no published version at $path")
-    val v = upTo.getOrElse(committed.last)
-    val anchor = foldAnchor(spark, path, v)
-    val chain = committed.filter(x => x >= anchor && x <= v)
-    val all = chain.map(x => readVersion(spark, path, Some(x)))
-      .reduce(_ unionByName _)
-    if (chain.size == 1) all.filter(col("n") > 0)
-    else all.groupBy(keys.map(col): _*)
-      .agg(sum(col("n")).as("n"),
-        sumCols.map(c => sum(col(s"sum_$c"))
-          .cast(org.apache.spark.sql.types.DecimalType(30, 2))
-          .as(s"sum_$c")): _*)
-      .filter(col("n") > 0)
-  }
-
-  def dropVersionsBelow(spark: SparkSession, path: String, keepFrom: Long): Unit = {
-    val f = fs(spark, path)
-    val cur = currentVersion(spark, path).getOrElse(return)
-    // tagged versions are retention-exempt: a tag IS a retention
-    // contract (Iceberg's expire_snapshots never expires a tagged
-    // snapshot) — reproducibility pins survive any keepFrom
-    val committed = committedVersions(spark, path)
-    val keep = tags(spark, path).values.toSet + cur
-    // append-chain reachability: a kept version's content may live in
-    // dirs committed by versions below the floor (the chain's parents)
-    // — those dirs are LIVE DATA, not expired history (Delta's vacuum
-    // deletes only files unreachable from retained versions)
-    val referenced: Set[String] = committed
-      .filter(v => v >= keepFrom || keep(v))
-      .flatMap(v => versionDataDirs(spark, path, v)).toSet
-    // a version dir's sibling skipping index (`<dir>__idx`, see
-    // SkippingIndex) is stale garbage once its data is reclaimed
-    def drop(dir: Path): Unit = {
-      f.delete(dir, true): Unit
-      f.delete(new Path(dir.toString + "__idx"), true): Unit
-    }
-    val statuses = f.listStatus(new Path(path))
-    statuses.filter(_.getPath.getName.startsWith("v=")).foreach { st =>
-      // non-numeric v=* entries (a version dir's `v=N__idx`) are not
-      // versions — never parse-crash on them, never delete them here
-      scala.util.Try(st.getPath.getName.stripPrefix("v=").toLong)
-        .toOption.foreach { v =>
-          if (v < keepFrom && !keep(v) && !referenced(s"$path/v=$v"))
-            drop(st.getPath)
-        }
-    }
-    // CAS commits keep their data behind marker pointers — reclaim
-    // those the same way (markers stay, numbers stay burned)
-    committed.foreach { v =>
-      if (v < keepFrom && !keep(v)) {
-        val d = versionDataDir(spark, path, v)
-        if (d != s"$path/v=$v" && !referenced(d))
-          drop(new Path(d))
-      }
-    }
-  }
+      sumCols: Seq[String], upTo: Option[Long] = None): DataFrame =
+    foldChain(spark, path, upTo).fold(keys, "n", sumCols.map(c =>
+      sum(col(s"sum_$c")).cast(org.apache.spark.sql.types.DecimalType(30, 2))
+        .as(s"sum_$c")): _*)
 
   // ------------------------------------------------------------ tags
 
@@ -1807,13 +1827,8 @@ object TableStore {
       .map(_.getPath.getName)
       .filter(_.startsWith("_tag_"))
       .flatMap { n =>
-        val in = f.open(new Path(s"$path/$n"))
-        val parsed =
-          try scala.util.Try(
-            scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-            .toOption
-          finally in.close()
-        parsed.map(n.stripPrefix("_tag_") -> _)
+        val text = readText(f, new Path(s"$path/$n"))
+        scala.util.Try(text.trim.toLong).toOption.map(n.stripPrefix("_tag_") -> _)
       }.toMap
   }
 

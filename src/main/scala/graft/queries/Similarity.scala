@@ -235,17 +235,6 @@ object Similarity {
        |    FROM ${p}rf) WHERE rn = 1)""".stripMargin
   }
 
-  /** DuckDB CTE chain for the PQ tier (k11/k10): COSINE-compatible
-    * product quantization — vectors are L2-normalized first (unit
-    * vectors make L2 ordering identical to cosine ordering, which is
-    * how production vector stores run cosine ANN through an L2
-    * quantizer; zero-norm vectors have no direction and are excluded
-    * from the index), then per-subspace codebooks are trained on the
-    * normalized slices and the query's ADC distance tables built from
-    * its normalized slices. Assumes a CTE `e(vec_id, v)` is in scope;
-    * emits the normalized set `pqe`, per-subspace chains, and `dt$i`;
-    * `codeJoins` sums the four table lookups per vector.
-    */
   /** Deterministic training-set bound — the FAISS index-build
     * contract KMeans.MaxTrainRows states: TRAINING is a
     * bounded-sample problem (the cap keeps the local Lloyd solve a
@@ -266,6 +255,17 @@ object Similarity {
     if (s <= 1L) vecs else vecs.filter(col("vec_id") % s === 0)
   }
 
+  /** DuckDB CTE chain for the PQ tier (k11/k10): COSINE-compatible
+    * product quantization — vectors are L2-normalized first (unit
+    * vectors make L2 ordering identical to cosine ordering, which is
+    * how production vector stores run cosine ANN through an L2
+    * quantizer; zero-norm vectors have no direction and are excluded
+    * from the index), then per-subspace codebooks are trained on the
+    * normalized slices and the query's ADC distance tables built from
+    * its normalized slices. Assumes a CTE `e(vec_id, v)` is in scope;
+    * emits the normalized set `pqe`, per-subspace chains, and `dt$i`;
+    * `codeJoins` sums the four table lookups per vector.
+    */
   private def pqCtes(): (String, String, String) = {
     implicit val dl: Dialect = SqlDuck
     val sub = PqSubDims

@@ -1170,9 +1170,8 @@ object StreamingOps {
       val compactV = TableStore.publishFoldSnapshot(s, basePath,
         TableStore.readFolded(s, basePath).drop("_mult"), note = "compact")
       // register the MAINTAINED view where it lives: its latest
-      // committed version's data dir (plain publishes use v=N)
-      val finalViewDir =
-        s"$viewPath/v=${TableStore.committedVersions(s, viewPath).last}"
+      // committed version's data dir
+      val finalViewDir = TableStore.snapshotDataDir(s, viewPath)
       MvCatalog.register(s, basePath, compactV, finalViewDir,
         Seq("o_custkey"), Seq("o_totalprice"))
       val q = TableStore.readVersion(s, basePath, Some(compactV))

@@ -78,11 +78,19 @@ object JoinViewMaintenance {
     * survives.
     */
   def tickVersion(spark: SparkSession, path: String, b: Long): Option[Long] =
-    TableStore.committedVersions(spark, path).find { v =>
-      TableStore.versionNote(spark, path, v).exists(n =>
-        n == note(b) || n == TableStore.FoldDeltaPrefix + note(b) ||
-          checkpointAfter(n).exists(_ >= b))
-    }
+    versionWith(spark, path)(n =>
+      n == note(b) || n == TableStore.FoldDeltaPrefix + note(b) || covers(n, b))
+
+  /** The checkpoint rule of [[tickVersion]]: note `n` is a compaction
+    * checkpoint taken after tick `b` or later.
+    */
+  private def covers(n: String, b: Long): Boolean = checkpointAfter(n).exists(_ >= b)
+
+  /** The first committed version at `path` whose note passes `p`. */
+  private def versionWith(spark: SparkSession, path: String)(
+      p: String => Boolean): Option[Long] =
+    TableStore.committedVersions(spark, path)
+      .find(v => TableStore.versionNote(spark, path, v).exists(p))
 
   /** Publish the v0 states: both bases and their join view, tagged
     * tick=-1, as full fold-table snapshots (`_mult`-annotated).
@@ -134,11 +142,8 @@ object JoinViewMaintenance {
     * exactly the invariant the delta rule needs, and exactly what
     * [[TableStore.readFolded]] computes.
     */
-  def baseDelta(delta: DataFrame): DataFrame = delta
-    .withColumn("_mult",
-      when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-        .otherwise(lit(-1L)))
-    .drop("_change_type")
+  def baseDelta(delta: DataFrame): DataFrame =
+    delta.withColumn("_mult", Ivm.changeSign).drop("_change_type")
 
   /** Per-tick cost breakdown (seconds): the view-delta compute+publish
     * job, the two base-delta publishes, and the compaction checkpoint
@@ -267,12 +272,9 @@ object JoinViewMaintenance {
         // clustering discipline): one range exchange on a rewrite
         // that already runs OFF the critical path (AsyncCompactor)
         // keeps every later tick's probe predicate able to prune
-        def clustered(df: DataFrame): DataFrame =
-          clusterBy.get(p).filter(_.forall(df.columns.contains))
-            .fold(df)(cols => df.repartitionByRange(cols.map(col): _*)
-              .sortWithinPartitions(cols.map(col): _*))
         Future(inCaller(TableStore.publishReserved(spark, p, slot,
-          clustered(TableStore.readFolded(spark, p, Some(at))),
+          TableStore.clusterFold(TableStore.readFolded(spark, p, Some(at)),
+            clusterBy.getOrElse(p, Nil)),
           checkpointNote(batchId))))
       }
       compacts.foreach(Await.result(_, Duration.Inf): Unit)
@@ -366,7 +368,7 @@ object JoinViewMaintenance {
       // `_mult` stays attached: joinViewDelta weights its base probes
       // by it, so a duplicate base row folded to one `_mult=k` row
       // still derives k view rows per matching delta row. The probes
-      // read the RAW signed chain (readFoldedUnion), not the folded
+      // read the RAW signed chain (the fold chain's rows), not the folded
       // state: joinViewDelta's probe terms are linear in the base
       // multiplicities and it ends in a groupBy-sum over the view
       // columns, so probing each signed chain row and summing equals
@@ -379,8 +381,8 @@ object JoinViewMaintenance {
       // (no groupBy above them now), so a long chain shuffles
       // O(matching rows), not O(state); with a keyed file layout the
       // same predicate prunes the scan.
-      val aPrev0 = TableStore.readFoldedUnion(spark, aPath)
-      val bPrev0 = TableStore.readFoldedUnion(spark, bPath)
+      val aChain = TableStore.foldChain(spark, aPath)
+      val bChain = TableStore.foldChain(spark, bPath)
       // no .distinct() on the build side: LeftSemi deduplicates by
       // construction, and the distinct would cost a 2-stage aggregate
       // per tick for a build set that is already batch-sized.
@@ -389,10 +391,6 @@ object JoinViewMaintenance {
       // drops non-matching rows for free and the extra semi stages
       // cost more than they save (measured on i4) — the filter pays
       // off only when it prunes a multi-version union.
-      def chainLen(p: String): Int = {
-        val committed = TableStore.committedVersions(spark, p)
-        committed.count(_ >= TableStore.foldAnchor(spark, p, committed.last))
-      }
       // delta-key-RANGE predicate on the probe scans (r15 verdict
       // task 3): the opposing delta's [min, max] box over the join
       // keys, applied as plain comparison filters — which, unlike the
@@ -413,18 +411,18 @@ object JoinViewMaintenance {
         if (st.rows == 0 || st.box.exists(_.isEmpty)) base.filter(lit(false))
         else base.filter(keys.zip(st.box.flatten).map { case (kc, (lo, hi)) =>
           col(kc) >= lit(lo) && col(kc) <= lit(hi) }.reduce(_ && _))
-      def keyFilter(base: DataFrame, p: String, d: DataFrame,
+      def keyFilter(chain: TableStore.FoldChain, d: DataFrame,
           st: DeltaStats): DataFrame = {
-        val ranged = rangeFilter(base, st)
+        val ranged = rangeFilter(chain.rows, st)
         // the semi-join only pays when it prunes a multi-version
         // union; on a bare snapshot the probe's inner join drops
         // non-matching survivors of the range predicate for free
-        if (chainLen(p) <= 1) ranged
+        if (chain.links <= 1) ranged
         else ranged.join(broadcast(d.select(keys.map(col): _*)), keys, "left_semi")
       }
-      val aPrev = keyFilter(aPrev0, aPath, dB, statsB)
-      val bPrev = keyFilter(bPrev0, bPath, dA, statsA)
-      val viewCols = (aPrev0.columns ++ bPrev0.columns).distinct
+      val aPrev = keyFilter(aChain, dB, statsB)
+      val bPrev = keyFilter(bChain, dA, statsA)
+      val viewCols = (aChain.rows.columns ++ bChain.rows.columns).distinct
         .filterNot(_ == "_mult").toSeq
       val dView = Ivm.joinViewDelta(aPrev, bPrev, dA, dB, keys, viewCols,
         (statsA.rows, statsB.rows))
@@ -535,24 +533,15 @@ object JoinViewMaintenance {
       // snapshot post-tick chain (a redelivery onto a checkpoint)
       // keeps readFolded's filter-only fast path: a canonical snapshot
       // needs no re-fold after the semi.
-      def foldedFor(gk: DataFrame): DataFrame = {
-        val committed = TableStore.committedVersions(spark, basePath)
-        val chainLen = committed.count(
-          _ >= TableStore.foldAnchor(spark, basePath, committed.last)) +
-          (if (needBase) 1 else 0)
-        val committedChain = TableStore.readFoldedUnion(spark, basePath)
-        val chain = if (needBase) committedChain.unionByName(signed)
-          else committedChain
+      def postTickBase(gk: DataFrame): DataFrame = {
+        val committed = TableStore.foldChain(spark, basePath)
+        val chain = if (needBase)
+          TableStore.FoldChain(committed.rows.unionByName(signed), committed.links + 1)
+          else committed
         val gkR = gk.select(keys.map(kc => col(kc).as(s"_g_$kc")): _*)
         val cond = keys.map(kc => col(kc) <=> col(s"_g_$kc")).reduce(_ && _)
-        val touched = chain.join(broadcast(gkR), cond, "left_semi")
-        if (chainLen <= 1) touched.filter(col("_mult") > 0).drop("_mult")
-        else {
-          val dataCols = touched.columns.filterNot(_ == "_mult").toSeq
-          touched.groupBy(dataCols.map(col): _*)
-            .agg(sum(col("_mult")).as("_mult"))
-            .filter(col("_mult") > 0).drop("_mult")
-        }
+        chain.copy(rows = chain.rows.join(broadcast(gkR), cond, "left_semi"))
+          .folded.drop("_mult")
       }
       // a distinct snapshot (publishFoldSnapshotDistinct's shape):
       // applyDeltaTopK emits ONE row per group by construction (incr
@@ -562,7 +551,7 @@ object JoinViewMaintenance {
       // bought for nothing
       val next = Ivm.applyDeltaTopKWith(
         TableStore.readFolded(spark, viewPath).drop("_mult"),
-        slice, keys, valueCol, idCol, k)(foldedFor)
+        slice, keys, valueCol, idCol, k)(postTickBase)
       Some(TableStore.stageVersionData(spark, viewPath,
         next.withColumn("_mult", lit(1L))))
     } else None
@@ -630,12 +619,10 @@ object JoinViewMaintenance {
       if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1L)) {
         // guarded like the members: an existing checkpoint covering
         // this tick is proof the compaction already ran
-        TableStore.committedVersions(spark, basePath).find { v =>
-          TableStore.versionNote(spark, basePath, v)
-            .flatMap(checkpointAfter).exists(_ >= batchId)
-        }.getOrElse(TableStore.publishFoldSnapshot(spark, basePath,
-          TableStore.readFolded(spark, basePath, Some(vB0)),
-          s"checkpoint;after=$batchId"))
+        versionWith(spark, basePath)(covers(_, batchId))
+          .getOrElse(TableStore.publishFoldSnapshot(spark, basePath,
+            TableStore.readFolded(spark, basePath, Some(vB0)),
+            checkpointNote(batchId)))
       } else vB0
     afterMembers()
     if (tickVersion(spark, maniPath, batchId).isEmpty)

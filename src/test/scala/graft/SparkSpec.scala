@@ -21,6 +21,8 @@ object TestSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[graft.operators.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.operators.NioLocalFileSystem.Fs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -7,7 +7,7 @@ import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, LocalFileSystem, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.SparkEnv
 
@@ -78,6 +78,57 @@ class NioLocalFileSystemSpec extends SparkSpec {
     assert(explicit.get("fs.file.impl") == classOf[LocalFileSystem].getName)
   }
 
+  private def fileContext(afs: String, umask: String): FileContext = {
+    val conf = new Configuration()
+    conf.set("fs.AbstractFileSystem.file.impl", afs)
+    conf.set("fs.permissions.umask-mode", umask)
+    FileContext.getFileContext(URI.create("file:///"), conf)
+  }
+
+  test("FileContext through Fs: the modes, renames and link status Hadoop's LocalFs gives") {
+    val root = Scratch.dir("nio_fs_context")
+    for (umask <- Seq("022", "077")) {
+      val seen = Seq("org.apache.hadoop.fs.local.LocalFs", classOf[NioLocalFileSystem.Fs].getName)
+        .map { afs =>
+          val fc = fileContext(afs, umask)
+          val base = new Path(root.toUri.toString, s"${afs.split('.').last}_$umask")
+          fc.mkdir(new Path(base, "offsets"), FsPermission.getDirDefault, true)
+          val tmp = new Path(base, "offsets/.0.tmp")
+          val out = fc.create(tmp, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+          out.write(Array[Byte](1, 2, 3))
+          out.close()
+          val done = new Path(base, "offsets/0")
+          fc.rename(tmp, done, Options.Rename.OVERWRITE)
+          val j = Paths.get(base.toUri)
+          Files.createSymbolicLink(j.resolve("link"), j.resolve("offsets/0"))
+          val link = fc.getFileLinkStatus(new Path(base, "link"))
+          val plain = fc.getFileLinkStatus(done)
+          (fc.getDefaultFileSystem.getClass.getName,
+            Seq("offsets", "offsets/0").map(r => r -> mode(j.resolve(r))),
+            Files.readAllBytes(j.resolve("offsets/0")).toSeq, Files.exists(j.resolve("offsets/.0.tmp")),
+            link.isSymlink, link.getLen, plain.isSymlink, plain.getLen)
+        }
+      assert(seen.map(_._1) == Seq("org.apache.hadoop.fs.local.LocalFs",
+        classOf[NioLocalFileSystem.Fs].getName))
+      assert(seen(0).copy(_1 = "") == seen(1).copy(_1 = ""), s"umask $umask")
+      assert(seen(1)._3 == Seq[Byte](1, 2, 3) && !seen(1)._4 && !seen(1)._7 && seen(1)._8 == 3)
+    }
+  }
+
+  test("install makes Fs the FileContext filesystem unless one is set") {
+    val conf = new Configuration()
+    NioLocalFileSystem.install(conf)
+    assert(FileContext.getFileContext(URI.create("file:///"), conf).getDefaultFileSystem.getClass ==
+      classOf[NioLocalFileSystem.Fs])
+    val explicit = new Configuration()
+    explicit.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.LocalFs")
+    NioLocalFileSystem.install(explicit)
+    assert(explicit.get("fs.AbstractFileSystem.file.impl") == "org.apache.hadoop.fs.local.LocalFs")
+    val session = FileContext.getFileContext(URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    assert(session.getDefaultFileSystem.getClass == classOf[NioLocalFileSystem.Fs])
+  }
+
   test("the suite's session writes through it") {
     val f = FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
     assert(f.getClass == classOf[NioLocalFileSystem])
@@ -112,6 +163,9 @@ object NioLocalFileSystemChild {
     val spark = graft.Session.local(2)
     val cls = new Path("file:///").getFileSystem(spark.sparkContext.hadoopConfiguration).getClass
     require(cls == classOf[NioLocalFileSystem], s"file: resolves to $cls")
+    val afs = FileContext.getFileContext(URI.create("file:///"),
+      spark.sessionState.newHadoopConf()).getDefaultFileSystem.getClass
+    require(afs == classOf[NioLocalFileSystem.Fs], s"FileContext file: resolves to $afs")
     val dir = Paths.get(System.getProperty("java.io.tmpdir"), "table").toString
     TableStore.overwrite(spark.range(5).toDF(), dir)
     require(TableStore.read(spark, dir).count() == 5)

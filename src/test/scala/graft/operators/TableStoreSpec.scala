@@ -931,4 +931,80 @@ class TableStoreSpec extends SparkSpec {
     TableStore.publishVersion(spark, copied, TableStore.read(spark, multi))
     assert(parquetFiles(copied) == 4)
   }
+
+  private def versionRows(path: String, v: Long): Seq[(Long, String)] =
+    TableStore.readVersion(spark, path, Some(v)).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
+  test("every publish path writes its marker as note, @data= pointer and @base= parent") {
+    val p = scratch()
+    def marker(v: Long) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$p/_committed_v$v")), "UTF-8")
+    val stage = "d_[0-9a-f]{32}"
+    val v1 = TableStore.publishVersion(spark, p, kv(1L -> "a"), "plain")
+    val v2 = TableStore.publishVersionIf(spark, p, kv(2L -> "b"), "cas", Some(v1))
+    val v3 = TableStore.publishVersionAppend(spark, p, kv(3L -> "c"), "append")
+    val v4 = TableStore.commitStagedVersion(spark, p,
+      TableStore.stageVersionData(spark, p, kv(4L -> "d")), "staged")
+    val v5 = TableStore.publishReserved(spark, p, TableStore.reserveVersion(spark, p),
+      kv(5L -> "e"), "reserved")
+    assert(Seq(v1, v2, v3, v4, v5) == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(marker(v1) == "plain")
+    assert(marker(v2).matches(s"cas\n@data=$stage"), marker(v2))
+    assert(marker(v3).matches(s"append\n@data=$stage\n@base=$v2"), marker(v3))
+    assert(marker(v4).matches(s"staged\n@data=$stage"), marker(v4))
+    assert(marker(v5) == "reserved")
+    assert(Seq(v1, v2, v3, v4, v5).map(TableStore.versionNote(spark, p, _)) ==
+      Seq("plain", "cas", "append", "staged", "reserved").map(Some(_)))
+    assert(versionRows(p, v3) == Seq(2L -> "b", 3L -> "c"))
+    assert(versionRows(p, v4) == Seq(4L -> "d"))
+
+    // a marker written by hand in the same format reads back the same
+    val h = scratch()
+    TableStore.publishVersion(spark, h, kv(1L -> "a"), "seed")
+    val d = TableStore.stageVersionData(spark, h, kv(2L -> "b"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$h/_committed_v2"),
+      s"by hand\n@data=$d\n@base=1".getBytes("UTF-8"))
+    assert(TableStore.versionNote(spark, h, 2) == Some("by hand"))
+    assert(TableStore.versionBase(spark, h, 2) == Some(1L))
+    assert(TableStore.versionDataDirs(spark, h, 2) == Seq(s"$h/v=1", s"$h/$d"))
+    assert(versionRows(h, 2) == Seq(1L -> "a", 2L -> "b"))
+  }
+
+  test("versionDataDirs of a 3-link append chain opens each marker once") {
+    val p = scratch()
+    TableStore.publishVersion(spark, p, kv(1L -> "a"))
+    TableStore.publishVersionAppend(spark, p, kv(2L -> "b"))
+    val v = TableStore.publishVersionAppend(spark, p, kv(3L -> "c"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val impl = conf.get("fs.file.impl")
+    MarkerOpenCounter.opens.clear()
+    conf.set("fs.file.impl", classOf[MarkerOpenCounter].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val dirs = try TableStore.versionDataDirs(spark, p, v) finally {
+      conf.set("fs.file.impl", impl)
+      conf.unset("fs.file.impl.disable.cache")
+    }
+    assert(dirs.size == 3)
+    import scala.jdk.CollectionConverters._
+    val opened = MarkerOpenCounter.opens.asScala.toMap
+      .collect { case (f, n) if f.startsWith(s"file:$p/_committed_v") =>
+        f.stripPrefix(s"file:$p/") -> n.get }
+    assert(opened == Map("_committed_v1" -> 1, "_committed_v2" -> 1, "_committed_v3" -> 1))
+  }
+}
+
+/** The suite's `file:` filesystem, counting `open` calls per path. */
+class MarkerOpenCounter extends NioLocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    MarkerOpenCounter.opens.computeIfAbsent(makeQualified(f).toString,
+      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object MarkerOpenCounter {
+  val opens = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.atomic.AtomicInteger]()
 }
