@@ -43,6 +43,17 @@ object Ivm {
     */
   private[graft] val changeSign: Column = when(isInsert, lit(1L)).otherwise(lit(-1L))
 
+  /** The null-safe match of `keys` across a join: the other side's
+    * columns `expr(k)` (by default the key itself) aliased `prefix + k`,
+    * and the condition pairing each key with its alias under `<=>`.
+    * Renaming one side keeps the condition unambiguous when both sides
+    * share lineage.
+    */
+  private[graft] def prefixedKeys(keys: Seq[String], prefix: String,
+      expr: String => Column = col(_)): (Seq[Column], Column) =
+    (keys.map(k => expr(k).as(prefix + k)),
+      keys.map(k => col(k) <=> col(prefix + k)).reduce(_ && _))
+
   /** A changelog slice as its SIGNED PARTIAL aggregate — the rows a
     * log-structured aggregate view stores per tick, in the
     * [[aggregate]] column shape (`n` carries ±row counts, `sum_<c>`
@@ -78,9 +89,8 @@ object Ivm {
     // (The delta side is renamed rather than referenced through its
     // frame: view and changes often share lineage, and frame-qualified
     // refs would be ambiguous in that self-join.)
-    val deltaR = delta.select(keys.map(k => col(k).as(s"_d_$k")) ++
-      (delta.columns.toSeq diff keys).map(col): _*)
-    val cond = keys.map(k => col(k) <=> col(s"_d_$k")).reduce(_ && _)
+    val (dKeys, cond) = prefixedKeys(keys, "_d_")
+    val deltaR = delta.select(dKeys ++ (delta.columns.toSeq diff keys).map(col): _*)
     view.join(deltaR, cond, "full_outer")
       .select(keys.map(k => coalesce(col(k), col(s"_d_$k")).as(k)) ++
         Seq(checked(coalesce(col("n"), lit(0L)) + coalesce(col("_dn"), lit(0L)),
@@ -177,9 +187,8 @@ object Ivm {
             .as(s"_del_max_$c")) ++
           Seq(sum(when(col("_sign") === -1L, lit(1L)).otherwise(lit(0L)))
             .as("_n_del"))): _*)
-    val deltaR = delta.select(keys.map(k => col(k).as(s"_d_$k")) ++
-      (delta.columns.toSeq diff keys).map(col): _*)
-    val cond = keys.map(k => col(k) <=> col(s"_d_$k")).reduce(_ && _)
+    val (dKeys, cond) = prefixedKeys(keys, "_d_")
+    val deltaR = delta.select(dKeys ++ (delta.columns.toSeq diff keys).map(col): _*)
     val merged = view.join(deltaR, cond, "full_outer")
     // rescan iff the group LOST rows and either (a) a deleted value
     // sits at the stored extremum, or (b) the view never stored an
@@ -209,10 +218,8 @@ object Ivm {
       .filter(col("n") > 0)
     // keyed probe of ONLY the rescanned groups (null-safe: a null
     // group key rescans like any other)
-    val rescanKeys = merged.filter(needsRescan)
-      .select(keys.map(k => coalesce(col(k), col(s"_d_$k")).as(s"_r_$k")): _*)
-      .distinct()
-    val rescanCond = keys.map(k => col(k) <=> col(s"_r_$k")).reduce(_ && _)
+    val (rKeys, rescanCond) = prefixedKeys(keys, "_r_", k => coalesce(col(k), col(s"_d_$k")))
+    val rescanKeys = merged.filter(needsRescan).select(rKeys: _*).distinct()
     val rescanned = aggregateWithExtrema(
       newBase.join(broadcast(rescanKeys), rescanCond, "left_semi"),
       keys, sumCols, minCols, maxCols)
@@ -260,9 +267,8 @@ object Ivm {
   def applyDeltaTopK(view: DataFrame, changes: DataFrame, newBase: DataFrame,
       keys: Seq[String], valueCol: String, idCol: String, k: Int): DataFrame =
     applyDeltaTopKWith(view, changes, keys, valueCol, idCol, k) { gk =>
-      val gkR = gk.select(keys.map(kc => col(kc).as(s"_r_$kc")): _*)
-      val cond = keys.map(kc => col(kc) <=> col(s"_r_$kc")).reduce(_ && _)
-      newBase.join(broadcast(gkR), cond, "left_semi")
+      val (rKeys, cond) = prefixedKeys(keys, "_r_")
+      newBase.join(broadcast(gk.select(rKeys: _*)), cond, "left_semi")
     }
 
   /** [[applyDeltaTopK]] with the rescan's base access INVERTED: the
@@ -300,9 +306,8 @@ object Ivm {
         reverse(array_sort(collect_list(when(isInsert, pair)))).as("_ins"),
         max(when(!isInsert, pair)).as("_del_max"),
         sum(when(!isInsert, lit(1L)).otherwise(lit(0L))).as("_n_del"))
-    val deltaR = delta.select(keys.map(kc => col(kc).as(s"_d_$kc")) ++
-      (delta.columns.toSeq diff keys).map(col): _*)
-    val cond = keys.map(kc => col(kc) <=> col(s"_d_$kc")).reduce(_ && _)
+    val (dKeys, cond) = prefixedKeys(keys, "_d_")
+    val deltaR = delta.select(dKeys ++ (delta.columns.toSeq diff keys).map(col): _*)
     // rescan iff the group LOST rows and either a deleted pair sits at
     // or above the stored k-th (membership in the stored top-k), or
     // the view never stored the group (born and shrunk same tick)
@@ -332,9 +337,8 @@ object Ivm {
         "bound only if driver memory can hold that many groups")
     val touched = view.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), merged.schema)
-    val touchedKeys = touched.select(keys.map(kc => col(kc).as(s"_t_$kc")): _*)
-    val untouched = view.join(broadcast(touchedKeys),
-      keys.map(kc => col(kc) <=> col(s"_t_$kc")).reduce(_ && _), "left_anti")
+    val (tKeys, tCond) = prefixedKeys(keys, "_t_")
+    val untouched = view.join(broadcast(touched.select(tKeys: _*)), tCond, "left_anti")
       .select((keys :+ "topk").map(col): _*)
     // driver-side rows: one partition, so a published snapshot gets
     // one file for them, not one per default-parallelism slot (every
@@ -525,9 +529,8 @@ object Ivm {
     // negative _dmult on a separate row and leave a ghost behind.
     // (Delta side renamed: view and delta share base lineage, so
     // frame-qualified refs would be an ambiguous self-join.)
-    val deltaR = delta.select(viewCols.map(c => col(c).as(s"_d_$c")) :+
-      col("_dmult"): _*)
-    val cond = viewCols.map(c => col(c) <=> col(s"_d_$c")).reduce(_ && _)
+    val (dCols, cond) = prefixedKeys(viewCols, "_d_")
+    val deltaR = delta.select(dCols :+ col("_dmult"): _*)
     view.join(deltaR, cond, "full_outer")
       .select(viewCols.map(c => coalesce(col(c), col(s"_d_$c")).as(c)) :+
         checked(coalesce(col("_mult"), lit(0L)) + coalesce(col("_dmult"), lit(0L)),

@@ -27,32 +27,27 @@ object TransformDag {
 
   /** Returns every node's output, keyed by name. */
   def run(nodes: Seq[Node], sources: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val byName = nodes.map(n => n.name -> n).toMap
     require(byName.size == nodes.size, "duplicate node names")
     val shared = nodes.flatMap(_.deps).toSet
     shared.find(d => !byName.contains(d) && !sources.contains(d))
       .foreach(d => throw new IllegalArgumentException(s"unknown ref: $d"))
     val order = topoOrder(nodes).filterNot(sources.contains)
-    val inCaller = new CallerJobs(SparkSession.active.sparkContext)
+    val sc = SparkSession.active.sparkContext
     // every node starts once its dependencies are built, so independent
     // nodes (and their pinned shuffle stages) build side by side
-    val built = scala.collection.mutable.Map[String, Future[DataFrame]]() ++
-      sources.map { case (n, df) => n -> Future.successful(df) }
+    val built = scala.collection.mutable.Map[String, CallerJobs.Fork[DataFrame]]()
     order.foreach { name =>
       val node = byName(name)
-      built(name) = Future.traverse(node.deps)(d => built(d).map(d -> _)).map { ins =>
-        inCaller {
-          val out = node.build(sources ++ ins)
-          if (shared(name)) out.localCheckpoint(eager = false) else out
-        }
+      val deps = node.deps.filterNot(sources.contains).map(d => d -> built(d))
+      built(name) = CallerJobs.fork(sc, deps.map(_._2)) {
+        val out = node.build(sources ++ deps.map { case (d, f) => d -> f.result })
+        if (shared(name)) out.localCheckpoint(eager = false) else out
       }
     }
     // a failed node fails only after every other node has stopped
-    built.values.foreach(Await.ready(_, Duration.Inf))
-    built.map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
+    CallerJobs.awaitAll(order.map(built): _*)
+    sources ++ order.map(n => n -> built(n).result)
   }
 
   /** Dependency-ordered node names (for reporting / dry runs). */

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{CallerJobs, TableStore}
 import graft.parse.{BggParser, Flatten, ProcessedGame}
@@ -16,7 +16,8 @@ import graft.parse.{BggParser, Flatten, ProcessedGame}
   * (SURVEY §2.1 S1). Everything else is DataFrame algebra:
   *
   *   - unfetched = ids ∖ successes ∖ live leases, retry-capped (P8, J6)
-  *   - stale-lease cleanup by timestamp predicate (P7, I3)
+  *   - leases as an append-only claim log: expiry and release are
+  *     timestamp predicates of the selection (P7, I3), never rewrites
   *   - tracking rows appended per batch (S9, I2)
   *   - processing reads raw ∖ processed, dedups to latest per game
   *     (W1), parses each payload once and loads with the per-table
@@ -60,24 +61,46 @@ final class FetchPipeline(
   def seedIds(ids: DataFrame): Unit =
     TableStore.insertIfAbsent(spark, p("thing_ids"), ids, Seq("game_id"))
 
-  /** Work-queue selection (response_fetcher.py:49-180): clean expired
-    * leases, then ids minus successes minus live leases, with the
-    * retry-policy predicate, ordered and batch-limited.
-    */
-  def unfetchedIds(now: java.sql.Timestamp): Seq[Long] = {
-    cleanExpiredLeases(now)
-    val fetched = readOr("fetched_responses", emptyFetched)
-    val successes = fetched.filter(col("success")).select("game_id").distinct()
-    val leases = readOr("fetch_in_progress", emptyLease).select("game_id")
-    val attempts = fetched.groupBy("game_id").agg(
+  /** Per game: how often its fetch was tried and when it was last tried. */
+  private def attempts(fetched: DataFrame): DataFrame =
+    fetched.groupBy("game_id").agg(
       count(lit(1)).as("attempt_count"),
       max(col("fetch_timestamp")).as("last_attempt"))
+
+  /** Whether a claim row (`lease_timestamp`), beside its game's
+    * `last_attempt`, still holds the game at `now` (I3). A claim lives
+    * until it expires or until a tracking row at or after it lands: a
+    * batch's tracking rows carry its claim's `now`, so they release the
+    * claim, while a fetcher that crashed before landing them leaves it
+    * holding until expiry.
+    */
+  private def liveClaim(now: java.sql.Timestamp): Column =
+    col("lease_timestamp") >= lit(new java.sql.Timestamp(now.getTime - leaseExpiryMinutes * 60000L)) &&
+      (col("last_attempt").isNull || col("last_attempt") < col("lease_timestamp"))
+
+  /** The ids the claim log `fetch_in_progress` holds at `now`. */
+  def liveLeases(now: java.sql.Timestamp): DataFrame =
+    readOr("fetch_in_progress", emptyLease)
+      .join(attempts(readOr("fetched_responses", emptyFetched)), Seq("game_id"), "left")
+      .filter(liveClaim(now))
+      .select("game_id")
+
+  /** Work-queue selection (response_fetcher.py:49-180): ids minus
+    * successes minus live leases, with the retry-policy predicate,
+    * ordered and batch-limited; the batch is claimed by appending one
+    * row per id to the claim log `fetch_in_progress`.
+    */
+  def unfetchedIds(now: java.sql.Timestamp): Seq[Long] = {
+    val fetched = readOr("fetched_responses", emptyFetched)
+    val successes = fetched.filter(col("success")).select("game_id").distinct()
+    val claims = readOr("fetch_in_progress", emptyLease)
+      .select(col("game_id").as("claim_id"), col("lease_timestamp"))
     val retryCut = new java.sql.Timestamp(
       now.getTime - retryAfterMinutes * 60000L)
     val candidates = thingIds.select("game_id")
       .join(successes, Seq("game_id"), "left_anti")
-      .join(leases, Seq("game_id"), "left_anti")
-      .join(attempts, Seq("game_id"), "left")
+      .join(attempts(fetched), Seq("game_id"), "left")
+      .join(claims, col("game_id") === col("claim_id") && liveClaim(now), "left_anti")
       .filter(col("attempt_count").isNull ||
         (col("attempt_count") < maxAttempts && col("last_attempt") <= lit(retryCut)))
       .orderBy("game_id")
@@ -89,17 +112,9 @@ final class FetchPipeline(
     ids
   }
 
-  /** I3: leases older than the expiry are reclaimable. */
-  def cleanExpiredLeases(now: java.sql.Timestamp): Unit =
-    if (TableStore.exists(spark, p("fetch_in_progress"))) {
-      val cut = new java.sql.Timestamp(now.getTime - leaseExpiryMinutes * 60000L)
-      val live = TableStore.read(spark, p("fetch_in_progress"))
-        .filter(col("lease_timestamp") >= lit(cut))
-      TableStore.rewrite(spark, p("fetch_in_progress"), live)
-    }
-
   /** One fetch batch: claim → chunked external fetch → land raw +
-    * tracking rows → release leases. Returns fetched count.
+    * tracking rows, whose timestamp releases the claim. Returns
+    * fetched count.
     */
   def fetchBatch(now: java.sql.Timestamp): Int = {
     val ids = unfetchedIds(now)
@@ -112,11 +127,6 @@ final class FetchPipeline(
     val tracking = results.map(r => (r.gameId, now, r.success))
       .toDF("game_id", "fetch_timestamp", "success")
     TableStore.append(tracking, p("fetched_responses"))
-    // release this batch's leases
-    val done = results.map(_.gameId).toDF("game_id")
-    val remaining = TableStore.read(spark, p("fetch_in_progress"))
-      .join(done, Seq("game_id"), "left_anti")
-    TableStore.rewrite(spark, p("fetch_in_progress"), remaining)
     results.count(_.success)
   }
 
@@ -171,23 +181,16 @@ final class FetchPipeline(
     * description, so its jobs are attributed to this batch.
     */
   private def loadTables(games: org.apache.spark.sql.Dataset[ProcessedGame]): Int = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val tables = Flatten.toTables(games)
     val n = tables("games").count()
     if (n == 0) return 0
-    val inCaller = new CallerJobs(spark.sparkContext)
-    def write(body: => Unit): Future[Unit] = Future(inCaller(body))
-    val idempotent = Flatten.EntityKinds.flatMap { case (kind, idCol) =>
+    CallerJobs.all(spark.sparkContext)(Flatten.EntityKinds.flatMap { case (kind, idCol) =>
       Seq(
-        write(TableStore.insertIfAbsent(spark, p(s"core/$kind"), tables(kind), Seq(idCol))),
-        write(TableStore.deleteInsert(spark, p(s"core/game_$kind"), tables(s"game_$kind"),
-          Seq("game_id"))))
+        () => TableStore.insertIfAbsent(spark, p(s"core/$kind"), tables(kind), Seq(idCol)),
+        () => TableStore.deleteInsert(spark, p(s"core/game_$kind"), tables(s"game_$kind"),
+          Seq("game_id")))
     } ++ Seq("alternate_names", "player_counts", "language_dependence", "suggested_ages")
-      .map(t => write(TableStore.deleteInsert(spark, p(s"core/$t"), tables(t), Seq("game_id"))))
-    idempotent.foreach(Await.ready(_, Duration.Inf))
-    idempotent.foreach(Await.result(_, Duration.Inf))
+      .map(t => () => TableStore.deleteInsert(spark, p(s"core/$t"), tables(t), Seq("game_id"))): _*)
     Seq("games", "rankings").foreach { t =>
       TableStore.append(tables(t), p(s"core/$t"))
     }

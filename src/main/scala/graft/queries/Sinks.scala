@@ -292,9 +292,12 @@ object Sinks {
     // ---------------------------------------------------------------
     // I4 — JOIN-view IVM: the bilinear delta rule Δ(A⋈B) = ΔA⋈B_old
     // ∪ A_old⋈ΔB ∪ ΔA⋈ΔB with signs multiplying in the cross term,
-    // over a multiplicity-annotated view (Ivm.joinView /
-    // applyJoinDelta). BOTH sides take an adversarial edit script —
-    // deletes, in-place updates, inserts — including overlapping
+    // over a multiplicity-annotated view. The view and both bases are
+    // signed fold tables (JoinViewMaintenance.init), and one
+    // JoinViewMaintenance.applyTick stages the view delta
+    // (Ivm.joinViewDelta) and the signed base deltas, then commits
+    // them as fold-delta versions. BOTH sides take an adversarial edit
+    // script — deletes, in-place updates, inserts — including overlapping
     // orderkeys so the ΔA⋈ΔB term genuinely fires (an updated order
     // meeting its own updated lines re-derives through all three
     // terms and the signs must cancel to exactly one derivation).
@@ -329,11 +332,9 @@ object Sinks {
          |  ${dsumSql("o_totalprice")} AS sum_price
          |FROM a2 JOIN b2 USING (o_orderkey)
          |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
+      import graft.operators.CallerJobs
       import graft.streaming.JoinViewMaintenance
       import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val pathA = Scratch.table("i4_a")
       val pathB = Scratch.table("i4_b")
       val foldA = Scratch.table("i4_fa")
@@ -368,7 +369,7 @@ object Sinks {
       val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", parts.toString)
       // session-global conf: restore MUST survive a failure in any of
-      // the Awaits / applyTick below, or the volume-derived count
+      // the init, diffs or applyTick below, or the volume-derived count
       // leaks into every later query of a shared bench session
       try {
       // three independent pipelines overlap: the A version chain, the
@@ -382,13 +383,13 @@ object Sinks {
       // without the checkpoint the full-outer diff join would
       // recompute per consumer. Both diffs and the fold-state init
       // overlap on separate threads.
-      val fA = Future {
+      val fA = CallerJobs.fork(s.sparkContext) {
         val v1 = TableStore.publishVersion(s, pathA, a, note = "base")
         val v2 = TableStore.publishVersion(s, pathA, editedA, note = "edit")
         TableStore.changesBetween(s, pathA, v1, v2, Seq("o_orderkey"))
           .localCheckpoint()
       }
-      val fB = Future {
+      val fB = CallerJobs.fork(s.sparkContext) {
         val v1 = TableStore.publishVersion(s, pathB, b, note = "base")
         val v2 = TableStore.publishVersion(s, pathB, editedB, note = "edit")
         TableStore.changesBetween(s, pathB, v1, v2,
@@ -396,11 +397,10 @@ object Sinks {
       }
       // a is PK-keyed (o_orderkey), b is a groupBy product — one row
       // per tuple each, so init skips the canonicalizing shuffle
-      val fInit = Future(JoinViewMaintenance.init(s, viewPath,
+      val fInit = CallerJobs.fork(s.sparkContext)(JoinViewMaintenance.init(s, viewPath,
         foldA, foldB, a, b, Seq("o_orderkey"), inputsDistinct = true))
-      val dA = Await.result(fA, Duration.Inf)
-      val dB = Await.result(fB, Duration.Inf)
-      Await.result(fInit, Duration.Inf)
+      CallerJobs.awaitAll(fA, fB, fInit)
+      val (dA, dB) = (fA.result, fB.result)
       // the changelogs come from the store's own snapshot diff (the
       // CDC story this query exists to prove), then ONE maintenance
       // tick runs through JoinViewMaintenance.applyTick — the SAME

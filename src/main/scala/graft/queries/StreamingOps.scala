@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.{QueryProfile, Scratch}
+import graft.operators.CallerJobs
 import graft.functions.XSql
 import graft.functions.XSql.{Dialect, Spark => SqlSpark, Duck => SqlDuck}
 import graft.streaming.{EventStream, JoinViewMaintenance}
@@ -203,10 +204,12 @@ object StreamingOps {
     // Streaming JOIN-view IVM — i4's bilinear delta rule running as a
     // CONTINUOUS maintenance loop: one changelog stream carries both
     // sides' changes (tagged `_side`), and each micro-batch (1) splits
-    // its slice into ΔA/ΔB, (2) folds Δ(A⋈B) into the stored view
-    // with Ivm.applyJoinDelta against the CURRENT base states, then
-    // (3) advances the stored base tables by the same slice — so the
-    // next tick's "old" states are exactly right. The tick-split
+    // its slice into ΔA/ΔB, then (2) runs JoinViewMaintenance.applyTick:
+    // it stages Δ(A⋈B) (Ivm.joinViewDelta against the CURRENT base
+    // states) and the slice's signed base deltas side by side, and
+    // commits them as fold-delta versions of the view and the bases,
+    // in that order — so the next tick's "old" states are exactly
+    // right. The tick-split
     // associativity IvmJoinSpec proves is what makes the arbitrary
     // stage-file decomposition safe: an update's preimage and
     // postimage may land in different ticks and the view is
@@ -214,8 +217,8 @@ object StreamingOps {
     // bit-exact recompute (the oracle). At scale this is a CDC feed
     // (Debezium/CDF) maintaining a denormalized join table with
     // O(batch) work per tick — the deltas broadcast into one keyed
-    // probe of each base, and the base advance is the same
-    // upsert/delete merge every lakehouse MERGE runs.
+    // probe of each base, and the base advance appends one signed
+    // delta to each base's fold chain.
     Q("st15_stream_join_ivm",
       "changelog stream maintains a JOIN view across micro-batches == bit-exact recompute",
       s"""WITH a2 AS (
@@ -285,15 +288,12 @@ object StreamingOps {
       // other's outputs, so they overlap on separate threads (the
       // stream itself starts after BOTH complete, preserving the WAL
       // ordering); on local[32] this hides the shorter phase entirely
-      val fInit = {
-        import scala.concurrent.Future
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Future(QueryProfile.span("init")(JoinViewMaintenance.init(s, viewPath,
-          basePathA, basePathB, a, b, Seq("o_orderkey"),
+      val fInit = CallerJobs.fork(s.sparkContext)(QueryProfile.span("init")(
+        JoinViewMaintenance.init(s, viewPath, basePathA, basePathB, a, b,
+          Seq("o_orderkey"),
           // a is PK-keyed (o_orderkey), b is a groupBy product —
           // both one row per tuple, so v0 skips the canonical shuffle
           inputsDistinct = true)))
-      }
       // one combined changelog, emitted DIRECTLY from the edit script
       // the way a CDC producer emits changes (i4 pays the snapshot-
       // diff algorithm for its storage story; a changelog source
@@ -343,11 +343,11 @@ object StreamingOps {
           lit(null).cast("long").as("o_custkey"),
           lit(null).cast("double").as("o_totalprice"),
           col("l_linenumber"), col("l_extendedprice"))
-      val stream = QueryProfile.span("diff-stage")(
+      val fStream = CallerJobs.fork(s.sparkContext)(QueryProfile.span("diff-stage")(
         EventStream.stagedFileStream(s, dA.unionByName(dB),
-          tmp.resolve("stage").toString, nFiles = EventStream.ticks(3)))
-      scala.concurrent.Await.result(fInit,
-        scala.concurrent.duration.Duration.Inf)
+          tmp.resolve("stage").toString, nFiles = EventStream.ticks(3))))
+      CallerJobs.awaitAll(fInit, fStream)
+      val stream = fStream.result
       s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       // compaction checkpoints run BEHIND the stream (drained before
       // the next tick's commits and before the final read below) —
@@ -1143,28 +1143,20 @@ object StreamingOps {
         tmp.resolve("stage").toString, nFiles = EventStream.ticks(3))
       EventStream.runForeachBatch(s, stream,
         Some(tmp.resolve("ckpt").toString)) { (slice, bid) =>
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
         val sl = slice.localCheckpoint()
         // the base delta and the view advance touch DISJOINT stores —
         // publish both in parallel (the tick commits when both notes
         // land; either alone redelivers idempotently via its guard)
-        Seq(
-          Future {
-            if (JoinViewMaintenance.tickVersion(s, basePath, bid).isEmpty)
-              TableStore.publishFoldDelta(s, basePath,
-                sl.withColumn("_mult", lit(1L)), s"tick=$bid"): Unit
-          },
-          Future {
-            if (JoinViewMaintenance.tickVersion(s, viewPath, bid).isEmpty)
-              TableStore.publishVersion(s, viewPath,
-                Ivm.applyDelta(TableStore.readVersion(s, viewPath),
-                  sl.withColumn("_change_type", lit("insert")),
-                  Seq("o_custkey"), Seq("o_totalprice")),
-                note = s"tick=$bid"): Unit
-          }
-        ).foreach(Await.result(_, Duration.Inf))
+        CallerJobs.all(s.sparkContext)(
+          () => if (JoinViewMaintenance.tickVersion(s, basePath, bid).isEmpty)
+            TableStore.publishFoldDelta(s, basePath,
+              sl.withColumn("_mult", lit(1L)), s"tick=$bid"): Unit,
+          () => if (JoinViewMaintenance.tickVersion(s, viewPath, bid).isEmpty)
+            TableStore.publishVersion(s, viewPath,
+              Ivm.applyDelta(TableStore.readVersion(s, viewPath),
+                sl.withColumn("_change_type", lit("insert")),
+                Seq("o_custkey"), Seq("o_totalprice")),
+              note = s"tick=$bid"): Unit)
       }
       // compaction: the base chain folded into one queryable snapshot
       val compactV = TableStore.publishFoldSnapshot(s, basePath,

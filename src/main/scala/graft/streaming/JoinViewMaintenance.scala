@@ -105,9 +105,6 @@ object JoinViewMaintenance {
   def init(spark: SparkSession, viewPath: String, aPath: String,
       bPath: String, a: DataFrame, b: DataFrame, keys: Seq[String],
       inputsDistinct: Boolean = false): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // canonical snapshots: duplicate base rows fold to one weighted
     // row here, so every later read sees the same representation.
     // The three v0 publishes are independent writes — run in parallel
@@ -124,13 +121,11 @@ object JoinViewMaintenance {
           clusterBy = keys)
       else TableStore.publishFoldSnapshot(spark, p, df, note(InitTick),
         clusterBy = keys)
-    val inCaller = new CallerJobs(spark.sparkContext)
-    Seq(
-      Future(inCaller(pubBase(aPath, a))),
-      Future(inCaller(pubBase(bPath, b))),
-      Future(inCaller(TableStore.publishFoldSnapshotCanonical(spark, viewPath,
-        Ivm.joinView(a, b, keys), note(InitTick))))
-    ).foreach(Await.result(_, Duration.Inf))
+    CallerJobs.all(spark.sparkContext)(
+      () => pubBase(aPath, a),
+      () => pubBase(bPath, b),
+      () => TableStore.publishFoldSnapshotCanonical(spark, viewPath,
+        Ivm.joinView(a, b, keys), note(InitTick)))
   }
 
   /** A changelog slice as the signed fold-delta rows its base table
@@ -193,23 +188,22 @@ object JoinViewMaintenance {
     * still-unwritten checkpoint was meant to anchor.
     */
   final class AsyncCompactor {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    private[this] var pending: Option[Future[Unit]] = None
+    private[this] var pending: Option[CallerJobs.Fork[Unit]] = None
     private[this] var followUp: () => Unit = () => ()
     def drain(): Unit = synchronized {
       val p = pending
       val f = followUp
       pending = None
       followUp = () => ()
-      p.foreach(Await.result(_, Duration.Inf)) // throws here at most once
+      p.foreach(_.result) // throws here at most once
       f()
     }
-    private[streaming] def submit(body: => Unit)(andThen: => Unit): Unit =
+    /** Drains, then starts `start` (a [[CallerJobs.fork]] of the
+      * checkpoint body) as the one rewrite in flight. */
+    private[streaming] def submit(start: => CallerJobs.Fork[Unit])(andThen: => Unit): Unit =
       synchronized {
         drain()
-        pending = Some(Future(body)(
-          scala.concurrent.ExecutionContext.global))
+        pending = Some(start)
         followUp = () => andThen
       }
   }
@@ -239,9 +233,6 @@ object JoinViewMaintenance {
       checkpointPaths: Seq[String], retainPaths: Seq[String],
       batchId: Long, compactor: Option[AsyncCompactor],
       clusterBy: Map[String, Seq[String]] = Map.empty): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // Pins are taken sequentially; a failure after the first must give
     // the already-taken slots back (cancelReservation stops their
     // heartbeats and deletes the claims) or they beat forever in this
@@ -263,21 +254,18 @@ object JoinViewMaintenance {
       taken += ((p, at, TableStore.reserveVersionAfter(spark, p, at)))
     } catch { case e: Throwable => cancelTaken(); throw e }
     val pins = taken.toSeq
-    // captured here, on the caller's thread: checkpointAll may run on
-    // the compactor's background thread, whose properties are not ours
-    val inCaller = new CallerJobs(spark.sparkContext)
+    val sc = spark.sparkContext
     def checkpointAll(): Unit = {
-      val compacts = pins.map { case (p, at, slot) =>
+      CallerJobs.all(sc)(pins.map { case (p, at, slot) =>
         // checkpoint snapshots re-establish the keyed layout (init's
         // clustering discipline): one range exchange on a rewrite
         // that already runs OFF the critical path (AsyncCompactor)
         // keeps every later tick's probe predicate able to prune
-        Future(inCaller(TableStore.publishReserved(spark, p, slot,
+        () => TableStore.publishReserved(spark, p, slot,
           TableStore.clusterFold(TableStore.readFolded(spark, p, Some(at)),
             clusterBy.getOrElse(p, Nil)),
-          checkpointNote(batchId))))
-      }
-      compacts.foreach(Await.result(_, Duration.Inf): Unit)
+          checkpointNote(batchId))
+      }: _*)
     }
     def retainAll(): Unit =
       retainPaths.foreach { p =>
@@ -291,7 +279,9 @@ object JoinViewMaintenance {
         // submit() drains the PREVIOUS checkpoint first and rethrows
         // its failure before this tick's body is queued — this tick's
         // pins have no publish in flight yet, so give them back.
-        try c.submit(checkpointAll())(retainAll())
+        // the fork is made here, on the caller's thread, so the
+        // background rewrite's jobs carry the caller's properties
+        try c.submit(CallerJobs.fork(sc)(checkpointAll()))(retainAll())
         catch { case e: Throwable => cancelTaken(); throw e }
       case None => { checkpointAll(); retainAll() }
     }
@@ -357,13 +347,10 @@ object JoinViewMaintenance {
       batchId: Long, afterPublish: String => Unit = _ => (),
       onCost: TickCost => Unit = _ => (),
       compactor: Option[AsyncCompactor] = None): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val t0 = System.nanoTime()
-    val inCaller = new CallerJobs(spark.sparkContext)
+    val sc = spark.sparkContext
     val needView = tickVersion(spark, viewPath, batchId).isEmpty
-    val stagedView: Option[Future[String]] = if (needView) {
+    val stagedView = if (needView) {
       // bases still sit at tick B-1 here (they publish after the view).
       // `_mult` stays attached: joinViewDelta weights its base probes
       // by it, so a duplicate base row folded to one `_mult=k` row
@@ -427,23 +414,22 @@ object JoinViewMaintenance {
       val dView = Ivm.joinViewDelta(aPrev, bPrev, dA, dB, keys, viewCols,
         (statsA.rows, statsB.rows))
         .withColumnRenamed("_dmult", "_mult")
-      Some(Future(inCaller(TableStore.stageVersionData(spark, viewPath, dView))))
+      Some(CallerJobs.fork(sc)(TableStore.stageVersionData(spark, viewPath, dView)))
     } else None
     // base deltas stage CONCURRENTLY with the view compute: staging
     // writes unreferenced dirs, so the view job still reads the bases
     // at B-1 — nothing becomes visible until the markers below
-    val stagedBases: Seq[(String, Option[Future[String]])] =
-      Seq(aPath -> dA, bPath -> dB).map { case (p, d) =>
-        p -> (if (tickVersion(spark, p, batchId).isEmpty)
-          Some(Future(inCaller(TableStore.stageVersionData(spark, p, baseDelta(d)))))
-        else None)
-      }
+    val stagedBases = Seq(aPath -> dA, bPath -> dB).map { case (p, d) =>
+      p -> (if (tickVersion(spark, p, batchId).isEmpty)
+        Some(CallerJobs.fork(sc)(TableStore.stageVersionData(spark, p, baseDelta(d))))
+      else None)
+    }
     // all staging complete BEFORE the commit phase: the drain below
     // may run a prior checkpoint's retention, which must never delete
     // files an in-flight staging scan still references
-    val viewStage = stagedView.map(Await.result(_, Duration.Inf))
-    val baseStages = stagedBases.map { case (p, st) =>
-      p -> st.map(Await.result(_, Duration.Inf)) }
+    CallerJobs.awaitAll(stagedView.toSeq ++ stagedBases.flatMap(_._2): _*)
+    val viewStage = stagedView.map(_.result)
+    val baseStages = stagedBases.map { case (p, st) => p -> st.map(_.result) }
     // no drain here: a still-running background checkpoint holds a
     // RESERVED version slot below this tick's commits and a fold
     // input pinned at its own tick, so committing these markers above
@@ -509,18 +495,15 @@ object JoinViewMaintenance {
       idCol: String, k: Int, compactEvery: Int = 0,
       compactor: Option[AsyncCompactor] = None,
       afterPublish: String => Unit = _ => ()): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val inCaller = new CallerJobs(spark.sparkContext)
+    val sc = spark.sparkContext
     val signed = baseDelta(slice)
     val needBase = tickVersion(spark, basePath, batchId).isEmpty
-    // staging writes an unreferenced dir: the view compute below still
-    // reads the base chain at B-1 until the marker lands
+    // staging writes an unreferenced dir: the view compute beside it
+    // still reads the base chain at B-1 until the marker lands
     val stagedBase = if (needBase)
-      Some(Future(inCaller(TableStore.stageVersionData(spark, basePath, signed))))
+      Some(CallerJobs.fork(sc)(TableStore.stageVersionData(spark, basePath, signed)))
     else None
-    val viewStage = if (tickVersion(spark, viewPath, batchId).isEmpty) {
+    val stagedView = if (tickVersion(spark, viewPath, batchId).isEmpty) Some(CallerJobs.fork(sc) {
       // The rescan's base access goes through applyDeltaTopKWith so
       // the group restriction lands BELOW the fold: the old shape
       // (readFolded(basePath) up front) paid a full-state groupBy
@@ -538,9 +521,8 @@ object JoinViewMaintenance {
         val chain = if (needBase)
           TableStore.FoldChain(committed.rows.unionByName(signed), committed.links + 1)
           else committed
-        val gkR = gk.select(keys.map(kc => col(kc).as(s"_g_$kc")): _*)
-        val cond = keys.map(kc => col(kc) <=> col(s"_g_$kc")).reduce(_ && _)
-        chain.copy(rows = chain.rows.join(broadcast(gkR), cond, "left_semi"))
+        val (gKeys, cond) = Ivm.prefixedKeys(keys, "_g_")
+        chain.copy(rows = chain.rows.join(broadcast(gk.select(gKeys: _*)), cond, "left_semi"))
           .folded.drop("_mult")
       }
       // a distinct snapshot (publishFoldSnapshotDistinct's shape):
@@ -552,15 +534,16 @@ object JoinViewMaintenance {
       val next = Ivm.applyDeltaTopKWith(
         TableStore.readFolded(spark, viewPath).drop("_mult"),
         slice, keys, valueCol, idCol, k)(postTickBase)
-      Some(TableStore.stageVersionData(spark, viewPath,
-        next.withColumn("_mult", lit(1L))))
-    } else None
+      TableStore.stageVersionData(spark, viewPath,
+        next.withColumn("_mult", lit(1L)))
+    }) else None
+    CallerJobs.awaitAll(stagedBase.toSeq ++ stagedView: _*)
     // ONE commit point per table, markers in WAL order base → view
-    stagedBase.map(Await.result(_, Duration.Inf)).foreach(st =>
+    stagedBase.map(_.result).foreach(st =>
       TableStore.commitStagedVersion(spark, basePath, st,
         TableStore.FoldDeltaPrefix + note(batchId)): Unit)
     afterPublish(basePath)
-    viewStage.foreach(st =>
+    stagedView.map(_.result).foreach(st =>
       TableStore.commitStagedVersion(spark, viewPath, st, note(batchId)): Unit)
     afterPublish(viewPath)
     // bound the BASE fold chain: without a checkpoint every tick's

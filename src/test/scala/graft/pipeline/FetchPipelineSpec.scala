@@ -80,21 +80,45 @@ class FetchPipelineSpec extends SparkSpec {
       ids.filterNot(dropped.contains)
         .map(id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true))
     }, batchSize = 10, chunkSize = 10)
-    def leases() = TestSpark.spark.read.parquet(s"$root/fetch_in_progress")
-      .select("game_id").as[Long].collect().toSet
+    def leases(now: String) = pipe.liveLeases(ts(now)).as[Long].collect().toSet
     pipe.seedIds(Seq(61L, 62L, 63L).toDF("game_id"))
     // the fetcher leaves 62 out: no tracking row, and its lease stays
     assert(pipe.fetchBatch(ts("2026-01-01 00:00:00")) == 2)
-    assert(leases() == Set(62L))
+    assert(leases("2026-01-01 00:00:00") == Set(62L))
     dropped = None
     // 10 minutes on the lease is live: nothing to claim, no fetch
     assert(pipe.fetchBatch(ts("2026-01-01 00:10:00")) == 0)
     assert(claims == Seq(Seq(61L, 62L, 63L)))
-    assert(leases() == Set(62L))
+    assert(leases("2026-01-01 00:10:00") == Set(62L))
     // past the expiry the lease is cleaned and 62 is claimed again
     assert(pipe.fetchBatch(ts("2026-01-01 00:31:00")) == 1)
     assert(claims.last == Seq(62L))
-    assert(leases().isEmpty)
+    assert(leases("2026-01-01 00:31:00").isEmpty)
+    Scratch.remove(new java.io.File(root))
+  }
+
+  test("claims append to the claim log: no batch rewrites fetch_in_progress") {
+    import TestSpark.spark.implicits._
+    val root = Scratch.dir("pipe").toString
+    val pipe = new FetchPipeline(TestSpark.spark, root,
+      ids => ids.map(id => FetchPipeline.Fetched(id, gameJson(id, s"G$id"), success = true)),
+      batchSize = 2, chunkSize = 2)
+    val log = new java.io.File(s"$root/fetch_in_progress")
+    def files() = log.listFiles().filter(_.getName.startsWith("part-"))
+      .map(f => f.getName -> f.lastModified()).toSet
+    def claimRows() = TestSpark.spark.read.parquet(log.toString)
+      .as[(Long, java.sql.Timestamp)].collect().toSet
+    pipe.seedIds(Seq(71L, 72L, 73L).toDF("game_id"))
+    val t0 = ts("2026-01-01 00:00:00")
+    assert(pipe.fetchBatch(t0) == 2)
+    val first = files()
+    val t1 = ts("2026-01-01 00:05:00")
+    assert(pipe.fetchBatch(t1) == 1)
+    // the second batch added its claim beside the first batch's files,
+    // which are still there, untouched: the dir was never swapped
+    assert(first.subsetOf(files()))
+    assert(!new java.io.File(s"$root/fetch_in_progress__old").exists())
+    assert(claimRows() == Set((71L, t0), (72L, t0), (73L, t1)))
     Scratch.remove(new java.io.File(root))
   }
 
